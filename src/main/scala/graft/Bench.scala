@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 object Bench {
 
   /** Canary threshold (seconds): the suite's JVM is BISTABLE (SURVEY
@@ -35,6 +36,29 @@ object Bench {
     * 0.45-0.52 s damaged across the round-14 bisection runs). */
   val CanaryQuery = "mm_resize_plan"
 
+  /** Same-window DuckDB sentinel: per-key DuckDB minima over the keys
+    * both engines measured, and each engine's sum over those keys. */
+  private final case class Sentinel(duckdb: Seq[(String, Double)],
+                                    sparkSec: Double, duckdbSec: Double) {
+    def ratio: Double = sparkSec / duckdbSec
+  }
+
+  /** 3-decimal fixed-point, written by Jackson exactly as formatted. */
+  private def f3(v: Double): java.math.BigDecimal =
+    new java.math.BigDecimal("%.3f".formatLocal(java.util.Locale.ROOT, v))
+
+  /** `o.key` = {name: 3-decimal seconds}, in the given order. */
+  private def putF3(o: ObjectNode, key: String,
+                    kvs: Iterable[(String, Double)]): Unit = {
+    val m = o.putObject(key)
+    kvs.foreach { case (k, v) => m.put(k, f3(v)) }
+  }
+
+  private def putStrings(o: ObjectNode, key: String, xs: Iterable[String]): Unit = {
+    val a = o.putArray(key)
+    xs.foreach(x => a.add(x))
+  }
+
   /** Relaunches this main in a FRESH JVM (same args, same classpath):
     * the bistable damage is per-JVM and not repairable in-process, so a
     * damaged canary read means the only fix is a new start roll.
@@ -61,13 +85,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // BEFORE the first action: the global codegen class cache sizes
-    // itself on first class-load (see GraftSession.pinCodegenCache)
-    GraftSession.pinCodegenCache(spark)
+    val spark = GraftSession.get(defaultCpus = 32)
+    val om = new ObjectMapper()
     // warm codegen/scheduler/parquet-reader paths so the first measured
     // query is not charged for session startup (~5 s otherwise)
     try {
@@ -119,6 +138,9 @@ object Bench {
         pool.shutdownNow()
         pool.awaitTermination(2, java.util.concurrent.TimeUnit.MINUTES)
       }
+      // the warmup's sf0.001 replays recorded their batch stats too;
+      // the artifact's stream_batches must hold measured runs only
+      graft.streaming.StreamOps.ReplayMetrics.clear()
     }
     // R full passes over the suite; per-query time = MIN across passes.
     // A single sequential pass cannot distinguish a real regression from
@@ -186,7 +208,6 @@ object Bench {
         if (rrs.nonEmpty) times(name) = keep ++ rrs
       }
     }
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val results = selected.map { case (name, _) =>
       val ts = times(name)
       val steady = if (repeats >= 2) ts.filter(_._1 >= 2) else ts
@@ -229,7 +250,6 @@ object Bench {
     val sentinel: Option[Map[String, Double]] =
       if (only.nonEmpty || sys.env.get("SPARK_GRAFT_NO_SENTINEL").contains("1")) None
       else try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val spec = om.createObjectNode()
         spec.put("sf", sfDir)
         val tn = spec.putArray("tables")
@@ -275,22 +295,16 @@ object Bench {
       }
     // ratio over the sentinel keys measured by BOTH engines in this
     // window: same phase on both sides by construction
-    val sentinelPair: Option[(String, Double)] =
+    val sentinelPair: Option[Sentinel] =
       sentinel.filter(_.nonEmpty).flatMap { m =>
         val sparkSide = sentinelKeys.flatMap(k => results.collectFirst {
           case (`k`, v, _, _) if v >= 0 => k -> v })
         val common = sparkSide.filter { case (k, _) => m.contains(k) }
         if (common.isEmpty) None else {
-          val sSum = common.map(_._2).sum
-          val dSum = common.map { case (k, _) => m(k) }.sum
-          val qs = common.map { case (k, _) => "\"" + k + "\":" + f3(m(k)) }
-            .mkString("{", ",", "}")
-          Some((s""","sentinel_duckdb":$qs,"sentinel_spark_sec":${f3(sSum)},""" +
-            s""""sentinel_duckdb_sec":${f3(dSum)},"same_window_ratio":${f3(sSum / dSum)}""",
-            sSum / dSum))
+          val duck = common.map { case (k, _) => k -> m(k) }
+          Some(Sentinel(duck, common.map(_._2).sum, duck.map(_._2).sum))
         }
       }
-    val sentinelJson = sentinelPair.map(_._1).getOrElse("")
     // The sentinel ratio is itself a damage gate: the r19 re-bless
     // caught a window whose canary read 0.175 (inside the 0.25 gate)
     // while every query carried a flat ~+0.1 s tax (total 47.9 s vs
@@ -301,7 +315,7 @@ object Bench {
     // env-tunable); absent sentinel (no python3/duckdb) degrades to
     // the canary-only gate.
     val swrMax = sys.env.getOrElse("SPARK_GRAFT_SWR_MAX", "2.2").toDouble
-    val swrBad = sentinelPair.exists(_._2 > swrMax)
+    val swrBad = sentinelPair.exists(_.ratio > swrMax)
     val canaryBad = canary > CanaryThresholdSec
     // Re-roll budget: 2 of the last 3 driver rounds burned all 3
     // attempts back-to-back inside the SAME slow host phase (phases
@@ -315,7 +329,7 @@ object Bench {
         System.err.println(f"[bench] canary $CanaryQuery read $canary%.3f s (> " +
           f"$CanaryThresholdSec%.2f): damaged JVM window, attempt $attempt — re-rolling")
       else
-        System.err.println(f"[bench] sentinel ratio ${sentinelPair.get._2}%.3f > " +
+        System.err.println(f"[bench] sentinel ratio ${sentinelPair.get.ratio}%.3f > " +
           f"$swrMax%.2f with canary $canary%.3f s: slow-phase window the canary " +
           f"missed, attempt $attempt — re-rolling")
       if (attempt >= 2) {
@@ -339,31 +353,11 @@ object Bench {
     // still publishes — the driver needs an artifact every round, and
     // the damaged flag is the honest label on it.
     val damaged = only.isEmpty && (canaryBad || swrBad)
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // spread = max-min across steady-state passes: a large spread flags a
-    // measurement the driver should distrust before calling it a regression
-    val sp = results.map { case (k, _, s, _) => "\"" + k + "\":" + f3(s) }
-      .mkString("{", ",", "}")
-    val warmupOnly = results.collect { case (k, _, _, true) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
     val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    val errJson = errors.map(e => "\"" + e + "\"").mkString("[", ",", "]")
-    val requeuedJson = requeued.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    val preminJson = requeued.map(n => "\"" + n + "\":" + f3(premin(n)))
-      .mkString("{", ",", "}")
     // FULL artifact (spread map included) goes to disk: stdout between
     // here and the driver's BENCH_r* capture gets tail-truncated (round
     // 6 lost the minima; round 10's capture cut the first 14 query
     // entries out of the single long line and json-parsed to null)
-    // per-micro-batch latency of the streaming replays (serving
-    // contract: batch latency, not drain throughput), keyed by harness
-    // run name — recorded by StreamOps.ReplayMetrics on the LAST run
-    val sb = graft.streaming.StreamOps.ReplayMetrics.snapshot.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        "\"" + k + "\":{\"n\":" + v.n + ",\"p50_ms\":" + v.p50Ms +
-          ",\"p95_ms\":" + v.p95Ms + ",\"max_ms\":" + v.maxMs + "}"
-      }.mkString("{", ",", "}")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
     // A window published past the re-roll budget must never be COMPARED
     // as if it were a fast-state window: when this run is damaged, the
@@ -372,13 +366,12 @@ object Bench {
     // write — or ITS carried ref, so a chain of damaged runs still
     // points at the last real blessing) and downstream readers
     // (tools/survey_counts.py, round-over-round deltas) read that one.
-    val blessedRef: Option[String] =
+    val blessedRef: Option[JsonNode] =
       if (!damaged) None
       else try {
         val p = java.nio.file.Paths.get(outFile)
         if (!java.nio.file.Files.isRegularFile(p)) None
         else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
           val prev = om.readTree(java.nio.file.Files.readString(p))
           val src =
             if (!prev.path("damaged").asBoolean(false)) Some(prev)
@@ -390,16 +383,43 @@ object Bench {
             // (mixed-provenance headline, r17 advice)
             Seq("canary", "canary_attempts", "value", "sf", "repeats",
                 "queries").foreach { k =>
-              if (n.has(k)) keep.set[com.fasterxml.jackson.databind.JsonNode](k, n.get(k))
+              if (n.has(k)) keep.set[JsonNode](k, n.get(k))
             }
-            om.writeValueAsString(keep)
+            keep
           }
         }
       } catch { case _: Throwable => None }
-    val blessedJson = blessedRef.map(r => s""","blessed_ref":$r""").getOrElse("")
-    val full = s"""{"metric":"total","unit":"sec","repeats":$repeats,"sf":"$sfDir","canary":${f3(canary)},"canary_attempts":$attempt,"damaged":$damaged$blessedJson$sentinelJson,"spread":$sp,"errors":$errJson,"warmup_only":$warmupOnly,"requeued":$requeuedJson,"requeued_premin":$preminJson,"stream_batches":$sb,"queries":$qs,"value":${f3(total)}}"""
+    val full = om.createObjectNode()
+      .put("metric", "total").put("unit", "sec").put("repeats", repeats)
+      .put("sf", sfDir).put("canary", f3(canary))
+      .put("canary_attempts", attempt).put("damaged", damaged)
+    blessedRef.foreach(full.set[JsonNode]("blessed_ref", _))
+    sentinelPair.foreach { sp =>
+      putF3(full, "sentinel_duckdb", sp.duckdb)
+      full.put("sentinel_spark_sec", f3(sp.sparkSec))
+        .put("sentinel_duckdb_sec", f3(sp.duckdbSec))
+        .put("same_window_ratio", f3(sp.ratio))
+    }
+    // spread = max-min across steady-state passes: a large spread flags a
+    // measurement to distrust before calling it a regression
+    putF3(full, "spread", results.map { case (k, _, sp, _) => k -> sp })
+    putStrings(full, "errors", errors)
+    putStrings(full, "warmup_only", results.collect { case (k, _, _, true) => k })
+    putStrings(full, "requeued", requeued)
+    putF3(full, "requeued_premin", requeued.map(n => n -> premin(n)))
+    // per-micro-batch latency of the streaming replays (serving
+    // contract: batch latency, not drain throughput), keyed by harness
+    // run name — recorded by StreamOps.ReplayMetrics on the LAST run
+    val batches = full.putObject("stream_batches")
+    graft.streaming.StreamOps.ReplayMetrics.snapshot.toSeq.sortBy(_._1)
+      .foreach { case (k, v) =>
+        batches.putObject(k).put("n", v.n).put("p50_ms", v.p50Ms)
+          .put("p95_ms", v.p95Ms).put("max_ms", v.maxMs)
+      }
+    putF3(full, "queries", results.map { case (k, v, _, _) => k -> v })
+    full.put("value", f3(total))
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (full + "\n").getBytes("UTF-8"))
+      (om.writeValueAsString(full) + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outFile: $e") }
     // stdout gets ONE COMPACT line that must fit the driver's bounded
     // tail capture (2000 chars) NET of sbt's own trailer: sbt prints
@@ -412,23 +432,25 @@ object Bench {
     // same order the disk artifact's "queries" map lists), and the
     // budget is 1800 chars. Everything else (names, spread, requeue
     // diagnostics, the 3-decimal map) lives in the artifact at "full".
-    val qms = results.map { case (_, v, _, _) =>
-      if (v < 0) "-1" else math.round(v * 1000).toString
-    }.mkString("[", ",", "]")
-    // error DETAILS are bounded (first 2) so a broken run cannot push
-    // the line back over the capture window; the count is always exact
-    val errHead = errors.take(2).map(e => "\"" + e + "\"").mkString("[", ",", "]")
-    // the same-window ratio rides the compact stdout line too (short —
-    // one number), so the driver's capture carries it even if the full
-    // artifact is not read
-    val swrShort = sentinelJson match {
-      case s if s.contains("same_window_ratio") =>
-        "," + s.substring(s.indexOf("\"same_window_ratio\""))
-      case _ => ""
-    }
     def line(withQueries: Boolean): String = {
-      val q = if (withQueries) s""","enc":"qms=ms, sorted-name order","qms":$qms""" else ""
-      s"""{"metric":"total","unit":"sec","repeats":$repeats,"sf":"$sfDir","canary":${f3(canary)},"damaged":$damaged$swrShort,"nerr":${errors.size},"errors":$errHead,"full":"$outFile","value":${f3(total)}$q}"""
+      val o = om.createObjectNode()
+        .put("metric", "total").put("unit", "sec").put("repeats", repeats)
+        .put("sf", sfDir).put("canary", f3(canary)).put("damaged", damaged)
+      // the same-window ratio rides the compact stdout line too (short —
+      // one number), so the stdout capture carries it even if the full
+      // artifact is not read
+      sentinelPair.foreach(sp => o.put("same_window_ratio", f3(sp.ratio)))
+      o.put("nerr", errors.size)
+      // error DETAILS are bounded (first 2) so a broken run cannot push
+      // the line back over the capture window; the count is always exact
+      putStrings(o, "errors", errors.take(2))
+      o.put("full", outFile).put("value", f3(total))
+      if (withQueries) {
+        val qms = o.put("enc", "qms=ms, sorted-name order").putArray("qms")
+        results.foreach { case (_, v, _, _) =>
+          qms.add(if (v < 0) -1L else math.round(v * 1000)) }
+      }
+      om.writeValueAsString(o)
     }
     // belt and braces: if a pathological error string still overflows
     // the budget, drop to the summary-only form rather than emit a line

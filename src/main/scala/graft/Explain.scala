@@ -20,7 +20,7 @@ object Explain {
         s"valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = GraftSession.get()
+    val spark = GraftSession.get(defaultCpus = 32)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

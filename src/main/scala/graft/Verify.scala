@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,14 +20,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GraftSession carries the required reader configs (nanosAsLong for
     // events.ts, NTZ inference) — a bare builder here would fail on the
     // events table and break every ta_*/ing_* dump.
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.pinCodegenCache(spark)
+    val spark = GraftSession.get(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (unset = all,
     // which is what the driver runs)

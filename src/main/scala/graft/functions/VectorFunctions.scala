@@ -38,18 +38,6 @@ object VectorFunctions {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Deterministic pseudo-random hyperplane component for (bit, j):
-    * splitmix64-style mix mapped to [-0.5, 0.5). Evaluated HOST-side at
-    * plan-build time — the plan carries literal arrays, so a signature
-    * costs one fused zip_with/aggregate dot product per bit at runtime
-    * (no per-element hashing on the executors). */
-  private def planeComponent(bit: Int, j: Int): Double =
-    graft.plans.HyperplaneSig.planeComponent(bit, j)
-
-  /** Hyperplane i as a literal array<double> column of length dim. */
-  def hyperplane(bit: Int, dim: Int): Column =
-    array((0 until dim).map(j => lit(planeComponent(bit, j))): _*)
-
   /** Random-hyperplane LSH signature: bit i = sign of dot(v, h_i),
     * packed into a Long (nBits <= 63). */
   def hyperplaneSig(v: Column, nBits: Int, dim: Int): Column =

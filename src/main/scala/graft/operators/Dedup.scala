@@ -320,39 +320,6 @@ object Dedup {
       .select("a_id", "b_id", "shared", "jac")
   }
 
-  /** [[jaccardPairsPrefix]] with the sorted-hash frame materialized
-    * ONCE inside the query (a lazy in-query localCheckpoint, so every
-    * run still pays for its own shingle/hash/sort work — this is not
-    * cross-run staging): the candidate join carries only
-    * (id, sz, sg) 24-byte rows instead of the packed arrays, and the
-    * deduped candidate pairs verify by joining BACK to the cached
-    * arrays — tiny after the prefix+size filters, so AQE converts
-    * both verify probes to broadcasts at runtime. Same rows as
-    * [[jaccardPairsFromIndex]].
-    *
-    * Versus [[jaccardPairsPrefixRaw]]: the raw variant streams the
-    * full arrays through both join shuffles (~25x the bytes, and the
-    * shingle chain computes twice — exchange reuse does not fire
-    * across the two sides), but needs ~4 fewer stages. At sf0.1 the
-    * stage-count floor wins (raw ~0.8 s vs ~2.0 s here), so the
-    * headline query keeps raw; this is the shuffle-bytes-bound shape
-    * for corpora where the packed arrays dwarf the candidate set. */
-  def jaccardPairsPrefixOnce(hsh: DataFrame, threshold: Double): DataFrame = {
-    val hs = hsh.select(col("__id"), col("sz"), array_sort(col("hs")).as("hs"))
-      .localCheckpoint(false)
-    val pre = hs.select(col("__id"), col("sz"),
-      prefixExplode(threshold))
-    val cand = pre.select(col("__id").as("a_id"), col("sz").as("a_sz"), col("sg"))
-      .hint("shuffle_hash")
-      .join(pre.select(col("__id").as("b_id"), col("sz").as("b_sz"), col("sg")),
-        Seq("sg"))
-      .filter(col("a_id") < col("b_id") &&
-        col("a_sz") >= lit(threshold) * col("b_sz") &&
-        col("b_sz") >= lit(threshold) * col("a_sz"))
-      .select("a_id", "b_id").distinct()
-    verifyPairs(cand, hs, threshold)
-  }
-
   /** [[jaccardPairsAcrossHashes]] over (possibly pre-partitioned)
     * [[invertedIndex]] frames — the incremental shape reading the
     * staged index: only (new, old) pairs sharing a shingle

@@ -92,18 +92,20 @@ object GeoNearest {
     * signals). Layers past this keep the planner's shuffle strategy. */
   val BroadcastLayerMaxRows = 2000000L
 
-  /** @param midRings strictly-increasing intermediate rings between
-    *   ring-1 and `widenRing`. Pass-2's ring-widening explodes each
-    *   unresolved position to (2r+1)² cells, and the r19 sf1 profile
-    *   showed the jump 1 -> 8 pays x289 explosion for survivors whose
-    *   nearest sits just past the ring-1 radius: 32.3k survivors, ALL
-    *   within safe(2), p99.9 dist 1.77 km vs safe(2) = 2.80 km —
-    *   ~100M candidate evals where ring-2's x25 needs ~9M. The default
-    *   Seq(2) resolves the dense-regime tail at x25 and leaves the
-    *   x(2·widenRing+1)² pass to genuinely sparse neighborhoods; an
-    *   empty-survivor mid pass joins ~0 rows and costs one ~20 ms
-    *   stage. Exactness is per-pass (the safe(r) lower-bound cutoff),
-    *   so any ladder is as exact as the direct jump. */
+  /** Strictly-increasing intermediate rings between ring-1 and
+    * `widenRing`. Pass-2's ring-widening explodes each unresolved
+    * position to (2r+1)² cells, and the r19 sf1 profile showed the
+    * jump 1 -> 8 pays x289 explosion for survivors whose nearest sits
+    * just past the ring-1 radius: 32.3k survivors, ALL within safe(2),
+    * p99.9 dist 1.77 km vs safe(2) = 2.80 km — ~100M candidate evals
+    * where ring-2's x25 needs ~9M. Ring 2 resolves the dense-regime
+    * tail at x25 and leaves the x(2·widenRing+1)² pass to genuinely
+    * sparse neighborhoods; an empty-survivor mid pass joins ~0 rows and
+    * costs one ~20 ms stage. Exactness is per-pass (the safe(r)
+    * lower-bound cutoff), so any ladder is as exact as the direct
+    * jump. */
+  private val MidRings = Seq(2)
+
   /** @param layerRows the caller's staged layer count, when known. The
     *   layer frame below is a localCheckpoint whose size the planner
     *   cannot estimate — at sf10 the r20 metrics dump caught the pass-1
@@ -119,17 +121,13 @@ object GeoNearest {
   def nearest(positions: DataFrame, signals: DataFrame,
               cellDeg: Double, originLat: Double, originLon: Double,
               maxAbsLatDeg: Double, widenRing: Int = 8,
-              midRings: Seq[Int] = Seq(2),
               layerRows: Option[Long] = None): DataFrame = {
     require(widenRing >= 1, s"widenRing=$widenRing must be >= 1")
     require(cellDeg > 0, s"cellDeg=$cellDeg must be positive")
-    require(midRings == midRings.sorted && midRings.distinct == midRings,
-      s"midRings=$midRings must be strictly increasing")
-    // rungs outside (1, widenRing) are dropped, not rejected: the
-    // default Seq(2) must degrade to the plain two-pass shape for a
-    // caller that narrows widenRing to <= 2 (GeoNearestSpec's sparse
-    // layer tests do)
-    val mids = midRings.filter(r => r > 1 && r < widenRing)
+    // rungs at or past widenRing are dropped: the ladder must degrade
+    // to the plain two-pass shape for a caller that narrows widenRing
+    // to <= 2 (GeoNearestSpec's sparse layer tests do)
+    val mids = MidRings.filter(_ < widenRing)
     // the squared-degree prefilter's sin x >= x(1-x²/6) slack needs the
     // in-join separation (≤ (widenRing+1)·cellDeg per side) to stay
     // small-angle; 20° keeps the polynomial factor above 0.9949 — far
@@ -281,7 +279,7 @@ object GeoNearest {
     val resolved1 = m1.filter(isResolved(1))
     val un1 = m1.filter(!isResolved(1))
 
-    // pass 2: survivors widen through the ring ladder (midRings, then
+    // pass 2: survivors widen through the ring ladder (MidRings, then
     // widenRing); position side exploded, signals 1x1. Each rung's
     // unresolved frame recomputes gx/gy from lat/lon — the grid key is
     // a pure projection, so recomputing beats carrying a

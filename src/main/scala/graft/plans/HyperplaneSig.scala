@@ -54,8 +54,7 @@ object HyperplaneSig {
 
   /** Deterministic pseudo-random hyperplane component for (bit, j):
     * splitmix64-style mix mapped to [-0.5, 0.5). The single source of
-    * truth for the plane family — VectorFunctions.hyperplane builds
-    * its literal (spec-comparison) planes from the same values. */
+    * truth for the plane family. */
   def planeComponent(bit: Int, j: Int): Double = {
     var z = bit.toLong * 0x9E3779B97F4A7C15L + j.toLong * 0xBF58476D1CE4E5B9L + 0x94D049BB133111EBL
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L

@@ -154,9 +154,6 @@ object DedupQueries {
     * and the candidate joins all consume it without re-exchanging a
     * single index row — the shuffle that dominated the round-9 bench
     * for this family happens once, at staging. */
-  private[queries] def labIndex(s: SparkSession, dir: String): DataFrame =
-    shingleIndex(s, dir)
-
   private def shingleIndex(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "index") {
       Dedup.invertedIndex(hashedShingles(s, dir)).repartition(col("sg"))

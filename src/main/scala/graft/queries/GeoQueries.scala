@@ -64,14 +64,7 @@ object GeoQueries {
       java.lang.Long.valueOf(Tables.events(s, dir).count())
     }.longValue()
 
-  def geoNearestSignal(s: SparkSession, dir: String): DataFrame =
-    nearestWithMidRings(s, dir, Seq(2))
-
-  /** [[geoNearestSignal]] with the ring ladder exposed, so the
-    * GeoLadderProbe A/B can run the pre-r19 direct-jump shape
-    * (midRings = Nil) against the shipped ladder on identical inputs. */
-  def nearestWithMidRings(s: SparkSession, dir: String,
-                          midRings: Seq[Int]): DataFrame = {
+  def geoNearestSignal(s: SparkSession, dir: String): DataFrame = {
     // density-adaptive grid: the signal layer GROWS with the data
     // (|events|/199 over a fixed box), so a fixed cell size makes
     // per-cell candidate pairs grow with density SQUARED — 10× data
@@ -104,7 +97,6 @@ object GeoQueries {
       originLat = GeoFunctions.KyivBounds._1,
       originLon = GeoFunctions.KyivBounds._3,
       maxAbsLatDeg = GeoFunctions.KyivBounds._2,
-      midRings = midRings,
       // the staged count attests the layer is dim-sized, so the
       // candidate joins broadcast it explicitly — at sf10 the planner
       // (blind to the localCheckpoint's size) planned an SMJ that

@@ -332,8 +332,8 @@ object MiscQueries {
   def stPositionsParse(s: SparkSession, dir: String): DataFrame = {
     // wide staged backlog: the micro-batch plans one scan task per
     // file, so the parse runs at session parallelism WITHOUT the
-    // in-batch repartition the single-file source needed (spreadStream
-    // paid a full-row shuffle for the same effect)
+    // in-batch repartition the single-file source needed (a full-row
+    // shuffle for the same effect)
     // stateless → distributed file sink: the memory sink's per-batch
     // driver collect of ~2 rows/event dominated the replay at 10x data
     StreamOps.runToParquet(s, { ss =>

@@ -27,8 +27,6 @@ object PositionView {
     * their own 50.3 + m/1e4 op order in lockstep with oracleCte.) */
   def latE4(eventId: Column): Column = eventId * 7919 % 3000 + 503000
   def lonE4(eventId: Column): Column = eventId * 104729 % 6000 + 302000
-  val LatE4Sql = "event_id * 7919 % 3000 + 503000"
-  val LonE4Sql = "event_id * 104729 % 6000 + 302000"
 
   /** ns → µs as an exact FLOOR division (see the ts_us comment below). */
   val TsUsSql = "(ts - pmod(ts, 1000)) div 1000"

@@ -111,17 +111,17 @@ object StreamOps {
     * batch (no maxFilesPerTrigger): the batch's scan plans one task per
     * file, so the decode+project feeding a stateful shuffle runs at
     * N-way parallelism instead of inheriting the single backlog file's
-    * one split. The repartition alternative ([[spreadStream]]) pays an
-    * extra full-row shuffle INSIDE the batch; pre-splitting the backlog
-    * is free after the one-time stage — and is the shape a production
-    * landing zone already has (many files per date). */
+    * one split. The repartition alternative pays an extra full-row
+    * shuffle INSIDE the batch; pre-splitting the backlog is free
+    * after the one-time stage — and is the shape a production landing
+    * zone already has (many files per date). */
   def eventsStreamWide(s: SparkSession, dir: String, files: Int): DataFrame =
     eventsStreamStaged(s, dir, files, filesPerTrigger = None)
 
   /** Ranged backlog drained `filesPerBatch` files per micro-batch from
     * a `slices`-file stage: each batch's scan plans one task per file,
     * so a per-batch parse/probe runs filesPerBatch-way parallel WITHOUT
-    * the in-batch shuffle [[spreadStream]]-style fan-out would pay
+    * the in-batch shuffle a repartition fan-out would pay
     * (measured on st_asof_serve at sf1: an in-probe Par.spread made the
     * batch p50 834 -> 1211 ms — the exchange costs more than the serial
     * parse it relieves; multi-file batches get the parallelism for
@@ -243,22 +243,6 @@ object StreamOps {
     normalizeEventsTs(rdr.parquet(stage.toString), tsType)
   }
 
-  /** Fans a replayed stream out to the session's shuffle parallelism
-    * before a compute-bound stateless stage — the streaming
-    * counterpart of Par.spread: a micro-batch inherits its source's
-    * split count, so a single-file backlog replay runs the whole parse
-    * on ONE core without this (measured: st_positions_parse 2.5 ->
-    * 1.5 s at sf0.1). CAUTION: the count comes from `df`'s OWN session
-    * conf — inside a replay runner's `build(ss)` closure that session is
-    * the replay child whose shuffle partitions are already CLAMPED to
-    * the state-store count, so spreading there fans out to ~4, not the
-    * parent's 32 (the r18 review caught the old doc claiming the
-    * opposite). Call it on a stream built from the PARENT session, or
-    * pass the parent's parallelism explicitly via `target`. */
-  def spreadStream(df: DataFrame, target: Option[Int] = None): DataFrame =
-    df.repartition(target.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
-
   /** Tumbling hourly counts per event_type with a 1 h watermark. */
   def windowedCounts(events: DataFrame): DataFrame =
     events
@@ -365,18 +349,16 @@ object StreamOps {
     iv.days * 86400000000L + iv.microseconds
   }
 
-  /** State-task count for FINITE replays (overridable via
-    * SPARK_GRAFT_STREAM_PARTS). A stateful op fixes its partition
-    * count at first checkpoint, and every micro-batch then pays a
-    * per-partition state-store commit (a two-sided interval join keeps
-    * FOUR stores per partition) regardless of rows held. At the
+  /** State-task count for FINITE replays. A stateful op fixes its
+    * partition count at first checkpoint, and every micro-batch then
+    * pays a per-partition state-store commit (a two-sided interval join
+    * keeps FOUR stores per partition) regardless of rows held. At the
     * session's 32 shuffle partitions that is 128 near-empty store
     * commits per batch — measured 5.3 s → 2.2 s on the replayed
     * interval join by dropping to 8, and a further ~15 % across the
     * eight-query replay family at 4 (probed 8/4/2: 12.6/10.8/12.1 s —
-    * 2 starts starving the stateful stages' parallelism). A production
-    * unbounded feed sizes this to the executor fleet instead; it is a
-    * deployment knob, not operator semantics (results are
+    * 2 starts starving the stateful stages' parallelism). The count is
+    * deployment sizing, not operator semantics (results are
     * partitioning-independent, which the DuckDB-hash checks pin).
     *
     * Derived from the session's shuffle parallelism (parallelism/8,
@@ -384,12 +366,10 @@ object StreamOps {
     * optimum 4, a wider cluster session scales the state tasks with
     * it, and the clamp keeps the finite-replay commit floor bounded
     * (the probe showed both 2 and un-clamped counts losing). */
-  def replayStateParts(s: SparkSession): Int =
-    sys.props.get("graft.stream.parts").orElse(
-      sys.env.get("SPARK_GRAFT_STREAM_PARTS")).map(_.toInt).getOrElse {
-      val par = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(2, math.min(8, par / 8))
-    }
+  def replayStateParts(s: SparkSession): Int = {
+    val par = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(2, math.min(8, par / 8))
+  }
 
   /** Fresh CHILD session for one finite replay: shares the
     * SparkContext (executors, cache, scheduler) but owns its SQLConf,
@@ -405,11 +385,10 @@ object StreamOps {
     * dynamic session conf is copied first (static/readonly entries
     * skipped) and the custom function registry re-asserted — the child
     * must plan exactly like the parent except for the overrides. */
-  /** Thread-scoped state-store provider override for in-JVM probes and
-    * specs. The sys-prop spelling is GLOBAL — a spec mutating it would
-    * silently flip concurrent suites' replays onto RocksDB during its
-    * window — so test paths use this DynamicVariable instead, which
-    * scopes the override to the calling thread (replaySession runs on
+  /** Thread-scoped state-store provider override for specs. A global
+    * setting would silently flip concurrent suites' replays onto
+    * RocksDB during a spec's window, so this DynamicVariable scopes the
+    * override to the calling thread (replaySession runs on
     * the caller's thread; the child session's conf is fixed before any
     * micro-batch thread starts). */
   val ProviderOverride = new scala.util.DynamicVariable[Option[String]](None)
@@ -431,10 +410,8 @@ object StreamOps {
     // flips on: SPARK_GRAFT_STATE_PROVIDER=rocksdb (or any fully
     // qualified provider class). Results are store-independent —
     // StateStoreProviderSpec hash-gates a stateful replay under
-    // RocksDB against the default store. The sys-prop spelling
-    // overrides env for in-JVM probes/A-Bs.
+    // RocksDB against the default store.
     val provider = ProviderOverride.value
-      .orElse(sys.props.get("graft.stream.provider"))
       .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER"))
       .map {
         case "rocksdb" =>
@@ -457,10 +434,8 @@ object StreamOps {
   object ReplayMetrics {
     final case class BatchStats(n: Int, p50Ms: Long, p95Ms: Long, maxMs: Long)
     private val m = new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-    private val det = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
     def record(name: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val ps = q.recentProgress.toSeq
-      val ds = ps.map(_.batchDuration).sorted
+      val ds = q.recentProgress.toSeq.map(_.batchDuration).sorted
       if (ds.nonEmpty) {
         // nearest-rank: ceil(p·n)−1, not floor(p·n) — the floor form
         // overstated by one rank (p95 of ≤20 batches returned the MAX;
@@ -469,15 +444,6 @@ object StreamOps {
           ds(math.max(0, math.min(ds.size - 1,
             math.ceil(p * ds.size).toInt - 1)))
         m.put(name, BatchStats(ds.size, pct(0.50), pct(0.95), ds.last))
-        // per-batch phase breakdown, kept ONLY for diagnostics probes
-        // (Scratch) — never serialized into the bench artifact
-        det.put(name, ps.map { p =>
-          val d = new java.util.TreeMap[String, java.lang.Long](p.durationMs)
-          val st = p.stateOperators.toSeq.map(so =>
-            s"rows=${so.numRowsTotal} commitMs=${so.allRemovalsTimeMs + so.commitTimeMs}")
-            .mkString("[", "; ", "]")
-          s"batch=${p.batchId} in=${p.numInputRows} dur=$d state=$st"
-        })
         ()
       }
     }
@@ -485,7 +451,9 @@ object StreamOps {
       import scala.jdk.CollectionConverters._
       m.asScala.toMap
     }
-    def details(name: String): Seq[String] = Option(det.get(name)).getOrElse(Nil)
+    /** Drops every recorded run — Bench calls it after its warmup so
+      * the artifact holds measured runs only. */
+    def clear(): Unit = m.clear()
   }
 
   /** Marker file naming a directory as a [[runToDated]] landing zone —

@@ -71,11 +71,6 @@ class DedupSpec extends SparkSpec {
       val pref = Dedup.jaccardPairsPrefix(hsh, t)
         .collect().map(_.toString).sorted.toSeq
       assert(pref === full, s"prefix path diverged at t=$t")
-      // the shuffle-bytes-bound scale shape (light candidates + cached
-      // verify) must produce the identical pair set
-      val once = Dedup.jaccardPairsPrefixOnce(hsh, t)
-        .collect().map(_.toString).sorted.toSeq
-      assert(once === full, s"prefixOnce path diverged at t=$t")
       // the fused-expression headline path (SortedShingleHashes +
       // SortedIntersectCount) must also produce the identical pair set
       val fused = Dedup.jaccardPairsPrefixFromText(docs, "doc_id", "text", 3, t)
