@@ -104,6 +104,20 @@ object GraftSession {
       // query. Sized for the registry plus headroom — compiled classes
       // are small; this is standard tuning for a diverse query mix.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // Share that cache ACROSS sessions. Spark 4.1 keys the global
+      // generated-class cache on (context classloader, code), and with
+      // artifact isolation on (the default) executors give every
+      // session UUID its own IsolatedSessionState classloader — so
+      // every newSession(), and every replaySession child, starts with
+      // a cold cache and recompiles byte-identical code: 0.7-0.95 s of
+      // janino in every perfbench pass, each pass a fresh session, on a
+      // 4-vCPU host. Sharing it measured pass_s -36% / -26% and cpu_s
+      // -57% / -50% (interactive_sf001 / pipeline_sf002). Isolation
+      // only scopes jars/files/archives added to a session, and the
+      // engine adds none. Creation-time only; children and streaming
+      // clones inherit it. CodegenReuseSpec is the tripwire if a Spark
+      // bump renames the conf or changes the cache key.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // Session-window aggs: merge sessions map-side BEFORE the state
       // shuffle. The synthetic stream compresses ~10:1 (1M events →
       // 95k sessions at sf1), so pre-merging cuts both shuffle rows
@@ -220,7 +234,14 @@ object GraftSession {
     * entries for the JVM's lifetime and the ~100-query registry evicts
     * its compiled classes every pass: every query re-pays janino,
     * ~+0.4 s each, +14 s on the suite (the round-13 thrash, back as a
-    * heisenbug). Pinning the init deterministically closes it. */
+    * heisenbug). Pinning the init deterministically closes it.
+    *
+    * Sizing alone never made the cache shared ACROSS sessions: its key
+    * includes the context classloader, and under artifact isolation
+    * every session had its own, so each perfbench pass filled it with
+    * entries from sessions that no longer existed. The builder's
+    * `spark.sql.artifact.isolation.enabled=false` is what lets every
+    * session hit the same entries. */
   private val codegenCachePinned = new java.util.concurrent.atomic.AtomicBoolean(false)
   def pinCodegenCache(spark: SparkSession): Unit =
     if (codegenCachePinned.compareAndSet(false, true)) {
@@ -238,7 +259,13 @@ object GraftSession {
     * non-static confs correctness depends on (ns-as-long parquet reads
     * and the UTC session timezone the oracles assume). Called from
     * SparkEntry on every query dispatch; a GraftSession-built session
-    * short-circuits on the functionExists probe. */
+    * short-circuits on the functionExists probe.
+    *
+    * Artifact isolation can only be turned off when a session is
+    * created, so a session not built by [[builder]] keeps Spark's
+    * per-session isolation: it and every newSession() of it get their
+    * own classloader and recompile their generated code instead of
+    * sharing the JVM-wide compiled-class cache. */
   def ensureFunctions(spark: SparkSession): SparkSession = {
     pinCodegenCache(spark)
     if (!spark.catalog.functionExists("array_dot")) {

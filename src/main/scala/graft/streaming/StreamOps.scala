@@ -371,6 +371,14 @@ object StreamOps {
     math.max(2, math.min(8, par / 8))
   }
 
+  /** Thread-scoped state-store provider override for specs. A global
+    * setting would silently flip concurrent suites' replays onto
+    * RocksDB during a spec's window, so this DynamicVariable scopes the
+    * override to the calling thread (replaySession runs on
+    * the caller's thread; the child session's conf is fixed before any
+    * micro-batch thread starts). */
+  val ProviderOverride = new scala.util.DynamicVariable[Option[String]](None)
+
   /** Fresh CHILD session for one finite replay: shares the
     * SparkContext (executors, cache, scheduler) but owns its SQLConf,
     * so the replay's two conf overrides — the state-partition clamp
@@ -382,22 +390,19 @@ object StreamOps {
     * un-clamped parallelism, closing the derive-under-clamp hazard.
     *
     * newSession() inherits only builder-time options, so the parent's
-    * dynamic session conf is copied first (static/readonly entries
-    * skipped) and the custom function registry re-asserted — the child
-    * must plan exactly like the parent except for the overrides. */
-  /** Thread-scoped state-store provider override for specs. A global
-    * setting would silently flip concurrent suites' replays onto
-    * RocksDB during a spec's window, so this DynamicVariable scopes the
-    * override to the calling thread (replaySession runs on
-    * the caller's thread; the child session's conf is fixed before any
-    * micro-batch thread starts). */
-  val ProviderOverride = new scala.util.DynamicVariable[Option[String]](None)
-
+    * dynamic session conf is copied first (static and core keys,
+    * which Spark rejects with an AnalysisException, are skipped) and
+    * the custom function registry re-asserted — the child must plan
+    * exactly like the parent except for the overrides. A child of a
+    * [[graft.GraftSession.builder]] session inherits its artifact
+    * isolation off, so the replay reuses the classes the parent
+    * already compiled instead of recompiling them. */
   private def replaySession(s: SparkSession,
                             sets: Seq[(String, String)]): SparkSession = {
     val ss = s.newSession()
     s.conf.getAll.foreach { case (k, v) =>
-      try ss.conf.set(k, v) catch { case _: Throwable => () }
+      try ss.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
     graft.GraftSession.ensureFunctions(ss)
     // State-store provider: a DEPLOYMENT knob (like SPARK_GRAFT_LOCAL_DIR
