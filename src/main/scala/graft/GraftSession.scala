@@ -155,48 +155,12 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
       .config("spark.ui.enabled", "false")
 
-  /** tmpfs scratch consumes RAM, so preferring /dev/shm is gated on a
-    * usable-space floor (spills that should RELIEVE memory pressure
-    * must not instead fill tmpfs to ENOSPC / cgroup OOM), and scratch
-    * is laid out one subdirectory per JVM pid so a session start can
-    * reclaim what a CRASHED JVM leaked — on tmpfs that leak is resident
-    * RAM until reboot, not just disk. Only dirs whose owning pid is
-    * dead (/proc/<pid> gone) are removed: a concurrently-running graft
-    * JVM (bench re-roll child, driver beside builder) keeps its live
-    * shuffle files. Falls back to java.io.tmpdir below the floor. */
-  private[graft] def defaultLocalDir: String = {
-    val shm = new java.io.File("/dev/shm")
-    val floorBytes = 4L * 1024 * 1024 * 1024
-    if (shm.canWrite && shm.getUsableSpace > floorBytes) {
-      val root = new java.io.File(shm, "graft-local")
-      root.mkdirs()
-      val live = java.lang.ProcessHandle.current().pid()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach { d =>
-        d.getName match {
-          case s if s.startsWith("pid-") =>
-            val pid = s.stripPrefix("pid-")
-            // isDigit keeps the original guard (signed suffixes like
-            // "pid--123" stay left-for-their-owner, never reclaimed);
-            // Try adds overflow tolerance — an all-digit suffix wider
-            // than Long.MaxValue is skipped, not a startup crash
-            val dead = pid.forall(_.isDigit) &&
-              scala.util.Try(pid.toLong).toOption.exists(p =>
-                p != live && !java.nio.file.Files.isDirectory(
-                  java.nio.file.Paths.get("/proc", pid)))
-            if (dead) deleteRecursive(d)
-          case _ => () // pre-layout flat scratch: left for its owner
-        }
-      }
-      new java.io.File(root, s"pid-$live").getPath
-    } else sys.props("java.io.tmpdir")
-  }
-
-  private def deleteRecursive(f: java.io.File): Unit = {
-    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursive)
-    f.delete()
-    ()
-  }
+  /** Shuffle scratch under the shared pid-scoped policy
+    * ([[PidScratch]]): a session start reclaims what a crashed graft
+    * JVM leaked, while a concurrently-running one (bench re-roll child,
+    * driver beside builder) keeps its live shuffle files. */
+  private[graft] def defaultLocalDir: String =
+    PidScratch.root("graft-local").toString
 
   /** The session every main runs on: `SPARK_GRAFT_CPUS` local cores
     * and shuffle partitions (`defaultCpus` when unset), WARN logging,

@@ -179,7 +179,7 @@ object MiscQueries {
     // driver; the snapshot sink keeps every registered query memory-free
     StreamOps.runCompleteSnapshot(s, ss => StreamOps.windowedCounts(
       StreamOps.eventsStreamWide(ss, dir, StreamOps.wideReplayFiles(s))),
-      "st_windowed_counts", noFlush = true)
+      "st_windowed_counts")
       .select(col("window.start").cast("timestamp_ntz").as("hour"),
         col("event_type"), col("n"))
       .orderBy("hour", "event_type")
@@ -199,7 +199,7 @@ object MiscQueries {
   def stSlidingCounts(s: SparkSession, dir: String): DataFrame = {
     StreamOps.runCompleteSnapshot(s, ss => StreamOps.slidingCounts(
       StreamOps.eventsStreamWide(ss, dir, StreamOps.wideReplayFiles(s))),
-      "st_sliding_counts", noFlush = true)
+      "st_sliding_counts")
       .select(col("window.start").cast("timestamp_ntz").as("win_start"),
         col("event_type"), col("n"))
       .orderBy("win_start", "event_type")
@@ -229,7 +229,7 @@ object MiscQueries {
       StreamOps.eventsStreamWide(ss, dir, StreamOps.wideReplayFiles(s)),
       Seq("user_id", "event_type"))
       .select("user_id", "event_type"),
-      "st_stream_dedup", stateParts = Some(StreamOps.replayStateParts(s)),
+      "st_stream_dedup", stateful = true,
       noFlush = true)
       .orderBy("user_id", "event_type")
   }
@@ -295,7 +295,7 @@ object MiscQueries {
           .select(col("event_id"), col("user_id"), col("event_type"),
             expr(graft.sources.PositionView.TsUsSql).as("ts_us"))
           .as[graft.streaming.TtlEvent], TtlDedupUs).toDF(),
-      "st_ttl_dedup", stateParts = Some(StreamOps.replayStateParts(s)))
+      "st_ttl_dedup", stateful = true)
       .select("user_id", "event_type", "event_id", "ts_us")
       .orderBy("user_id", "event_type", "ts_us", "event_id")
   }
@@ -365,7 +365,7 @@ object MiscQueries {
         .select(col("event_id"), col("user_id"),
           expr(graft.sources.PositionView.TsUsSql).as("ts_us"))
         .as[graft.streaming.SessEvent], gapUs = 43200L * 1000000L).toDF(),
-      "st_sessionize", stateParts = Some(StreamOps.replayStateParts(s)))
+      "st_sessionize", stateful = true)
       .select("event_id", "user_id", "session_seq")
       .orderBy("event_id")
   }
@@ -567,7 +567,7 @@ object MiscQueries {
     StreamOps.runCompleteSnapshot(s, ss => StreamOps.sessionCounts(
       StreamOps.eventsStreamWide(ss, dir, StreamOps.wideReplayFiles(s)),
       "30 minutes"),
-      "st_session_window", noFlush = true)
+      "st_session_window")
       .select(col("user_id"),
         col("session_window.start").cast("timestamp_ntz").as("sess_start"),
         col("session_window.end").cast("timestamp_ntz").as("sess_end"),
@@ -664,7 +664,7 @@ object MiscQueries {
       "click", "purchase", "1 hour")
       .select(col("user_id"), col("left_id").as("click_id"),
         col("right_id").as("purchase_id")),
-      "st_stream_join", stateParts = Some(StreamOps.replayStateParts(s)),
+      "st_stream_join", stateful = true,
       noFlush = true)
       .orderBy("user_id", "click_id", "purchase_id")
   }
@@ -752,7 +752,7 @@ object MiscQueries {
           expr(graft.sources.PositionView.TsUsSql).as("ts_us"),
           graft.operators.Poller.outcomeCol.as("outcome"))
         .as[graft.operators.PollEvent]).toDF(),
-      "st_reconnect_backoff", stateParts = Some(StreamOps.replayStateParts(s)))
+      "st_reconnect_backoff", stateful = true)
       .orderBy("client_id", "event_id")
   }
 

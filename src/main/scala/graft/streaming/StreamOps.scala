@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.PidScratch.deleteRecursive
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators (the reference's pollers ARE streams:
@@ -11,7 +12,7 @@ import org.apache.spark.sql.types._
   * the same computations expressed over readStream).
   *
   * Tested by replaying the events parquet through the file stream
-  * source with Trigger.AvailableNow — identical code runs against a
+  * source with an AvailableNow trigger — identical code runs against a
   * socket/Kafka source in production; only the `load` changes.
   */
 object StreamOps {
@@ -34,9 +35,6 @@ object StreamOps {
 
   val EventsSchema: StructType = eventsSchema(LongType)
 
-  /** The file stream source requires a DIRECTORY; the testdata table is
-    * a single parquet file, so stage a symlink to it under a scratch
-    * directory keyed by the source path (idempotent). */
   /** Stage key = sanitized dir name + full-path hash: two dirs that
     * sanitize identically must not share (and silently reuse) a stage.
     * ONE definition for the symlink stage and the sliced stages. */
@@ -56,6 +54,9 @@ object StreamOps {
       case _ => df
     }
 
+  /** The file stream source requires a DIRECTORY; the testdata table is
+    * a single parquet file, so stage a symlink to it under a scratch
+    * directory keyed by the source path (idempotent). */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val src = Paths.get(s"$dir/events.parquet").toAbsolutePath
@@ -131,6 +132,17 @@ object StreamOps {
                              filesPerBatch: Int): DataFrame =
     eventsStreamStaged(s, dir, slices, filesPerTrigger = Some(filesPerBatch))
 
+  /** One lock object per stage path: [[stageSlices]] is hit by Bench's
+    * concurrent warmup pool, and two threads both missing _SUCCESS
+    * would run overlapping write.mode(overwrite) jobs into the same
+    * directory — one job's overwrite can delete the other's in-flight
+    * files and leave a mixed-but-stamped stage that later measured runs
+    * replay. The write additionally lands in a temp sibling and renames
+    * into place atomically, so even a cross-process race (or a crashed
+    * writer) can never publish a partial stage under _SUCCESS. */
+  private val stageLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** Stages `<dir>/<table>.parquet` as `slices` RANGE partitions on
     * `sortCol` (staged once per (dir, table, slices) and reused, so
     * batch boundaries stay fixed across a failed run and its recovery
@@ -154,17 +166,6 @@ object StreamOps {
     * as the sort key advances. Re-asserted on every call — the stage
     * dir is cached across sessions and pre-fix stages carry the racy
     * mtimes. */
-  /** One lock object per stage path: [[stageSlices]] is hit by Bench's
-    * concurrent warmup pool, and two threads both missing _SUCCESS
-    * would run overlapping write.mode(overwrite) jobs into the same
-    * directory — one job's overwrite can delete the other's in-flight
-    * files and leave a mixed-but-stamped stage that later measured runs
-    * replay. The write additionally lands in a temp sibling and renames
-    * into place atomically, so even a cross-process race (or a crashed
-    * writer) can never publish a partial stage under _SUCCESS. */
-  private val stageLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private def stageSlices(s: SparkSession, dir: String, table: String,
                           sortCol: String, slices: Int): java.nio.file.Path = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -381,13 +382,30 @@ object StreamOps {
 
   /** Fresh CHILD session for one finite replay: shares the
     * SparkContext (executors, cache, scheduler) but owns its SQLConf,
-    * so the replay's two conf overrides — the state-partition clamp
-    * and the no-data-flush toggle — are SCOPED to this run. No
+    * so the replay's two conf overrides are SCOPED to this run. No
     * concurrent replay, warmup thread, or later batch query can
     * observe them, which deletes the depth-counted ReplayGuard (and
     * its documented overlap caveat) outright; it also means
     * [[replayStateParts]] always derives from the PARENT session's
     * un-clamped parallelism, closing the derive-under-clamp hazard.
+    *
+    * `stateful` clamps the shuffle partitions — the count a stateful
+    * op fixes as its state partitions at first checkpoint — to
+    * [[replayStateParts]]. A stateless replay keeps the session
+    * parallelism for its scan and sink write.
+    *
+    * `noFlush` skips the trailing ZERO-ROW micro-batch Spark appends to
+    * a stateful replay (noDataMicroBatches — it advances the watermark
+    * so evictions/timeouts fire), measured at 0.5-0.7 s of state-scan +
+    * store commits per replay. Only legal where that batch cannot add
+    * OUTPUT rows: complete-mode aggregations re-emit the full result
+    * every batch (the no-data pass re-emits an identical table), and
+    * first-arrival dedup and watermarked INNER joins emit in the batch
+    * the rows arrive (eviction only trims state). Queries whose RESULTS
+    * need the watermark push — append-mode windowed aggs, outer joins,
+    * flatMapGroupsWithState event-time timeouts — must keep it off. The
+    * DuckDB-hash gate pins that every noFlush adopter is row-identical
+    * to the batch oracle.
     *
     * newSession() inherits only builder-time options, so the parent's
     * dynamic session conf is copied first (static and core keys,
@@ -397,8 +415,8 @@ object StreamOps {
     * [[graft.GraftSession.builder]] session inherits its artifact
     * isolation off, so the replay reuses the classes the parent
     * already compiled instead of recompiling them. */
-  private def replaySession(s: SparkSession,
-                            sets: Seq[(String, String)]): SparkSession = {
+  private def replaySession(s: SparkSession, stateful: Boolean,
+                            noFlush: Boolean): SparkSession = {
     val ss = s.newSession()
     s.conf.getAll.foreach { case (k, v) =>
       try ss.conf.set(k, v)
@@ -425,7 +443,10 @@ object StreamOps {
       }
     provider.foreach(p =>
       ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-    sets.foreach { case (k, v) => ss.conf.set(k, v) }
+    if (stateful)
+      ss.conf.set("spark.sql.shuffle.partitions", replayStateParts(s).toString)
+    if (noFlush)
+      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     ss
   }
 
@@ -465,67 +486,41 @@ object StreamOps {
     * the only kind of directory its pre-replay clear may delete. */
   val DatedZoneMarker = "_GRAFT_DATED_ZONE"
 
-  /** Root for the replay harness's streaming checkpoints — tmpfs
-    * (/dev/shm) when the host has one, else java.io.tmpdir. A finite
-    * replay's offset/commit WAL and state-store delta files are
-    * ephemeral machinery (a production feed checkpoints to durable
-    * shared storage sized for its fleet — this is the same deployment
-    * knob as ReplayStateParts), but every micro-batch pays their
-    * create/sync latency INLINE on the driver path; on the bench host
-    * the spinning-dir default is the dominant share of the per-batch
-    * floor across the whole st_* family. Results are
+  /** Root for the replay harness's streaming checkpoints and side
+    * outputs, under the shared pid-scoped scratch policy
+    * ([[graft.PidScratch]]: tmpfs when it has room, one subdir per JVM,
+    * dead-pid siblings reclaimed). A finite replay's offset/commit WAL
+    * and state-store delta files are ephemeral machinery (a production
+    * feed checkpoints to durable shared storage sized for its fleet —
+    * the same deployment knob as ReplayStateParts), but every
+    * micro-batch pays their create/sync latency INLINE on the driver
+    * path; on the bench host the spinning-dir default is the dominant
+    * share of the per-batch floor across the whole st_* family.
+    *
+    * The per-JVM subdir matters because run roots are keyed by query
+    * name: two live graft JVMs (a Verify beside a bench) sharing a
+    * flat root raced on the same FileStreamSink metadata ("Race while
+    * writing batch 0", observed when two Verifies overlapped). recover-
+    * dirs keep their cross-RESTART contract: the recoverable replays
+    * restart queries inside one JVM, never across JVMs. Results are
     * checkpoint-location-independent, which the DuckDB-hash checks
     * pin. */
-  private val CheckpointRoot: java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val shm = Paths.get("/dev/shm")
-    // tmpfs preference gated on the same usable-space floor as
-    // GraftSession.defaultLocalDir: since r18 this root also hosts
-    // pid-scoped DATA side outputs (scratchPath — dated sinks, recover
-    // clones), and data on a near-full tmpfs is an ENOSPC stream
-    // failure plus memory pressure, not a speedup. Dead-pid reclaim
-    // below bounds the resident footprint across JVM generations.
-    val floorBytes = 4L * 1024 * 1024 * 1024
-    val base =
-      if (Files.isDirectory(shm) && Files.isWritable(shm) &&
-          shm.toFile.getUsableSpace > floorBytes) shm.resolve("graft-ckpt")
-      else Paths.get(sys.props("java.io.tmpdir"), "graft-ckpt")
-    Files.createDirectories(base)
-    // ONE SUBDIR PER JVM: sink-/recover- paths are keyed by query name,
-    // so two live graft JVMs (a Verify beside a bench, concurrent
-    // harness runs) sharing the flat root raced on the same
-    // FileStreamSink metadata ("Race while writing batch 0", observed
-    // when two Verifies overlapped). Dead-pid siblings are reclaimed on
-    // startup exactly like GraftSession's pid-scoped shuffle scratch —
-    // on tmpfs a leaked checkpoint is resident RAM, not just disk.
-    // recover- dirs keep their cross-RESTART contract: the recoverable
-    // replays restart queries inside one JVM, never across JVMs.
-    val live = java.lang.ProcessHandle.current().pid()
-    Option(base.toFile.listFiles()).getOrElse(Array.empty).foreach { d =>
-      val n = d.getName
-      if (n.startsWith("pid-")) {
-        val pid = n.stripPrefix("pid-")
-        // isDigit keeps the original guard (signed suffixes are never
-        // reclaimed); Try adds overflow tolerance — an all-digit
-        // suffix wider than Long.MaxValue is skipped, not a crash
-        if (pid.forall(_.isDigit) &&
-            scala.util.Try(pid.toLong).toOption.exists(p =>
-              p != live && !Files.isDirectory(Paths.get("/proc", pid))))
-          deleteRecursive(d.toPath)
-      }
-    }
-    val mine = base.resolve(s"pid-$live")
-    Files.createDirectories(mine)
-    mine
-  }
+  private val CheckpointRoot: java.nio.file.Path =
+    graft.PidScratch.root("graft-ckpt")
 
-  /** Fresh single-run checkpoint dir under [[CheckpointRoot]]. The
-    * caller deletes it when its query terminates — an explicit
-    * checkpointLocation is never auto-cleaned by Spark, and a STALE
-    * one would make the next AvailableNow replay skip the already-
-    * committed backlog entirely. */
-  private def freshCheckpoint(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(CheckpointRoot, "run-")
+  /** The run root `<prefix>-<name>` under [[CheckpointRoot]], cleared
+    * at the START of every run: it holds the run's checkpoint (`ckpt`)
+    * and any sink output beside it. Spark never cleans an explicit
+    * checkpointLocation, and a STALE one would make the next
+    * AvailableNow replay skip the already-committed backlog entirely.
+    * Clearing at the next start, not at the end, lets a lazy read-back
+    * (sink files, a state-store read) outlive the run and keeps one
+    * root per name across bench repeats. */
+  private def runRoot(prefix: String, name: String): java.nio.file.Path = {
+    val root = CheckpointRoot.resolve(s"$prefix-$name")
+    deleteRecursive(root)
+    root
+  }
 
   /** Persistent (cross-restart) checkpoint dir for the RECOVERABLE
     * replays: survives the planted crash because it outlives the
@@ -562,15 +557,46 @@ object StreamOps {
   def scratchPath(name: String): String =
     CheckpointRoot.resolve("scratch-" + name).toString
 
-  private def deleteRecursive(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally st.close()
-    }
+  /** The ONE finite-replay lifecycle behind every `run*` runner: a
+    * runner supplies only its sink (format and path, output mode or a
+    * foreachBatch body) and its read-back. Records the sink in
+    * [[SinkAudit]] as `kind:name`, drains `df`'s backlog from
+    * checkpoint `ckpt` with AvailableNow, records the run's batch
+    * latencies in [[ReplayMetrics]] under `metricKey`, and unloads the
+    * state stores however the run ends.
+    *
+    * The eager unload: a run's providers hold the full join/agg state
+    * maps in executor memory and can never be reused (the next run of
+    * a name starts from a cleared checkpoint), yet the maintenance
+    * thread only evicts them on its 60 s cycle — across a many-query
+    * suite that retained state compounds into GC pressure that shows
+    * up as multi-second variance in UNRELATED queries. The unload is
+    * safe because the harness never runs two streams concurrently
+    * outside Bench's warmup ([[SuppressStoreUnload]]); a stateless run
+    * has no store loaded. */
+  private def replay(kind: String, name: String, df: DataFrame,
+                     ckpt: java.nio.file.Path, metricKey: String)
+                    (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    SinkAudit.record(kind, name)
+    try {
+      val q = sink(df.writeStream.option("checkpointLocation", ckpt.toString))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      ReplayMetrics.record(metricKey, q)
+    } finally releaseStateStores()
   }
+
+  /** Marker-less acceptance for zones predating [[DatedZoneMarker]]:
+    * every entry is a date_key= partition dir or a _/. bookkeeping
+    * file — a testdata dir (bare *.parquet files) or any shared dir
+    * fails. */
+  private def looksDated(entries: Seq[java.nio.file.Path]): Boolean =
+    entries.forall { p =>
+      val n = p.getFileName.toString
+      n.startsWith("_") || n.startsWith(".") ||
+        (n.startsWith("date_key=") && java.nio.file.Files.isDirectory(p))
+    }
 
   /** Replays a stream into a date-partitioned landing zone via
     * foreachBatch → [[graft.sources.DatedWriter]] — the reference
@@ -585,30 +611,20 @@ object StreamOps {
     * outDir (testdata, a shared dir) must error, never be silently
     * wiped.
     *
-    * `filesPerDate` defaults to 1 — the reference's rotation contract
-    * IS one file per date (writer.py `build_file_path`): each
-    * micro-batch appends one file per date it touches. Raise it when a
-    * single hot date needs intra-date write parallelism; at the
-    * replay's volumes the extra files only multiply open/commit/list
-    * costs (measured: 30 dates x 4 files = 120 files cost ~0.5 s write
-    * + ~0.3 s read-back over the 1-file-per-date layout). */
+    * Each micro-batch appends ONE file per date it touches — the
+    * reference's rotation contract (writer.py `build_file_path`). At
+    * the replay's volumes more files per date only multiply
+    * open/commit/list costs (measured: 30 dates x 4 files = 120 files
+    * cost ~0.5 s write + ~0.3 s read-back over the 1-file-per-date
+    * layout). */
   def runToDated(s: SparkSession, df: DataFrame, tsCol: String,
-                 outDir: String, filesPerDate: Int = 1): Unit = {
-    SinkAudit.record("dated", outDir)
+                 outDir: String): Unit = {
     import java.nio.file.{Files, Paths}
     val root = Paths.get(outDir)
     val marker = root.resolve(DatedZoneMarker)
     if (Files.exists(root)) {
       val entries = listDir(root)
-      // marker-less acceptance for zones predating the marker: every
-      // entry is a date_key= partition dir or a _/. bookkeeping file —
-      // a testdata dir (bare *.parquet files) or any shared dir fails
-      val looksDated = entries.forall { p =>
-        val n = p.getFileName.toString
-        n.startsWith("_") || n.startsWith(".") ||
-          (n.startsWith("date_key=") && Files.isDirectory(p))
-      }
-      require(entries.isEmpty || Files.exists(marker) || looksDated,
+      require(entries.isEmpty || Files.exists(marker) || looksDated(entries),
         s"runToDated: refusing to clear '$outDir' — non-empty, missing the " +
           s"$DatedZoneMarker marker and not shaped like a dated landing zone")
       deleteRecursive(root)
@@ -622,21 +638,13 @@ object StreamOps {
     // count regardless of partition count (measured: the in-batch
     // write dominated st_dated_sink at 8 parts; session-level
     // parallelism cuts its wall time without changing output shape).
-    val ckpt = freshCheckpoint()
-    try {
-      val q = df.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.sources.DatedWriter.writeDated(batch.toDF(), tsCol, outDir,
-            mode = "append", filesPerDate = filesPerDate)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record("dated:" + root.getFileName.toString, q)
-    } finally {
-      deleteRecursive(ckpt)
-      releaseStateStores()
+    val zone = root.getFileName.toString
+    val ckpt = runRoot("dated", stageKey(zone, root)).resolve("ckpt")
+    replay("dated", outDir, df, ckpt, "dated:" + zone) {
+      _.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        graft.sources.DatedWriter.writeDated(batch.toDF(), tsCol, outDir,
+          mode = "append", filesPerDate = 1)
+      }
     }
   }
 
@@ -681,9 +689,7 @@ object StreamOps {
                             outDir: String, checkpointDir: String,
                             failAtBatch: Option[Long] = None,
                             fresh: Boolean = false): Unit = {
-    SinkAudit.record("dated", outDir)
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val root = Paths.get(outDir)
     val marker = root.resolve(DatedZoneMarker)
     if (fresh) {
@@ -705,12 +711,7 @@ object StreamOps {
     // one already shaped like a dated zone (the runToDated guard).
     if (!Files.exists(marker)) {
       val entries = listDir(root)
-      val looksDated = entries.forall { p =>
-        val n = p.getFileName.toString
-        n.startsWith("_") || n.startsWith(".") ||
-          (n.startsWith("date_key=") && Files.isDirectory(p))
-      }
-      require(entries.isEmpty || looksDated,
+      require(entries.isEmpty || looksDated(entries),
         s"runToDatedRecoverable: refusing to adopt '$outDir' — non-empty, " +
           s"unmarked and not shaped like a dated landing zone")
       Files.createFile(marker)
@@ -727,54 +728,46 @@ object StreamOps {
     // caller as PlantedStreamFailure.
     val silenced = failAtBatch.isDefined
     if (silenced) PlantedLogSilence.enter()
-    try {
-      val q = df.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!Files.exists(commits.resolve(batchId.toString))) {
-            val staging = root.resolve("_staging").resolve(s"batch=$batchId")
-            // recover(), not rebuild: a COMPLETE staged batch (atomic
-            // job commit = _SUCCESS) is exactly the reference's buffer
-            // file surviving the dropped session — the restart re-emits
-            // it without re-deriving it. A partial write (no _SUCCESS)
-            // is rewritten from the replayed batch.
-            if (!Files.exists(staging.resolve("_SUCCESS"))) {
-              graft.sources.DatedWriter.writeDated(batch.toDF(), tsCol,
-                staging.toString, mode = "overwrite", filesPerDate = 1)
-            }
-            if (failAtBatch.contains(batchId))
-              throw new PlantedStreamFailure(batchId)
-            // idempotent hand-off: one file per (batch, date), named by
-            // the batch id — a replayed move can only overwrite itself
-            listDir(staging)
-              .filter(p => p.getFileName.toString.startsWith("date_key=") &&
-                Files.isDirectory(p))
-              .foreach { dateDir =>
-                val dst = root.resolve(dateDir.getFileName.toString)
-                Files.createDirectories(dst)
-                val parts = listDir(dateDir)
-                  .filter(_.getFileName.toString.endsWith(".parquet")).toList
-                require(parts.size <= 1,
-                  s"filesPerDate=1 write produced ${parts.size} files in $dateDir")
-                parts.foreach(p => Files.move(p, dst.resolve(s"b$batchId.parquet"),
-                  StandardCopyOption.REPLACE_EXISTING))
-              }
-            Files.createFile(commits.resolve(batchId.toString))
-            ()
+    try replay("dated", outDir, df, Paths.get(checkpointDir),
+      "recover:" + root.getFileName.toString) {
+      _.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!Files.exists(commits.resolve(batchId.toString))) {
+          val staging = root.resolve("_staging").resolve(s"batch=$batchId")
+          // recover(), not rebuild: a COMPLETE staged batch (atomic
+          // job commit = _SUCCESS) is exactly the reference's buffer
+          // file surviving the dropped session — the restart re-emits
+          // it without re-deriving it. A partial write (no _SUCCESS)
+          // is rewritten from the replayed batch.
+          if (!Files.exists(staging.resolve("_SUCCESS"))) {
+            graft.sources.DatedWriter.writeDated(batch.toDF(), tsCol,
+              staging.toString, mode = "overwrite", filesPerDate = 1)
           }
+          if (failAtBatch.contains(batchId))
+            throw new PlantedStreamFailure(batchId)
+          // idempotent hand-off: one file per (batch, date), named by
+          // the batch id — a replayed move can only overwrite itself
+          listDir(staging)
+            .filter(p => p.getFileName.toString.startsWith("date_key=") &&
+              Files.isDirectory(p))
+            .foreach { dateDir =>
+              val dst = root.resolve(dateDir.getFileName.toString)
+              Files.createDirectories(dst)
+              val parts = listDir(dateDir)
+                .filter(_.getFileName.toString.endsWith(".parquet")).toList
+              require(parts.size <= 1,
+                s"filesPerDate=1 write produced ${parts.size} files in $dateDir")
+              parts.foreach(p => Files.move(p, dst.resolve(s"b$batchId.parquet"),
+                StandardCopyOption.REPLACE_EXISTING))
+            }
+          Files.createFile(commits.resolve(batchId.toString))
+          ()
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record("recover:" + root.getFileName.toString, q)
+      }
     } catch {
       // unwrap the StreamingQueryException shell so callers plant and
       // catch the SAME exception type
       case e: Throwable if causedByPlanted(e) => throw rootPlanted(e)
-    } finally {
-      if (silenced) PlantedLogSilence.exit()
-      releaseStateStores()
-    }
+    } finally if (silenced) PlantedLogSilence.exit()
   }
 
   /** Refcounted silencing of the stream-execution loggers around a
@@ -827,51 +820,29 @@ object StreamOps {
     c.asInstanceOf[PlantedStreamFailure]
   }
 
-  /** Stateless replay to a DISTRIBUTED file sink: the stream lands as
+  /** Replay to a DISTRIBUTED parquet file sink: the stream lands as
     * parquet (exactly-once via the file sink's commit log) and the
     * result is read back — rows never funnel through the driver. The
     * memory sink collects every output row into the driver per batch,
     * which for a high-volume row-local transform costs more than the
     * transform itself (st_positions_parse emits 2M rows at sf1 — the
     * driver collect dominated its replay); landing distributed is also
-    * the PRODUCTION shape of a parse stream (land, then read). For
-    * stateless queries only: no state stores run, so the
-    * ReplayStateParts clamp is skipped and the session parallelism
-    * rides through the sink write. Output lives under the (tmpfs)
-    * checkpoint root keyed by `name` and is cleared at the START of
-    * each run, so bench repeats never accumulate. */
+    * the PRODUCTION shape of a parse stream (land, then read). The sink
+    * write itself is distributed either way; `stateful` and `noFlush`
+    * are [[replaySession]]'s (a stateful op still wants the small
+    * state-partition count — per-partition store commits are its
+    * floor — while a stateless parse keeps the session parallelism).
+    * Sink and checkpoint live under the run root keyed by `name`,
+    * cleared at the START of each run, so bench repeats never
+    * accumulate. */
   def runToParquet(s: SparkSession, build: SparkSession => DataFrame,
-                   name: String, stateParts: Option[Int] = None,
+                   name: String, stateful: Boolean = false,
                    noFlush: Boolean = false): DataFrame = {
-    SinkAudit.record("parquet", name)
-    val out = CheckpointRoot.resolve(s"sink-$name")
-    deleteRecursive(out)
-    val ckpt = freshCheckpoint()
-    // a STATEFUL caller still wants the small state-partition count
-    // (per-partition store commits are the floor) — only the sink
-    // write itself is distributed either way. noFlush skips the
-    // trailing zero-row micro-batch under the same legality contract
-    // documented on runToMemory (output must not depend on the final
-    // watermark push — first-arrival dedup and inner joins qualify).
-    val ss = replaySession(s, stateParts.toSeq.map(p =>
-      "spark.sql.shuffle.partitions" -> p.toString) ++
-      (if (noFlush)
-        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      else Nil))
-    val df = build(ss)
-    try {
-      val q = df.writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record(name, q)
-    } finally {
-      deleteRecursive(ckpt)
-      releaseStateStores()
+    val root = runRoot("sink", name)
+    val out = root.resolve("out")
+    val df = build(replaySession(s, stateful, noFlush))
+    replay("parquet", name, df, root.resolve("ckpt"), name) {
+      _.format("parquet").option("path", out.toString).outputMode("append")
     }
     // the sink wrote exactly df's columns — reading back with that
     // schema skips a fresh-dir footer inference per run
@@ -908,32 +879,17 @@ object StreamOps {
     *
     * `openProj` maps the state read's (key, value, partition_id) rows
     * onto the aggregation's output schema. The checkpoint must outlive
-    * the returned (lazy) DataFrame, so it lives under a per-`name`
-    * root cleared at the START of the next run, like runToParquet's
-    * sink. */
+    * the returned (lazy) DataFrame, which the run root (cleared at the
+    * START of the next run) guarantees. */
   def runToParquetWithState(s: SparkSession, build: SparkSession => DataFrame,
                             name: String,
                             openProj: DataFrame => DataFrame): DataFrame = {
-    SinkAudit.record("parquet+state", name)
-    val root = CheckpointRoot.resolve(s"sinkst-$name")
-    deleteRecursive(root)
+    val root = runRoot("sinkst", name)
     val out = root.resolve("sink")
     val ckpt = root.resolve("ckpt")
-    val ss = replaySession(s, Seq(
-      "spark.sql.shuffle.partitions" -> replayStateParts(s).toString))
-    val df = build(ss)
-    try {
-      val q = df.writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record(name, q)
-    } finally {
-      releaseStateStores()
+    val df = build(replaySession(s, stateful = true, noFlush = false))
+    replay("parquet+state", name, df, ckpt, name) {
+      _.format("parquet").option("path", out.toString).outputMode("append")
     }
     val flushed = s.read.schema(df.schema).parquet(out.toString)
     val open = openProj(
@@ -962,28 +918,6 @@ object StreamOps {
       .parquet(stage.toString)
   }
 
-  /** UPDATE-mode replay of an (un-windowed) stateful aggregation into
-    * a CDC-style DELTA sink, merged on read.
-    *
-    * Each micro-batch appends ONLY the aggregate rows it changed,
-    * stamped with the batch id, under a deterministic per-batch path —
-    * foreachBatch is at-least-once, so a recovered batch overwrites
-    * its own directory instead of duplicating (the st_recover_buffered
-    * commit discipline). The merged view — latest batch's row per key —
-    * IS the running aggregate, materialized by merge-on-read instead
-    * of rewriting the artifact per batch: a batch's write cost is
-    * O(keys changed in the batch), never O(all keys), which is what
-    * lets a continuous corpus maintain its keep-list incrementally at
-    * 100 TB (a production delta sink compacts periodically; the
-    * merge-on-read window here is that compaction, paid once at read
-    * time). Complete mode would re-emit every key every batch; append
-    * mode never re-emits an updated aggregate at all — update is the
-    * only output mode whose emission volume tracks the CHANGE stream.
-    *
-    * The final merged result is batch-boundary independent whenever
-    * the aggregate's merge is commutative (counts, min/max, sums) —
-    * the state store applies the same merge regardless of how the
-    * backlog was sliced; the spec pins 1-slice ≡ 4-slice. */
   /** Drained-union read-back over the per-batch sink dirs: EXPLICIT
     * dir paths with the already-known schema, not a glob. A glob makes
     * DataFrameReader probe the literal glob string as a potential
@@ -1006,30 +940,38 @@ object StreamOps {
     s.read.schema(schema).parquet(dirs.toIndexedSeq: _*)
   }
 
+  /** UPDATE-mode replay of an (un-windowed) stateful aggregation into
+    * a CDC-style DELTA sink, merged on read.
+    *
+    * Each micro-batch appends ONLY the aggregate rows it changed,
+    * stamped with the batch id, under a deterministic per-batch path —
+    * foreachBatch is at-least-once, so a recovered batch overwrites
+    * its own directory instead of duplicating (the st_recover_buffered
+    * commit discipline). The merged view — latest batch's row per key —
+    * IS the running aggregate, materialized by merge-on-read instead
+    * of rewriting the artifact per batch: a batch's write cost is
+    * O(keys changed in the batch), never O(all keys), which is what
+    * lets a continuous corpus maintain its keep-list incrementally at
+    * 100 TB (a production delta sink compacts periodically; the
+    * merge-on-read window here is that compaction, paid once at read
+    * time). Complete mode would re-emit every key every batch; append
+    * mode never re-emits an updated aggregate at all — update is the
+    * only output mode whose emission volume tracks the CHANGE stream.
+    *
+    * The final merged result is batch-boundary independent whenever
+    * the aggregate's merge is commutative (counts, min/max, sums) —
+    * the state store applies the same merge regardless of how the
+    * backlog was sliced; the spec pins 1-slice ≡ 4-slice. */
   def runUpdateDeltas(s: SparkSession, build: SparkSession => DataFrame,
                       name: String, keyCols: Seq[String]): DataFrame = {
-    SinkAudit.record("delta", name)
-    val root = CheckpointRoot.resolve(s"delta-$name")
-    deleteRecursive(root)
-    val ckpt = root.resolve("ckpt")
-    val ss = replaySession(s, Seq(
-      "spark.sql.shuffle.partitions" -> replayStateParts(s).toString))
-    val df = build(ss)
-    try {
-      val q = df.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          b.withColumn("__batch", lit(id))
-            .write.mode("overwrite")
-            .parquet(root.resolve(f"delta-b$id%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record(name, q)
-    } finally {
-      releaseStateStores()
+    val root = runRoot("delta", name)
+    val df = build(replaySession(s, stateful = true, noFlush = false))
+    replay("delta", name, df, root.resolve("ckpt"), name) {
+      _.outputMode("update").foreachBatch { (b: Dataset[Row], id: Long) =>
+        b.withColumn("__batch", lit(id))
+          .write.mode("overwrite")
+          .parquet(root.resolve(f"delta-b$id%05d").toString)
+      }
     }
     val deltas = readBatchDirs(s, root, "delta-b",
       df.schema.add("__batch", LongType))
@@ -1060,26 +1002,18 @@ object StreamOps {
     * session parallelism. */
   def runBatchTransforms(s: SparkSession, df: DataFrame, name: String)
                         (f: DataFrame => DataFrame): DataFrame = {
-    SinkAudit.record("batch-deltas", name)
-    val root = CheckpointRoot.resolve(s"fb-$name")
-    deleteRecursive(root)
-    val ckpt = root.resolve("ckpt")
+    val root = runRoot("fb", name)
     // the transform's output schema, captured from the first batch's
     // plan so the drain read never infers footers (readBatchDirs)
     @volatile var outSchema: StructType = null
-    val q = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+    replay("batch-deltas", name, df, root.resolve("ckpt"), name) {
+      _.outputMode("append").foreachBatch { (b: Dataset[Row], id: Long) =>
         val out = f(b)
         if (outSchema == null) outSchema = out.schema
         out.write.mode("overwrite")
           .parquet(root.resolve(f"out-b$id%05d").toString)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ReplayMetrics.record(name, q)
+    }
     readBatchDirs(s, root, "out-b", outSchema)
   }
 
@@ -1095,35 +1029,18 @@ object StreamOps {
     * the price of re-emission, not of this sink; append-mode variants
     * (runToParquetWithState) are the shape when that price is too high.
     *
-    * `noFlush` legality is as documented on [[runToMemory]]: complete
-    * mode re-emits the full result every batch, so the trailing
-    * zero-row batch can only rewrite an identical snapshot. */
+    * Always `noFlush` ([[replaySession]]): complete mode re-emits the
+    * full result every batch, so the trailing zero-row batch could only
+    * rewrite an identical snapshot. */
   def runCompleteSnapshot(s: SparkSession, build: SparkSession => DataFrame,
-                          name: String, noFlush: Boolean = false): DataFrame = {
-    SinkAudit.record("snapshot", name)
-    val root = CheckpointRoot.resolve(s"snap-$name")
-    deleteRecursive(root)
-    val ckpt = root.resolve("ckpt")
+                          name: String): DataFrame = {
+    val root = runRoot("snap", name)
     val out = root.resolve("snapshot")
-    val ss = replaySession(s, Seq("spark.sql.shuffle.partitions" ->
-      replayStateParts(s).toString) ++
-      (if (noFlush)
-        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      else Nil))
-    val df = build(ss)
-    try {
-      val q = df.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("overwrite").parquet(out.toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record(name, q)
-    } finally {
-      releaseStateStores()
+    val df = build(replaySession(s, stateful = true, noFlush = true))
+    replay("snapshot", name, df, root.resolve("ckpt"), name) {
+      _.outputMode("complete").foreachBatch { (b: Dataset[Row], _: Long) =>
+        b.write.mode("overwrite").parquet(out.toString)
+      }
     }
     s.read.schema(df.schema).parquet(out.toString)
   }
@@ -1132,9 +1049,9 @@ object StreamOps {
     * name — the evidence base for the registry sink-discipline lint
     * (RegistryPlanLintSpec): a registered streaming query must land
     * distributed; the driver-collecting memory sink is probe/test-only.
-    * Recording at the harness entry points (not in the queries) means
-    * a future query wired to the wrong sink is caught by construction,
-    * not by review. */
+    * Recording in [[replay]], the one lifecycle every runner shares
+    * (not in the queries), means a future query wired to the wrong
+    * sink is caught by construction, not by review. */
   object SinkAudit {
     private val uses = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def record(kind: String, name: String): Unit = { uses.add(s"$kind:$name"); () }
@@ -1145,56 +1062,17 @@ object StreamOps {
     def clear(): Unit = uses.clear()
   }
 
-  /** Runs a finite streaming query to a memory sink and returns the
-    * sink table. AvailableNow processes the full backlog then stops —
-    * the batch-replay harness for stream operators.
-    *
-    * After termination the run's state store providers are unloaded
-    * eagerly: each run writes to a fresh temp checkpoint, so its
-    * providers (holding the full join/agg state maps in executor
-    * memory) can never be reused, yet the maintenance thread only
-    * evicts them on its 60 s cycle — across a many-query suite that
-    * retained state compounds into GC pressure that shows up as
-    * multi-second variance in UNRELATED queries. The unload is safe
-    * because the harness never runs two streams concurrently.
-    *
-    * `noFlush = true` skips the trailing ZERO-ROW micro-batch Spark
-    * appends to a stateful replay (noDataMicroBatches — it advances
-    * the watermark so evictions/timeouts fire), measured at 0.5-0.7 s
-    * of state-scan + store commits per replay. Only legal where that
-    * batch cannot add OUTPUT rows: complete-mode aggregations re-emit
-    * the full result every batch (the no-data pass re-emits an
-    * identical table), and watermarked INNER joins emit matches in the
-    * batch the rows arrive (eviction only trims state). Queries whose
-    * RESULTS need the watermark push — append-mode windowed aggs,
-    * outer joins, flatMapGroupsWithState event-time timeouts — must
-    * keep the default. The DuckDB-hash gate pins that every noFlush
-    * adopter is row-identical to the batch oracle. */
+  /** Runs a finite stateful streaming query to a memory sink in output
+    * `mode` and returns the sink table. AvailableNow processes the full
+    * backlog then stops — the batch-replay harness for stream
+    * operators, probe/test-only (see [[SinkAudit]]). */
   def runToMemory(s: SparkSession, build: SparkSession => DataFrame,
-                  name: String, mode: String,
-                  noFlush: Boolean = false): DataFrame = {
-    SinkAudit.record("memory", name)
-    val sets = Seq("spark.sql.shuffle.partitions" ->
-      replayStateParts(s).toString) ++
-      (if (noFlush)
-        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      else Nil)
-    val ss = replaySession(s, sets)
+                  name: String, mode: String): DataFrame = {
+    val root = runRoot("mem", name)
+    val ss = replaySession(s, stateful = true, noFlush = false)
     val df = build(ss)
-    val ckpt = freshCheckpoint()
-    try {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ReplayMetrics.record(name, q)
-    } finally {
-      deleteRecursive(ckpt)
-      releaseStateStores()
+    replay("memory", name, df, root.resolve("ckpt"), name) {
+      _.format("memory").queryName(name).outputMode(mode)
     }
     // the memory sink registers its table in the session that ran the
     // query — the child's catalog

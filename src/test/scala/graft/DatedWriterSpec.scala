@@ -122,6 +122,46 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(java.nio.file.Files.exists(dir.resolve("precious.parquet")))
   }
 
+  /** A one-row stream for the recoverable replay's refusal cases, which
+    * refuse before the stream ever starts. */
+  private def oneRowStream() = {
+    val src = Seq(day(1, 1L)).toDF("id", "ts")
+    val stage = java.nio.file.Files.createTempDirectory("datedsrc3").toString
+    src.coalesce(1).write.mode("overwrite").parquet(stage)
+    spark.readStream.schema(src.schema).parquet(stage)
+  }
+
+  test("runToDatedRecoverable(fresh) refuses to clear an unmarked non-empty directory") {
+    import java.nio.file.Files
+    // shaped like a zone but unmarked: runToDated would clear it, the
+    // fresh recoverable clear demands the marker
+    val dir = Files.createTempDirectory("unmarked")
+    Files.createDirectory(dir.resolve("date_key=20240101"))
+    val ckpt = Files.createTempDirectory("recoverckpt2").toString
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.StreamOps.runToDatedRecoverable(spark, oneRowStream(),
+        "ts", dir.toString, ckpt, fresh = true)
+    }
+    assert(e.getMessage.contains("refusing to clear"))
+    assert(Files.isDirectory(dir.resolve("date_key=20240101")))
+    assert(!Files.exists(dir.resolve(graft.streaming.StreamOps.DatedZoneMarker)))
+  }
+
+  test("runToDatedRecoverable refuses to adopt a directory that is not a landing zone") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("notazone2")
+    Files.writeString(dir.resolve("precious.parquet"), "data")
+    val ckpt = Files.createTempDirectory("recoverckpt3").toString
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.StreamOps.runToDatedRecoverable(spark, oneRowStream(),
+        "ts", dir.toString, ckpt)
+    }
+    assert(e.getMessage.contains("refusing to adopt"))
+    assert(Files.readString(dir.resolve("precious.parquet")) === "data")
+    // the marker that would arm a later clear was never planted
+    assert(!Files.exists(dir.resolve(graft.streaming.StreamOps.DatedZoneMarker)))
+  }
+
   test("compactDated: files per date drop to the target, rows identical, bookkeeping kept") {
     import scala.jdk.CollectionConverters._
     val dir = freshDir()
