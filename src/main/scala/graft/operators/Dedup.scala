@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.plans.SimHash64
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,21 +23,18 @@ object Dedup {
     df.groupBy(TextFunctions.fingerprint(col(textCol)).as("fp"))
       .agg(count(lit(1)).as("n_docs"), min(idCol).as("keep_id"))
 
-  /** Word-shingle sets with sizes: (id, sh, sz). The input is spread
+  /** Word-shingle sets with sizes: (__id, sh, sz). The input is spread
     * across the cluster FIRST: a single-split source file would
     * otherwise run all tokenize/shingle/hash work on one core — the
     * narrow-row repartition is far cheaper than the serial scan. */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingleSets(df, idCol, textCol, n)
-
-  private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int) =
     Par.spread(df.select(col(idCol).as("__id"), col(textCol).as("__text")))
       .select(col("__id"), TextFunctions.shingleSet(col("__text"), n).as("sh"))
       .withColumn("sz", size(col("sh")).cast("long"))
 
   /** (__id, hs, sz) from a [[shingles]] frame — ONE xxhash64 pass over
-    * the shingle strings. Every downstream consumer (inverted-index
-    * joins, MinHash signatures, candidate verification) works on the
+    * the shingle strings. Its consumers (the incremental inverted-index
+    * join, MinHash signatures, candidate verification) work on the
     * packed long arrays: stage this frame once and the string bytes
     * are never touched again. */
   def hashShingles(sh: DataFrame): DataFrame =
@@ -46,7 +43,7 @@ object Dedup {
 
   /** Verifies candidate (a_id, b_id) pairs with the Jaccard over the
     * full HASHED shingle sets — exact up to 64-bit collisions (see
-    * [[jaccardPairsFromShingles]]). */
+    * [[jaccardPairs]]). */
   private def verifyPairs(cand: DataFrame, hsh: DataFrame,
                           threshold: Double): DataFrame =
     cand
@@ -58,195 +55,31 @@ object Dedup {
       .filter(col("jac") >= threshold)
       .select("a_id", "b_id", "shared", "jac")
 
-  /** Exact n-gram Jaccard pairs >= threshold via a shared-shingle
-    * inverted index: explode distinct shingles, self-join on the shingle
-    * (one hash shuffle), count shared shingles per pair, then Jaccard
-    * from |A|+|B|-shared. Pairs sharing no shingle never materialize.
-    *
-    * maxDf drops shingles appearing in more than maxDf docs from the
-    * INDEX — at corpus scale a stop-shingle otherwise creates a
-    * quadratic bucket. With the cap active, the index only GENERATES
-    * candidates (counting shared shingles there would undercount), and
-    * each candidate is re-verified on its full shingle sets; pairs
-    * whose every shared shingle is capped are missed by construction —
-    * that is the documented recall trade of the cap. maxDf <= 0 is the
-    * exact path. */
-  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int, threshold: Double, maxDf: Long = 0): DataFrame =
-    jaccardPairsFromShingles(shingleSets(df, idCol, textCol, n),
-      threshold, maxDf)
-
-  /** [[jaccardPairs]] over precomputed [[shingles]] — callers holding a
-    * materialized shingle frame (e.g. a query plus its exact audit)
-    * skip the tokenize+shingle pass entirely.
-    *
-    * The inverted-index join keys on xxhash64(shingle), not the shingle
-    * string: the exchange carries fixed 8-byte longs instead of ~30-byte
-    * UTF8 n-grams (the shuffle payload is the dominant cost of the
-    * index join), and long equality beats string compare in the join
-    * itself. Shared-shingle counts are exact up to 64-bit collisions —
-    * two DIFFERENT shingles of the SAME candidate pair colliding, a
-    * ~2^-64-per-pair event that standard shingle-hashing dedup
-    * (Broder) accepts by construction. */
-  def jaccardPairsFromShingles(sh: DataFrame, threshold: Double,
-                               maxDf: Long = 0): DataFrame =
-    jaccardPairsFromHashes(hashShingles(sh), threshold, maxDf)
-
   /** The inverted shingle index: one (doc, set-size, hashed-shingle)
     * row per shingle occurrence. Staged callers repartition this by
     * `sg` and checkpoint it ONCE — the checkpointed Dataset preserves
-    * its hash partitioning, so every downstream pair join on `sg`
-    * (self-join, incremental new-vs-old, candidate generation) runs
-    * WITHOUT re-exchanging the index: the one artifact a dedup
-    * pipeline shares across its whole query family. */
+    * its hash partitioning, so the incremental new-vs-old join on `sg`
+    * ([[jaccardPairsAcrossIndex]]) runs WITHOUT re-exchanging the
+    * index. */
   def invertedIndex(hsh: DataFrame): DataFrame =
     hsh.select(col("__id"), col("sz"), explode(col("hs")).as("sg"))
 
-  /** [[jaccardPairsFromShingles]] over a pre-hashed [[hashShingles]]
-    * frame — callers that stage the hashed arrays skip the per-run
-    * string hashing pass entirely. */
-  def jaccardPairsFromHashes(hsh: DataFrame, threshold: Double,
-                             maxDf: Long = 0): DataFrame = {
-    val ex0 = invertedIndex(hsh)
-    if (maxDf <= 0) jaccardPairsFromIndex(ex0, threshold)
-    else {
-      val dfCounts = ex0.groupBy("sg").agg(count(lit(1)).as("__df"))
-      val ex = ex0.join(dfCounts.filter(col("__df") <= maxDf), "sg")
-      val cand = ex.select(col("__id").as("a_id"), col("sg"))
-        .join(ex.select(col("__id").as("b_id"), col("sg")), Seq("sg"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      verifyPairs(cand, hsh, threshold)
-    }
-  }
-
-  /** The exact-Jaccard self-join over a (possibly pre-partitioned)
-    * [[invertedIndex]] frame. The per-pair match count over ALL
-    * shingles IS the intersection size — no second pass needed. The
-    * size-ratio prefilter is lossless for the threshold: jac >= t
-    * forces min(|A|,|B|) >= t * max(|A|,|B|) (shared <= min and
-    * shared >= t/(1+t)*(|A|+|B|)), so mismatched-size pairs drop
-    * BEFORE the aggregation instead of after. */
-  def jaccardPairsFromIndex(idx: DataFrame, threshold: Double): DataFrame = {
-    val a = idx.select(col("__id").as("a_id"), col("sz").as("a_sz"), col("sg"))
-    val b = idx.select(col("__id").as("b_id"), col("sz").as("b_sz"), col("sg"))
-    a.join(b, Seq("sg"))
-      .filter(col("a_id") < col("b_id") &&
-        col("a_sz") >= lit(threshold) * col("b_sz") &&
-        col("b_sz") >= lit(threshold) * col("a_sz"))
-      .groupBy("a_id", "b_id", "a_sz", "b_sz")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jac",
-        col("shared").cast("double") / (col("a_sz") + col("b_sz") - col("shared")))
-      .filter(col("jac") >= threshold)
-      .select("a_id", "b_id", "shared", "jac")
-  }
-
-  /** Exact Jaccard pairs via PREFIX-FILTERED candidate generation
-    * (the AllPairs prefix filter, Bayardo et al., WWW'07): under any
-    * global total order on shingles — the xxhash64 value itself here —
-    * a pair with jac >= t must share one of the FIRST
-    * `|X| - ceil(t*|X|) + 1` elements of each of its sets. Proof
-    * shape: jac >= t with the (lossless) size-ratio bound forces
-    * overlap >= t*|X| for both sets, and the smallest SHARED element
-    * sits at position <= |X| - overlap + 1 in each — inside both
-    * prefixes. So indexing only the prefix (~(1-t) of each set; 20 %
-    * at t=0.8) keeps EVERY qualifying pair while the candidate join's
-    * output shrinks quadratically (~(1-t)^2 — measured 1.40 M -> 56 k
-    * pair rows at sf0.1). Candidates are then verified EXACTLY on the
-    * full hashed sets, so the result is identical to
-    * [[jaccardPairsFromIndex]], row for row.
-    *
-    * Scale: the prefix index is the only exploded frame (25x smaller
-    * than the full inverted index at t=0.8), the candidate set after
-    * the prefix+size filters is near-linear in the true pair count,
-    * and verification joins the tiny candidate list back to the
-    * packed arrays — AQE broadcasts it at any realistic duplicate
-    * rate. Stop-shingle caps are unnecessary: a shingle must be in a
-    * set's rarest-(1-t) tail of the hash order to enter the index at
-    * all, and the quadratic bucket risk moves from "most common
-    * shingle" to "most common PREFIX shingle", 25x rarer. */
-  def jaccardPairsPrefix(hsh: DataFrame, threshold: Double): DataFrame =
-    jaccardPairsPrefixRaw(hsh, threshold).dropDuplicates()
-
-  /** [[jaccardPairsPrefix]] WITHOUT the final dedup: one output row per
-    * (qualifying pair, shared prefix shingle) — the full arrays ride
-    * the candidate join so verification is computed in-row with no
-    * join back to the corpus (a second scan+shingle derivation
-    * otherwise). Rows for the same pair are identical, so callers
-    * dedup with a plain distinct wherever their deliverable lives —
-    * the small-deliverable queries fuse it into their one-partition
-    * sort and finish with a single exchange. */
-  /** AllPairs prefix index: the first sz − ceil(sz·t) + 1 entries of a
-    * corpus-wide-consistently-sorted shingle array (greatest(1, ...)
-    * keeps single-shingle docs indexed — their prefix IS the whole
-    * set). ONE definition: this formula is the recall proof obligation
-    * of every prefix-filtered jaccard variant; a change must not have
-    * to find three copies (r18 review finding). */
-  private def prefixExplode(threshold: Double): Column =
-    explode(slice(col("hs"), lit(1), greatest(lit(1),
-      (col("sz") - ceil(col("sz") * threshold) + 1).cast("int")))).as("sg")
-
-  def jaccardPairsPrefixRaw(hsh: DataFrame, threshold: Double): DataFrame = {
-    // the global order must be consistent corpus-wide: sort each
-    // packed array once and slice its head. greatest(1, ...) keeps
-    // single-shingle docs indexed (their prefix IS the whole set).
-    val pre = hsh
-      .select(col("__id"), col("sz"), array_sort(col("hs")).as("hs"))
-      .select(col("__id"), col("sz"), col("hs"),
-        prefixExplode(threshold))
-    val a = pre.select(col("__id").as("a_id"), col("sz").as("a_sz"),
-      col("hs").as("hs_a"), col("sg")).hint("shuffle_hash")
-    val b = pre.select(col("__id").as("b_id"), col("sz").as("b_sz"),
-      col("hs").as("hs_b"), col("sg"))
-    a.join(b, Seq("sg"))
-      .filter(col("a_id") < col("b_id") &&
-        col("a_sz") >= lit(threshold) * col("b_sz") &&
-        col("b_sz") >= lit(threshold) * col("a_sz"))
-      .withColumn("shared",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .withColumn("jac",
-        col("shared").cast("double") / (col("a_sz") + col("b_sz") - col("shared")))
-      .filter(col("jac") >= threshold)
-      .select("a_id", "b_id", "shared", "jac")
-  }
-
-  /** [[jaccardPairsPrefixRaw]] straight from the documents frame, with
-    * the whole per-doc chain — tokenize → shingle → string-dedup →
-    * xxhash64 → sort — FUSED into one codegen expression per side
-    * (plans.SortedShingleHashes): the unfused chain materializes the
-    * string array, re-walks it to hash, then sorts through
-    * `array_sort`, whose comparator lambda the engine evaluates
-    * INTERPRETED per element pair; and because the self-join computes
-    * its lineage on both sides, every per-pass saving lands twice.
-    * Candidate verification walks the two sorted arrays with a merge
-    * intersect (plans.SortedIntersectCount) instead of
-    * array_intersect's per-pair hash set. Rows identical to
-    * [[jaccardPairsPrefixRaw]] ∘ [[hashShingles]] ∘ [[shingles]]
-    * (asserted in DedupSpec) up to the already-documented 64-bit
-    * collision regime.
-    *
-    * The self-join consumes ONE shared exchange: both sides project
-    * off the same `repartition(sg)` node, so AQE's stage reuse ships
-    * the exploded prefix frame (and computes the fused chain) exactly
-    * once — the raw two-sided shape pays both twice because its
-    * per-side aliasing breaks exchange canonicalization. Verified at
-    * runtime (ReusedExchange in the adaptive plan; DedupSpec pins row
-    * identity). */
   /** Detects the corpus's STOP SHINGLES — the bounded hot list
-    * [[jaccardPairsPrefixFromText]] excludes from prefixes — on a
-    * deterministic 1-in-`sampleMod` document sample: shingles whose
-    * sampled document frequency exceeds `floorMult`× the sampled mean,
-    * hottest capped at `cap` entries, returned coldest-first (the
-    * hot-segment order of the prefix proof; ties by hash). Accuracy
-    * only affects PERFORMANCE — the prefix order stays exact for any
-    * list — so a cheap sample suffices: a quadratic bucket is by
-    * definition frequent enough to be sampled. On a uniform corpus no
-    * shingle clears the floor and the list comes back empty (= the
-    * unchanged fast plan). At 100 TB this list is a published corpus
-    * artifact built by the same pipeline that owns the dedup index
-    * (the ss_ivf_topk quantizer discipline); size it by a df floor,
-    * which bounds every remaining bucket. */
+    * [[jaccardPairs]] excludes from prefixes — on a deterministic
+    * 1-in-`sampleMod` document sample: shingles whose sampled document
+    * frequency exceeds `floorMult`× the sampled mean, hottest capped at
+    * `cap` entries, returned coldest-first (the hot-segment order of
+    * the prefix proof; ties by hash). Accuracy only affects
+    * PERFORMANCE — the prefix order stays exact for any list — so a
+    * cheap sample suffices: a quadratic bucket is by definition
+    * frequent enough to be sampled. On a uniform corpus no shingle
+    * clears the floor and the list comes back empty (= the unchanged
+    * fast plan); a sample with no shingles at all (an empty corpus,
+    * or one whose sampled docs are all shorter than `n` tokens) has no
+    * mean and returns empty too. At 100 TB this list is a published
+    * corpus artifact built by the same pipeline that owns the dedup
+    * index (the ss_ivf_topk quantizer discipline); size it by a df
+    * floor, which bounds every remaining bucket. */
   def hotShingles(df: DataFrame, idCol: String, textCol: String, n: Int,
                   sampleMod: Int = 10, floorMult: Double = 4.0,
                   cap: Int = 4096): Seq[Long] = {
@@ -256,50 +89,101 @@ object Dedup {
         graft.plans.SortedShingleHashes(col(textCol), n),
         array().cast("array<long>"))).as("sg"))
     val dfc = sampled.groupBy("sg").agg(count(lit(1)).as("__df"))
-    val meanDf = dfc.agg(avg("__df")).collect()(0).getDouble(0)
-    if (meanDf.isNaN) return Nil
-    val floor = floorMult * meanDf
+    // avg over zero rows is NULL, not NaN
+    val mean = dfc.agg(avg("__df")).collect()(0)
+    if (mean.isNullAt(0)) return Nil
+    val floor = floorMult * mean.getDouble(0)
     dfc.filter(col("__df") > floor)
       .orderBy(desc("__df"), col("sg")).limit(cap)
       .collect().map(r => (r.getLong(1), r.getLong(0)))
       .sortBy(identity).map(_._2).toSeq
   }
 
-  /** `selfJoinParts`: explicit partition count for the prefix
-    * self-join's shared exchange. The join is shuffle_hash-hinted (the
-    * measured win over sort-merge at bench scale) and an SHJ build
-    * side cannot spill — the build rows carry the full packed shingle
-    * arrays, so per-partition build bytes grow linearly with corpus
-    * while the session's shuffle-partition constant does not: the sf10
-    * rehearsal failed here with "Can't acquire … bytes to build hash
-    * relation" at the default heap (guide §3.1's documented SHJ risk).
-    * Callers above bench scale pass a corpus-derived count
-    * (DedupQueries sizes it from the staged doc count) so build sides
-    * stay bounded; None keeps the session default — the plan below the
-    * threshold is byte-identical to r18. */
-  def jaccardPairsPrefixFromText(df: DataFrame, idCol: String, textCol: String,
-                                 n: Int, threshold: Double,
-                                 hot: Seq[Long] = Nil,
-                                 selfJoinParts: Option[Int] = None): DataFrame = {
+  /** Exact n-gram Jaccard pairs >= threshold — the one self-join every
+    * exact pair graph goes through. Output is RAW: one row per
+    * (qualifying pair, shared prefix shingle), identical across a
+    * pair's rows, so callers dedup with a plain distinct wherever their
+    * deliverable lives (dd_ngram_jaccard fuses it into its
+    * one-partition sort and finishes with a single exchange).
+    *
+    * Candidates come from the AllPairs prefix filter (Bayardo et al.,
+    * WWW'07): under any global total order on shingles — the xxhash64
+    * value itself here — a pair with jac >= t must share one of the
+    * FIRST `|X| - ceil(t*|X|) + 1` elements of each of its sets. Proof
+    * shape: jac >= t forces overlap >= t*|A∪B| >= t*|X| for both sets
+    * X, and the smallest SHARED element sits at position
+    * <= |X| - overlap + 1 in each — inside both prefixes. The same
+    * bound makes the size-ratio prefilter lossless: jac >= t forces
+    * min(|A|,|B|) >= t * max(|A|,|B|). So indexing
+    * only the prefix (~(1-t) of each set; 20 % at t=0.8) keeps EVERY
+    * qualifying pair while the candidate join's output shrinks
+    * quadratically against a full inverted-index self-join (~(1-t)^2 —
+    * measured 1.40 M -> 56 k pair rows at sf0.1). Candidates are then
+    * verified EXACTLY on the full hashed sets.
+    *
+    * Scale: the prefix index is the only exploded frame (25x smaller
+    * than the full inverted index at t=0.8), the candidate set after
+    * the prefix+size filters is near-linear in the true pair count,
+    * and verification runs in-row on the arrays the candidate join
+    * carries — no join back to the corpus.
+    *
+    * The per-doc chain — tokenize → shingle → string-dedup → xxhash64
+    * → sort — is FUSED into one codegen expression
+    * (plans.SortedShingleHashes): the unfused chain materializes the
+    * string array, re-walks it to hash, then sorts through
+    * `array_sort`, whose comparator lambda the engine evaluates
+    * INTERPRETED per element pair. Verification walks the two sorted
+    * arrays with a merge intersect (plans.SortedIntersectCount)
+    * instead of array_intersect's per-pair hash set. Sets are keyed on
+    * xxhash64(shingle), not the string: shared counts are exact up to
+    * 64-bit collisions — two DIFFERENT shingles of the SAME candidate
+    * pair colliding, a ~2^-64-per-pair event that standard
+    * shingle-hashing dedup (Broder) accepts by construction. DedupSpec
+    * pins the rows against a brute-force all-pairs Jaccard.
+    *
+    * The self-join consumes ONE shared exchange: both sides project
+    * off the same `repartition(sg)` node, so AQE's stage reuse ships
+    * the exploded prefix frame (and computes the fused chain) exactly
+    * once — a two-sided shape pays both twice because its per-side
+    * aliasing breaks exchange canonicalization (ReusedExchange in the
+    * adaptive plan; PlanShapeSpec pins it).
+    *
+    * `hot` swaps the prefix's global order for stop-shingle-last
+    * (plans.PrefixSkipHot, list from [[hotShingles]]): recall-identical
+    * by the proof above (any corpus-consistent total order), but a
+    * corpus-hot shingle no longer lands in every containing doc's
+    * prefix — the quadratic bucket a zipf corpus otherwise sends the
+    * candidate join (measured: 4.1M -> ~60 candidate rows on the zipf
+    * sf1 clone). An empty list keeps the plan literally unchanged.
+    *
+    * `selfJoinParts`: explicit partition count for the shared
+    * exchange. The join is shuffle_hash-hinted (the measured win over
+    * sort-merge at bench scale) and an SHJ build side cannot spill —
+    * the build rows carry the full packed shingle arrays, so
+    * per-partition build bytes grow linearly with corpus while the
+    * session's shuffle-partition constant does not: the sf10 rehearsal
+    * failed here with "Can't acquire … bytes to build hash relation"
+    * at the default heap (guide §3.1's documented SHJ risk). Callers
+    * above bench scale pass a corpus-derived count (DedupQueries sizes
+    * it from the staged doc count) so build sides stay bounded; None
+    * keeps the session default. */
+  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                   n: Int, threshold: Double,
+                   hot: Seq[Long] = Nil,
+                   selfJoinParts: Option[Int] = None): DataFrame = {
     val hs = Par.spread(df.select(col(idCol).as("__id"), col(textCol).as("__text")))
       .select(col("__id"),
         coalesce(graft.plans.SortedShingleHashes(col("__text"), n),
           array().cast("array<long>")).as("hs"))
       .withColumn("sz", size(col("hs")).cast("long"))
-    // `hot` swaps the prefix's global order for stop-shingle-last
-    // (plans.PrefixSkipHot): recall-identical by the AllPairs proof
-    // (any corpus-consistent total order), but a corpus-hot shingle no
-    // longer lands in every containing doc's prefix — the quadratic
-    // bucket a zipf corpus otherwise sends the candidate join
-    // (measured: 4.1M -> ~60 candidate rows on the zipf sf1 clone).
-    // Empty list keeps the plan literally unchanged.
-    val prefixCol =
-      if (hot.isEmpty) prefixExplode(threshold)
-      else explode(graft.plans.PrefixSkipHot(col("hs"),
-        greatest(lit(1),
-          (col("sz") - ceil(col("sz") * threshold) + 1).cast("int")),
-        hot)).as("sg")
-    val pre = hs.select(col("__id"), col("sz"), col("hs"), prefixCol)
+    // the recall proof's prefix length; greatest(1, ...) keeps
+    // single-shingle docs indexed (their prefix IS the whole set)
+    val prefixLen = greatest(lit(1),
+      (col("sz") - ceil(col("sz") * threshold) + 1).cast("int"))
+    val prefix =
+      if (hot.isEmpty) slice(col("hs"), lit(1), prefixLen)
+      else graft.plans.PrefixSkipHot(col("hs"), prefixLen, hot)
+    val pre = hs.select(col("__id"), col("sz"), col("hs"), explode(prefix).as("sg"))
     val ex = selfJoinParts match {
       case Some(p) => pre.repartition(p, col("sg"))
       case None => pre.repartition(col("sg"))
@@ -320,11 +204,17 @@ object Dedup {
       .select("a_id", "b_id", "shared", "jac")
   }
 
-  /** [[jaccardPairsAcrossHashes]] over (possibly pre-partitioned)
-    * [[invertedIndex]] frames — the incremental shape reading the
-    * staged index: only (new, old) pairs sharing a shingle
-    * materialize, and a co-partitioned index joins with no
-    * exchange. */
+  /** Cross-corpus exact Jaccard pairs over (possibly pre-partitioned)
+    * [[invertedIndex]] frames: each LEFT (new-batch) doc against the
+    * RIGHT (historical) corpus — the INCREMENTAL dedup shape. A daily
+    * batch arriving on a 100 TB corpus must never rescore old-vs-old
+    * pairs; here only (new, old) pairs sharing a shingle materialize,
+    * so the per-batch cost is proportional to the batch, not the
+    * corpus square, and a co-partitioned staged index joins with no
+    * exchange. The per-pair match count over ALL shingles IS the
+    * intersection size; the size-ratio prefilter is lossless for the
+    * threshold (see [[jaccardPairs]]), so mismatched-size pairs drop
+    * BEFORE the aggregation. */
   def jaccardPairsAcrossIndex(idxNew: DataFrame, idxOld: DataFrame,
                               threshold: Double): DataFrame = {
     // build side = the BATCH index (bounded by the ingest window),
@@ -346,52 +236,16 @@ object Dedup {
       .select("new_id", "old_id", "shared", "jac")
   }
 
-  /** Cross-corpus exact Jaccard pairs: each LEFT (new-batch) doc
-    * against the RIGHT (historical) corpus through the same
-    * inverted-shingle index — the INCREMENTAL dedup shape. A daily
-    * batch arriving on a 100 TB corpus must never rescore
-    * old-vs-old pairs; here only (new, old) pairs sharing a shingle
-    * materialize, so the per-batch cost is proportional to the batch,
-    * not the corpus square. Same lossless size-ratio prefilter as the
-    * self-join variant. */
-  def jaccardPairsAcrossShingles(shNew: DataFrame, shOld: DataFrame,
-                                 threshold: Double): DataFrame =
-    jaccardPairsAcrossHashes(hashShingles(shNew), hashShingles(shOld),
-      threshold)
-
-  /** [[jaccardPairsAcrossShingles]] over pre-hashed [[hashShingles]]
-    * frames: the exchange carries fixed 8-byte longs instead of
-    * ~30-byte UTF8 n-grams, and staged callers skip the string-hash
-    * pass per run. */
-  def jaccardPairsAcrossHashes(hNew: DataFrame, hOld: DataFrame,
-                               threshold: Double): DataFrame =
-    jaccardPairsAcrossIndex(invertedIndex(hNew), invertedIndex(hOld),
-      threshold)
-
-  /** MinHash + LSH near-dup pairs: k-hash signatures, b bands; docs
-    * sharing any band bucket become candidates (buckets larger than
-    * maxBucket are dropped — degenerate-key guard); candidates are then
-    * verified with the EXACT Jaccard on their full shingle sets. */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      n: Int, k: Int, bands: Int, threshold: Double,
-                      maxBucket: Long = 1000): DataFrame =
-    minhashLshPairsFromShingles(shingleSets(df, idCol, textCol, n),
-      k, bands, threshold, maxBucket)
-
-  /** [[minhashLshPairs]] over precomputed [[shingles]]. */
-  def minhashLshPairsFromShingles(sh0: DataFrame, k: Int, bands: Int,
-                                  threshold: Double,
-                                  maxBucket: Long = 1000): DataFrame =
-    minhashLshPairsFromHashes(hashShingles(sh0), k, bands, threshold,
-      maxBucket)
-
-  /** [[minhashLshPairs]] over a pre-hashed [[hashShingles]] frame: the
-    * string bytes were hashed exactly once at staging; the k
-    * permutations re-hash the longs, and candidate verification runs
-    * on the hashed sets. */
-  def minhashLshPairsFromHashes(hsh0: DataFrame, k: Int, bands: Int,
-                                threshold: Double,
-                                maxBucket: Long = 1000): DataFrame = {
+  /** MinHash + LSH near-dup pairs over a [[hashShingles]] frame: k-hash
+    * signatures, b bands; docs sharing any band bucket become
+    * candidates (buckets larger than maxBucket are dropped —
+    * degenerate-key guard); candidates are then verified with the
+    * EXACT Jaccard on their full hashed shingle sets. The string bytes
+    * were hashed exactly once at staging; the k permutations re-hash
+    * the longs. */
+  def minhashLshPairs(hsh0: DataFrame, k: Int, bands: Int,
+                      threshold: Double,
+                      maxBucket: Long = 1000): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val hsh = hsh0.filter(col("sz") > 0)
     val sig = hsh.select(col("__id"),
@@ -415,21 +269,16 @@ object Dedup {
     verifyPairs(cand, hsh, threshold)
   }
 
-  /** SimHash near-dup pairs at Hamming distance <= maxHamming (<= 7):
-    * 8-bit chunk join is an exact candidate generator by pigeonhole
-    * (ham <= 7 implies at least one equal chunk of 8), then the true
-    * Hamming distance filters candidates.
+  /** SimHash near-dup pairs over a [[shingles]] frame at Hamming
+    * distance <= maxHamming (<= 7): 8-bit chunk join is an exact
+    * candidate generator by pigeonhole (ham <= 7 implies at least one
+    * equal chunk of 8), then the true Hamming distance filters
+    * candidates.
     *
     * Docs with no shingles are excluded (an empty feature set would
     * hash to the all-ones signature and pair contentless docs with each
     * other); buckets above maxBucket are dropped — the degenerate-key
-    * guard that keeps any single chunk value from going quadratic. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int, maxHamming: Int, maxBucket: Long = 1000): DataFrame =
-    simhashPairsFromShingles(shingleSets(df, idCol, textCol, n),
-      maxHamming, maxBucket)
-
-  /** [[simhashPairs]] over precomputed [[shingles]].
+    * guard that keeps any single chunk value from going quadratic.
     *
     * `corpusRows` (when the caller knows it — DedupQueries passes its
     * staged doc count) arms the CAP-COLLAPSE guard: the 8-bit pigeonhole
@@ -443,9 +292,9 @@ object Dedup {
     * with its square), shard the corpus, or move to the permuted-prefix
     * table design (wider chunks per table, ham budget split across
     * tables) whose bucket width scales with log N. */
-  def simhashPairsFromShingles(sh: DataFrame, maxHamming: Int,
-                               maxBucket: Long = 1000,
-                               corpusRows: Option[Long] = None): DataFrame = {
+  def simhashPairs(sh: DataFrame, maxHamming: Int,
+                   maxBucket: Long = 1000,
+                   corpusRows: Option[Long] = None): DataFrame = {
     require(maxHamming <= 7, "8-chunk pigeonhole is only exact for ham <= 7")
     corpusRows.foreach { n =>
       require(n <= maxBucket * 256,
@@ -472,6 +321,11 @@ object Dedup {
       .select("a_id", "b_id", "hamming")
   }
 
+  /** [[embeddingPairs]]'s all-pairs refusal bound — public so audit
+    * machinery sizing a sampled base (DedupQueries.embExactPairs) uses
+    * the same constant the guard enforces. */
+  val EmbeddingPairsMaxRows: Long = 100000
+
   /** Exact embedding-cosine pairs >= threshold. This is the CORRECTNESS
     * BASELINE: an all-pairs product (norms precomputed once, one dot
     * product per pair). At corpus scale, candidate pruning must come
@@ -488,11 +342,6 @@ object Dedup {
     * cannot bound candidates AND keep the oracle-exact output. The LSH
     * route is registered alongside as dd_embedding_lsh with a
     * self-auditing recall column instead. */
-  /** [[embeddingPairs]]'s all-pairs refusal bound — public so audit
-    * machinery sizing a sampled base (DedupQueries.embExactPairs) uses
-    * the same constant the guard enforces. */
-  val EmbeddingPairsMaxRows: Long = 100000
-
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double,
                      maxRows: Long = EmbeddingPairsMaxRows): DataFrame = {
@@ -565,7 +414,7 @@ object Dedup {
     require(nBits % bands == 0, s"bands=$bands must divide nBits=$nBits")
     val r = nBits / bands
     require(r <= 63, s"rows-per-band $r exceeds one long")
-    // CAP-COLLAPSE guard (see simhashPairsFromShingles): mean band-bucket
+    // CAP-COLLAPSE guard (see simhashPairs): mean band-bucket
     // occupancy is corpus/2^r, so past maxBucket·2^r rows the
     // degenerate-bucket cap drops every bucket and the output silently
     // empties (sf10 rehearsal: 200k vectors at r=5 → occupancy 6250 >

@@ -47,15 +47,52 @@ object DedupQueries {
     |  count(*) AS n_docs, min(doc_id) AS keep_id
     |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin
 
+  /** The family's ONE exact-Jaccard pair policy: every pair graph —
+    * dd_ngram_jaccard's, the staged [[exactJaccard]], yesterday's
+    * old-old pairs and today's new-new pairs — goes through this call
+    * to Dedup.jaccardPairs over `docs` (the corpus or a slice of it),
+    * so the stop-shingle list and the self-join sizing are decided in
+    * one place. Rows are RAW (one per shared prefix shingle); callers
+    * dedup.
+    *
+    * The stop-shingle list is staged once per (session, dir) — a
+    * published corpus artifact like the IVF quantizer, detected on a
+    * 10% sample of the WHOLE corpus. EMPTY on this uniform-worded
+    * corpus (the plan is then literally the r18 plan); on a zipf corpus
+    * it excludes the quadratic prefix buckets. Exactness is
+    * order-independent — any corpus-consistent order keeps the AllPairs
+    * proof, on a slice too — so the same DuckDB oracles hash-pin both
+    * regimes.
+    *
+    * Scale-adaptive self-join partitioning (guide §2): the prefix
+    * join's shuffle_hash build side carries the packed shingle arrays
+    * and cannot spill, so its per-partition bytes must stay bounded as
+    * the corpus grows — at the session's 32 partitions the sf10
+    * rehearsal (500k docs) failed the build-side memory acquire at the
+    * default heap. ~2000 docs/partition ≈ 25 MB of build rows; below
+    * the session parallelism the explicit count is withheld and the
+    * plan stays byte-identical to r18 (sf0.1: 5k docs → None). */
+  private def exactPairs(s: SparkSession, dir: String,
+                         docs: DataFrame): DataFrame = {
+    val hot = graft.operators.Stage.value(s, dir, "dd_hot_shingles") {
+      Dedup.hotShingles(Tables.documents(s, dir), "doc_id", "text", ShingleN)
+    }
+    val sessionPar = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = math.ceil(docCount(s, dir) / 2000.0).toInt
+    Dedup.jaccardPairs(docs, "doc_id", "text", ShingleN, JaccardThreshold, hot,
+      selfJoinParts = if (parts > sessionPar) Some(parts) else None)
+  }
+
   /** Builds its pair graph UNSTAGED: a headline bench query must
     * measure its own work (shingle → hash → prefix index → candidate
     * join → in-row verify), not a staged-checkpoint read — the same
     * policy ssBruteTopK and ddEmbedding follow. The staged
-    * [[exactJaccard]] chain still exists, but only family CONSUMERS
-    * (recall audits, the cluster queries) read it.
+    * [[exactJaccard]] builds the same graph through the same
+    * [[exactPairs]], but only family CONSUMERS (recall audits, the
+    * cluster queries) read it.
     *
     * The candidate join is the AllPairs PREFIX filter
-    * (Dedup.jaccardPairsPrefixRaw): only the rarest-(1-t) head of each
+    * (Dedup.jaccardPairs): only the rarest-(1-t) head of each
     * sorted shingle set enters the index, which shrinks the exploded
     * frame 5x and the join output ~25x at t=0.8 with GUARANTEED recall
     * (every qualifying pair shares a prefix element — see the operator
@@ -64,34 +101,10 @@ object DedupQueries {
     * take ONE exchange to a single partition where the distinct and
     * the deterministic sort run locally — the sortSmall policy fused
     * with the pair dedup, for a 3-stage plan end to end. */
-  def ddNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    // stop-shingle list staged once per (session, dir) — a published
-    // corpus artifact like the IVF quantizer, detected on a 10% doc
-    // sample. EMPTY on this uniform-worded corpus (the plan below is
-    // then literally the r18 plan); on a zipf corpus it excludes the
-    // quadratic prefix buckets (TextSkewProbe: 2.23x -> in-band, with
-    // candidate rows 4.1M -> ~60). Exactness is order-independent, so
-    // the same DuckDB oracle hash-pins both regimes.
-    val hot = graft.operators.Stage.value(s, dir, "dd_hot_shingles") {
-      Dedup.hotShingles(Tables.documents(s, dir), "doc_id", "text", ShingleN)
-    }
-    // Scale-adaptive self-join partitioning (guide §2): the prefix
-    // join's shuffle_hash build side carries the packed shingle arrays
-    // and cannot spill, so its per-partition bytes must stay bounded as
-    // the corpus grows — at the session's 32 partitions the sf10
-    // rehearsal (500k docs) failed the build-side memory acquire at the
-    // default heap. ~2000 docs/partition ≈ 25 MB of build rows; below
-    // the session parallelism the explicit count is withheld and the
-    // plan stays byte-identical to r18 (sf0.1: 5k docs → None).
-    val nDocs = docCount(s, dir)
-    val sessionPar = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.ceil(nDocs / 2000.0).toInt
-    Dedup.jaccardPairsPrefixFromText(Tables.documents(s, dir),
-      "doc_id", "text", ShingleN, JaccardThreshold, hot,
-      selfJoinParts = if (parts > sessionPar) Some(parts) else None)
+  def ddNgramJaccard(s: SparkSession, dir: String): DataFrame =
+    exactPairs(s, dir, Tables.documents(s, dir))
       .repartition(1).dropDuplicates()
       .sortWithinPartitions("a_id", "b_id")
-  }
 
   val ddNgramJaccardSql: String = """
     |WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -139,9 +152,9 @@ object DedupQueries {
       Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", ShingleN)
     }
 
-  /** Hashed shingle arrays staged once: every inverted-index join,
-    * MinHash signature and candidate verification consumes the packed
-    * longs — the string bytes are hashed exactly once per (session,
+  /** Hashed shingle arrays staged once: the inverted index, the
+    * MinHash signatures and their candidate verification consume the
+    * packed longs — the string bytes are hashed exactly once per (session,
     * dir). */
   private def hashedShingles(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "hshingles") {
@@ -150,10 +163,10 @@ object DedupQueries {
 
   /** The inverted shingle index, staged PRE-PARTITIONED on the hashed
     * shingle: the checkpointed Dataset preserves its hash
-    * partitioning, so the self-join, the incremental new-vs-old join
-    * and the candidate joins all consume it without re-exchanging a
-    * single index row — the shuffle that dominated the round-9 bench
-    * for this family happens once, at staging. */
+    * partitioning, so the incremental new-vs-old joins (dd_incremental
+    * and [[newDayPairs]]' new-old half) consume it without
+    * re-exchanging a single index row. Exact self-joins do not read
+    * it: they go through [[exactPairs]]' prefix filter. */
   private def shingleIndex(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "index") {
       Dedup.invertedIndex(hashedShingles(s, dir)).repartition(col("sg"))
@@ -164,11 +177,11 @@ object DedupQueries {
     * edge set the cluster family converges over. */
   private def exactJaccard(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "pairs") {
-      Dedup.jaccardPairsFromIndex(shingleIndex(s, dir), JaccardThreshold)
+      exactPairs(s, dir, Tables.documents(s, dir)).dropDuplicates()
     }
 
   /** Staged corpus row counts — shared by the scale-adaptive self-join
-    * partitioning (ddNgramJaccard) and the cap-collapse guards
+    * partitioning ([[exactPairs]]) and the cap-collapse guards
     * (ddSimhash / ddEmbeddingLsh): one tiny count job per (session,
     * dir), the Stage.value discipline hotShingles already set. */
   private def docCount(s: SparkSession, dir: String): Long =
@@ -181,7 +194,7 @@ object DedupQueries {
 
   def ddMinhashLsh(s: SparkSession, dir: String): DataFrame =
     Audit.withRecall(
-      Dedup.minhashLshPairsFromHashes(hashedShingles(s, dir),
+      Dedup.minhashLshPairs(hashedShingles(s, dir),
         k = 64, bands = 16, threshold = JaccardThreshold),
       exactJaccard(s, dir),
       Seq("a_id", "b_id"))
@@ -189,7 +202,7 @@ object DedupQueries {
 
   def ddSimhash(s: SparkSession, dir: String): DataFrame =
     Audit.withRecall(
-      Dedup.simhashPairsFromShingles(docShingles(s, dir), maxHamming = 7,
+      Dedup.simhashPairs(docShingles(s, dir), maxHamming = 7,
         corpusRows = Some(docCount(s, dir))),
       exactJaccard(s, dir),
       Seq("a_id", "b_id"))
@@ -240,14 +253,6 @@ object DedupQueries {
       embExactPairs(s, dir), Seq("a_id", "b_id"))
       .transform(sortSmall(_, "a_id", "b_id"))
 
-  /** Duplicate-cluster assignment: connected components over the exact
-    * Jaccard pair graph — every doc labeled with the minimum doc_id
-    * reachable through near-dup pairs (its canonical representative)
-    * plus the cluster size. This is the step a real pipeline runs after
-    * pair generation: "of these 3 mutually-similar docs, keep doc 17".
-    * The DuckDB oracle computes the same labels with a recursive CTE
-    * over the same edges, so the component structure is hash-verified,
-    * not just row-counted. */
   /** (id, cluster_id) labels over the exact-Jaccard pair graph —
     * staged once and shared by [[ddCluster]] and [[ddKeepList]]: the
     * iterative min-label convergence is the family's dominant cost,
@@ -259,6 +264,14 @@ object DedupQueries {
         exactJaccard(s, dir), "a_id", "b_id")
     }
 
+  /** Duplicate-cluster assignment: connected components over the exact
+    * Jaccard pair graph — every doc labeled with the minimum doc_id
+    * reachable through near-dup pairs (its canonical representative)
+    * plus the cluster size. This is the step a real pipeline runs after
+    * pair generation: "of these 3 mutually-similar docs, keep doc 17".
+    * The DuckDB oracle computes the same labels with a recursive CTE
+    * over the same edges, so the component structure is hash-verified,
+    * not just row-counted. */
   def ddCluster(s: SparkSession, dir: String): DataFrame = {
     val labels = clusterLabels(s, dir)
     val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
@@ -322,7 +335,7 @@ object DedupQueries {
 
   /** Incremental dedup: every 5th doc plays the arriving batch, the
     * rest the historical corpus; each new doc is scored only against
-    * corpus docs sharing a shingle (Dedup.jaccardPairsAcrossShingles) —
+    * corpus docs sharing a shingle (Dedup.jaccardPairsAcrossIndex) —
     * old-vs-old pairs never materialize, which is what makes daily
     * ingest dedup affordable at corpus scale. */
   def ddIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -343,20 +356,6 @@ object DedupQueries {
       .coalesce(1).sortWithinPartitions("new_id", "old_id")
   }
 
-  /** Incremental CLUSTER maintenance (Dedup.updateComponents): the
-    * %5 batch docs of [[ddIncremental]] arrive on a corpus whose
-    * clusters were already converged; yesterday's labels (connected
-    * components over old-old pairs only) are merged with today's
-    * new-old pairs (the incremental index join) plus new-new pairs —
-    * only clusters a new edge touches re-converge, everything else
-    * passes through label-identical.
-    *
-    * The oracle is the FULL-corpus recursive-CTE recompute
-    * ([[ddClusterSql]]): old-old ∪ new-old ∪ new-new pairs is exactly
-    * the complete pair set, so hash-equality here proves the
-    * incremental path lands on precisely the labels a batch recompute
-    * would — the invariant that lets a 100 TB pipeline skip the nightly
-    * full relabel. */
   /** Yesterday's converged labels (connected components over the
     * old-corpus pair graph) — STAGED outside the incremental query: in
     * production these are read back from the previous run's output,
@@ -365,10 +364,9 @@ object DedupQueries {
     * merge. */
   private def prevDayLabels(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "prev_labels") {
-      Dedup.connectedComponents(
-        Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), "doc_id",
-        Dedup.jaccardPairsFromIndex(
-          shingleIndex(s, dir).filter(col("__id") % 5 =!= 0), JaccardThreshold),
+      val old = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
+      Dedup.connectedComponents(old, "doc_id",
+        exactPairs(s, dir, old).select("a_id", "b_id").distinct(),
         "a_id", "b_id")
     }
 
@@ -383,12 +381,26 @@ object DedupQueries {
       val idx = shingleIndex(s, dir)
       val iOld = idx.filter(col("__id") % 5 =!= 0)
       val iNew = idx.filter(col("__id") % 5 === 0)
+      val dNew = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
       Dedup.jaccardPairsAcrossIndex(iNew, iOld, JaccardThreshold)
         .select(col("new_id").as("a_id"), col("old_id").as("b_id"))
-        .union(Dedup.jaccardPairsFromIndex(iNew, JaccardThreshold)
-          .select("a_id", "b_id"))
+        .union(exactPairs(s, dir, dNew).select("a_id", "b_id").distinct())
     }
 
+  /** Incremental CLUSTER maintenance (Dedup.updateComponents): the
+    * %5 batch docs of [[ddIncremental]] arrive on a corpus whose
+    * clusters were already converged; yesterday's labels (connected
+    * components over old-old pairs only) are merged with today's
+    * new-old pairs (the incremental index join) plus new-new pairs —
+    * only clusters a new edge touches re-converge, everything else
+    * passes through label-identical.
+    *
+    * The oracle is the FULL-corpus recursive-CTE recompute
+    * ([[ddClusterSql]]): old-old ∪ new-old ∪ new-new pairs is exactly
+    * the complete pair set, so hash-equality here proves the
+    * incremental path lands on precisely the labels a batch recompute
+    * would — the invariant that lets a 100 TB pipeline skip the nightly
+    * full relabel. */
   def ddClusterIncr(s: SparkSession, dir: String): DataFrame = {
     val docsAll = Tables.documents(s, dir)
     // lazy checkpoint: the labels feed BOTH the sizes aggregate and the

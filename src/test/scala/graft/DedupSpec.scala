@@ -33,77 +33,106 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.jaccardPairs(single, "doc_id", "text", 3, 0.5).count() === 0)
   }
 
-  test("jaccardPairs with a df cap still verifies on FULL shingle sets") {
-    // docs 1 and 2 share many shingles; with maxDf=1 every shared
-    // shingle is dropped from the index (df=2), so the pair cannot be
-    // GENERATED — but any pair that does surface must carry the true
-    // full-set Jaccard, and lowering the threshold must not resurrect
-    // pairs whose every shared shingle is capped
-    val capped = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3,
-      threshold = 0.1, maxDf = 1)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(!capped.contains((1L, 2L)))
-    // with a permissive cap the pair returns with its exact jaccard
-    val loose = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3,
-      threshold = 0.6, maxDf = 100)
-      .select("a_id", "b_id", "jac").as[(Long, Long, Double)].collect()
-    val exact = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3,
-      threshold = 0.6)
-      .select("a_id", "b_id", "jac").as[(Long, Long, Double)].collect()
-    assert(loose.sortBy(r => (r._1, r._2)).toSeq ===
-      exact.sortBy(r => (r._1, r._2)).toSeq)
+  test("jaccardPairsPrefix: empty and single-doc corpora yield no pairs") {
+    // the AllPairs prefix filter behind jaccardPairs at a high threshold
+    // (prefix length 1 per doc) and in the stop-shingle-last order a hot
+    // list selects; an empty sample yields an empty hot list, not a throw
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val emptyHot = Dedup.hotShingles(empty, "doc_id", "text", 3, sampleMod = 1,
+      floorMult = 1.0)
+    assert(emptyHot.isEmpty)
+    assert(Dedup.jaccardPairs(empty, "doc_id", "text", 3, 0.8).count() === 0)
+    assert(Dedup.jaccardPairs(empty, "doc_id", "text", 3, 0.8, emptyHot)
+      .count() === 0)
+    val one = Seq((1L, "just one document right here")).toDF("doc_id", "text")
+    val oneHot = Dedup.hotShingles(one, "doc_id", "text", 3, sampleMod = 1,
+      floorMult = 0.5)
+    assert(oneHot.nonEmpty)
+    assert(Dedup.jaccardPairs(one, "doc_id", "text", 3, 0.8).count() === 0)
+    assert(Dedup.jaccardPairs(one, "doc_id", "text", 3, 0.8, oneHot)
+      .count() === 0)
   }
 
-  test("jaccardPairsPrefix equals the full-index path across thresholds") {
+  /** The reference pair set: brute-force all-pairs Jaccard over the
+    * collected [[Dedup.shingles]] string sets, in plain Scala — no
+    * index, no prefix, no hashing. Rows as (a_id, b_id, shared, jac). */
+  private def bruteForcePairs(docs: org.apache.spark.sql.DataFrame, n: Int,
+                              t: Double): Seq[(Long, Long, Long, Double)] = {
+    val sets = Dedup.shingles(docs, "doc_id", "text", n)
+      .select("__id", "sh").as[(Long, Seq[String])].collect()
+      .map { case (id, sh) => (id, Option(sh).getOrElse(Nil).toSet) }
+      .sortBy(_._1)
+    for {
+      i <- sets.indices
+      j <- (i + 1) until sets.length
+      (a, sa) = sets(i)
+      (b, sb) = sets(j)
+      shared = (sa intersect sb).size.toLong
+      if shared > 0
+      jac = shared.toDouble / (sa.size + sb.size - shared)
+      if jac >= t
+    } yield (a, b, shared, jac)
+  }
+
+  private def pairRows(df: org.apache.spark.sql.DataFrame) =
+    df.dropDuplicates().select("a_id", "b_id", "shared", "jac")
+      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+
+  test("jaccardPairs equals a brute-force all-pairs Jaccard across thresholds") {
     // recall is the property at stake: the prefix filter must never
     // drop a qualifying pair. Sweep thresholds so prefix lengths of
     // 1..several are exercised, on a corpus with exact dups, near-dups,
-    // disjoint docs and a single-shingle doc.
+    // disjoint docs, a single-shingle doc and nested pairs.
+    // Nested pair: B is A minus its last token, so |A| = 5, |B| = 4 and
+    // jac = 0.8 exactly — the case where the prefix bound is TIGHT at
+    // t = 0.8: an A-prefix one entry shorter misses the pair whenever
+    // A's one unshared shingle hashes first.
+    val nested = (1 to 20).flatMap { i =>
+      val toks = (1 to 7).map(k => s"n${i}w$k")
+      Seq((100L + 2 * i, toks.mkString(" ")), (101L + 2 * i, toks.init.mkString(" ")))
+    }
     val docs = corpus.union(Seq(
       (6L, "the quick brown fox jumps over the lazy dog near the river bank today"), // exact dup of 1
       (7L, "alpha beta gamma"), // single shingle
       (8L, "alpha beta gamma")  // its exact dup
-    ).toDF("doc_id", "text"))
-    val hsh = Dedup.hashShingles(Dedup.shingles(docs, "doc_id", "text", 3))
+    ).toDF("doc_id", "text")).union(nested.toDF("doc_id", "text"))
     for (t <- Seq(0.5, 0.8, 0.95, 1.0)) {
-      val full = Dedup.jaccardPairsFromHashes(hsh, t)
-        .collect().map(_.toString).sorted.toSeq
-      val pref = Dedup.jaccardPairsPrefix(hsh, t)
-        .collect().map(_.toString).sorted.toSeq
-      assert(pref === full, s"prefix path diverged at t=$t")
-      // the fused-expression headline path (SortedShingleHashes +
-      // SortedIntersectCount) must also produce the identical pair set
-      val fused = Dedup.jaccardPairsPrefixFromText(docs, "doc_id", "text", 3, t)
-        .dropDuplicates()
-        .collect().map(_.toString).sorted.toSeq
-      assert(fused === full, s"fused prefix path diverged at t=$t")
+      val want = bruteForcePairs(docs, 3, t)
+      assert(want.nonEmpty)
+      assert(pairRows(Dedup.jaccardPairs(docs, "doc_id", "text", 3, t)) === want,
+        s"prefix path diverged at t=$t")
     }
   }
 
-  test("jaccardPairsPrefix: empty and single-doc corpora yield no pairs") {
-    val empty = Dedup.hashShingles(Dedup.shingles(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", 3))
-    assert(Dedup.jaccardPairsPrefix(empty, 0.8).count() === 0)
-    val one = Dedup.hashShingles(Dedup.shingles(
-      Seq((1L, "just one document right here")).toDF("doc_id", "text"),
-      "doc_id", "text", 3))
-    assert(Dedup.jaccardPairsPrefix(one, 0.8).count() === 0)
+  test("jaccardPairs equals a brute-force all-pairs Jaccard on the testdata corpus") {
+    // the planted near-dup pairs at the registered threshold, in the
+    // plain hash order and in the stop-shingle-last order a hot list
+    // selects (any corpus-consistent order keeps the AllPairs proof)
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val want = bruteForcePairs(docs, 3, 0.8)
+    assert(want.nonEmpty)
+    assert(pairRows(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)) === want)
+    val hot = Dedup.hotShingles(docs, "doc_id", "text", 3, sampleMod = 1,
+      floorMult = 1.0)
+    assert(hot.nonEmpty, "no shingle above the mean document frequency")
+    assert(pairRows(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8, hot)) === want)
   }
 
   test("simhashPairs ignores docs with no shingles (no all-ones pairing)") {
     val tiny = Seq(
       (1L, "a b"), (2L, "c d"), (3L, "e f"), // all shorter than n=3
       (4L, "the quick brown fox jumps high today")).toDF("doc_id", "text")
-    assert(Dedup.simhashPairs(tiny, "doc_id", "text", n = 3, maxHamming = 7)
-      .count() === 0)
+    assert(Dedup.simhashPairs(Dedup.shingles(tiny, "doc_id", "text", 3),
+      maxHamming = 7).count() === 0)
   }
 
   test("minhashLshPairs recalls every exact-Jaccard pair on the testdata corpus") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      n = 3, k = 64, bands = 16, threshold = 0.8)
+      .select("a_id", "b_id").distinct().as[(Long, Long)].collect().toSet
+    val lsh = Dedup.minhashLshPairs(
+      Dedup.hashShingles(Dedup.shingles(docs, "doc_id", "text", 3)),
+      k = 64, bands = 16, threshold = 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     // verification on full sets makes LSH precision exact; recall is the
     // probabilistic part — these band settings must not miss 0.8+ pairs
@@ -112,7 +141,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPairs finds the near-dup pair within hamming 7") {
-    val out = Dedup.simhashPairs(corpus, "doc_id", "text", n = 3, maxHamming = 7)
+    val out = Dedup.simhashPairs(Dedup.shingles(corpus, "doc_id", "text", 3),
+      maxHamming = 7)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(out.contains((1L, 2L)) || out.contains((1L, 4L)))
   }
@@ -193,14 +223,14 @@ class DedupSpec extends SparkSpec {
     val sh = (1L to 4L).map(i => (i, Seq(s"a$i b c", "b c d"), 2L))
       .toDF("__id", "sh", "sz")
     val exS = intercept[IllegalArgumentException] {
-      Dedup.simhashPairsFromShingles(sh, maxHamming = 7,
+      Dedup.simhashPairs(sh, maxHamming = 7,
         corpusRows = Some(500000L))
     }
     assert(exS.getMessage.contains("ZERO pairs"))
     // below the bound the armed guard is a no-op: same results as unarmed
-    val armed = Dedup.simhashPairsFromShingles(sh, maxHamming = 7,
+    val armed = Dedup.simhashPairs(sh, maxHamming = 7,
       corpusRows = Some(4L)).collect().toSet
-    val unarmed = Dedup.simhashPairsFromShingles(sh, maxHamming = 7)
+    val unarmed = Dedup.simhashPairs(sh, maxHamming = 7)
       .collect().toSet
     assert(armed == unarmed)
   }
@@ -247,7 +277,7 @@ class DedupSpec extends SparkSpec {
     assert(out.values.toSet === Set(1L))
   }
 
-  test("jaccardPairsAcrossShingles reports only cross-corpus pairs") {
+  test("jaccardPairsAcrossIndex reports only cross-corpus pairs") {
     // 1-2 near-dups split across batch/corpus -> reported;
     // 3-4 near-dups both in the corpus -> never scored
     val docs = Seq(
@@ -255,9 +285,10 @@ class DedupSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta eta iota"),
       (3L, "one two three four five six seven eight"),
       (4L, "one two three four five six seven nine")).toDF("doc_id", "text")
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-    val out = Dedup.jaccardPairsAcrossShingles(
-      sh.filter($"__id" === 1L), sh.filter($"__id" =!= 1L), threshold = 0.5)
+    val idx = Dedup.invertedIndex(
+      Dedup.hashShingles(Dedup.shingles(docs, "doc_id", "text", 3)))
+    val out = Dedup.jaccardPairsAcrossIndex(
+      idx.filter($"__id" === 1L), idx.filter($"__id" =!= 1L), threshold = 0.5)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(out === Set((1L, 2L)))
   }

@@ -35,10 +35,11 @@ class GenScaleSpec extends SparkSpec {
     val basePairs = Dedup.jaccardPairs(
       spark.read.parquet(s"$src/documents.parquet"), "doc_id", "text",
       queries.DedupQueries.ShingleN, queries.DedupQueries.JaccardThreshold)
-      .count()
+      .dropDuplicates().count()
     val scaled = Dedup.jaccardPairs(
       spark.read.parquet(s"$dst/documents.parquet"), "doc_id", "text",
       queries.DedupQueries.ShingleN, queries.DedupQueries.JaccardThreshold)
+      .dropDuplicates()
     // token-suffix bijection preserves every within-shard pair and the
     // key shift separates shards, so the pair count exactly doubles...
     assert(scaled.count() === 2 * basePairs)

@@ -49,17 +49,27 @@ class PrefixSkipHotSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val t = 0.6
     val plain = graft.operators.Dedup
-      .jaccardPairsPrefixFromText(docs, "doc_id", "text", 3, t)
+      .jaccardPairs(docs, "doc_id", "text", 3, t)
       .orderBy("a_id", "b_id").collect().toSeq
     val hot = graft.operators.Dedup
       .hotShingles(docs, "doc_id", "text", 3, sampleMod = 1,
         floorMult = 2.0)
     assert(hot.nonEmpty, "planted hot shingle not detected")
     val safe = graft.operators.Dedup
-      .jaccardPairsPrefixFromText(docs, "doc_id", "text", 3, t, hot)
+      .jaccardPairs(docs, "doc_id", "text", 3, t, hot)
       .orderBy("a_id", "b_id").collect().toSeq
     assert(plain.nonEmpty)
     assert(safe === plain)
+  }
+
+  test("hotShingles returns Nil when the sample holds no shingle") {
+    // avg over zero sampled shingles is NULL: an all-short corpus
+    // (every doc under n tokens, all sampled) and an empty corpus
+    val short = Seq((1L, "a b"), (2L, "c d"), (3L, "e")).toDF("doc_id", "text")
+    assert(graft.operators.Dedup
+      .hotShingles(short, "doc_id", "text", 3, sampleMod = 1) === Nil)
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(graft.operators.Dedup.hotShingles(empty, "doc_id", "text", 3) === Nil)
   }
 
   test("registered dd_ngram_jaccard result unchanged by the hot-list stage") {
@@ -67,7 +77,7 @@ class PrefixSkipHotSpec extends SparkSpec {
     val got = graft.queries.DedupQueries.queries("dd_ngram_jaccard")(spark, dir)
       .collect().toSeq
     val plain = graft.operators.Dedup
-      .jaccardPairsPrefixFromText(
+      .jaccardPairs(
         graft.Tables.documents(spark, dir), "doc_id", "text",
         graft.queries.DedupQueries.ShingleN,
         graft.queries.DedupQueries.JaccardThreshold)

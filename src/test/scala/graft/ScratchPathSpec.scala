@@ -92,4 +92,25 @@ class ScratchPathSpec extends AnyFunSuite {
     assert(uses.size === 1 && uses.head.startsWith("streaming/StreamOps.scala:"),
       s"expected one .writeStream, in StreamOps.replay; found: ${uses.mkString(", ")}")
   }
+
+  test("one pair policy: Dedup.jaccardPairs( occurs once, in DedupQueries.exactPairs") {
+    // every exact-Jaccard self-join goes through the one helper that
+    // owns the stop-shingle list and the self-join sizing; a second
+    // call site is a caller growing its own pair policy again
+    val lines = mainSourceLines
+    val uses = lines.collect {
+      case (rel, n, line) if line.contains("Dedup.jaccardPairs(") &&
+          !line.trim.startsWith("*") => (rel, n)
+    }
+    assert(uses.size === 1, s"expected one Dedup.jaccardPairs( call; found: " +
+      uses.map { case (rel, n) => s"$rel:$n" }.mkString(", "))
+    val (rel, n) = uses.head
+    val enclosing = lines.filter { case (r, m, l) =>
+      r == rel && m < n && l.trim.matches("""(private )?def \w+.*""")
+    }.lastOption.map(_._3.trim)
+    assert(rel == "queries/DedupQueries.scala" &&
+      enclosing.exists(_.startsWith("private def exactPairs(")),
+      s"the Dedup.jaccardPairs( call at $rel:$n is not inside " +
+        s"DedupQueries.exactPairs (enclosing: $enclosing)")
+  }
 }
