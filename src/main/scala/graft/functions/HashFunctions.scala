@@ -9,12 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
-  /** One xxhash64 per shingle STRING — the only pass that touches
-    * string bytes. Materialize this column once; the k permutations
-    * below re-hash these longs, not the strings. */
-  def shingleHashes(shingles: Column): Column =
-    graft.plans.ArrayXxHash64(shingles)
-
   /** MinHash signature as array<long> of length k from pre-hashed
     * shingles: element j is min over xxhash64(h, j) — k seeded long
     * hashes (fixed-width, codegen'd) instead of k string re-hashes, an

@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for LLM-pipeline corpora.
   *
   * Scale design (SURVEY §5): every near-dup variant generates candidate
-  * pairs through an inverted index / LSH bucket SHUFFLE — never a global
-  * all-pairs product — and verifies the exact metric only on candidates.
-  * Bucket-size caps bound degenerate keys (a viral shingle, an all-zero
-  * band) so no single task receives a quadratic bucket.
+  * pairs through a keyed SHUFFLE — the AllPairs prefix index for exact
+  * Jaccard ([[jaccardPairs]], within one corpus or across two), LSH /
+  * SimHash bucket joins for the approximate variants — never a global
+  * all-pairs product, and verifies the exact metric only on candidates.
+  * Prefix-hot lists and bucket-size caps bound degenerate keys (a viral
+  * shingle, an all-zero band) so no single task receives a quadratic
+  * bucket.
   */
 object Dedup {
 
@@ -32,14 +35,21 @@ object Dedup {
       .select(col("__id"), TextFunctions.shingleSet(col("__text"), n).as("sh"))
       .withColumn("sz", size(col("sh")).cast("long"))
 
-  /** (__id, hs, sz) from a [[shingles]] frame — ONE xxhash64 pass over
-    * the shingle strings. Its consumers (the incremental inverted-index
-    * join, MinHash signatures, candidate verification) work on the
-    * packed long arrays: stage this frame once and the string bytes
-    * are never touched again. */
-  def hashShingles(sh: DataFrame): DataFrame =
-    sh.select(col("__id"), HashFunctions.shingleHashes(col("sh")).as("hs"),
-      col("sz"))
+  /** Per-doc hashed shingle sets (__id, hs, sz): `hs` is the sorted,
+    * distinct xxhash64 of the doc's word n-gram shingles, computed by
+    * ONE fused codegen expression (plans.SortedShingleHashes — see
+    * [[jaccardPairs]]); docs shorter than `n` tokens (or null text) get
+    * an empty set. The input is spread first, as in [[shingles]]. Every
+    * consumer of per-doc hashed sets — the prefix joins, MinHash
+    * signatures, candidate verification — reads this frame; only
+    * [[hotShingles]] hashes its own document sample. */
+  def shingleHashSets(df: DataFrame, idCol: String, textCol: String,
+                      n: Int): DataFrame =
+    Par.spread(df.select(col(idCol).as("__id"), col(textCol).as("__text")))
+      .select(col("__id"),
+        coalesce(graft.plans.SortedShingleHashes(col("__text"), n),
+          array().cast("array<long>")).as("hs"))
+      .withColumn("sz", size(col("hs")).cast("long"))
 
   /** Verifies candidate (a_id, b_id) pairs with the Jaccard over the
     * full HASHED shingle sets — exact up to 64-bit collisions (see
@@ -54,15 +64,6 @@ object Dedup {
         col("shared").cast("double") / (col("a_sz") + col("b_sz") - col("shared")))
       .filter(col("jac") >= threshold)
       .select("a_id", "b_id", "shared", "jac")
-
-  /** The inverted shingle index: one (doc, set-size, hashed-shingle)
-    * row per shingle occurrence. Staged callers repartition this by
-    * `sg` and checkpoint it ONCE — the checkpointed Dataset preserves
-    * its hash partitioning, so the incremental new-vs-old join on `sg`
-    * ([[jaccardPairsAcrossIndex]]) runs WITHOUT re-exchanging the
-    * index. */
-  def invertedIndex(hsh: DataFrame): DataFrame =
-    hsh.select(col("__id"), col("sz"), explode(col("hs")).as("sg"))
 
   /** Detects the corpus's STOP SHINGLES — the bounded hot list
     * [[jaccardPairs]] excludes from prefixes — on a deterministic
@@ -89,18 +90,26 @@ object Dedup {
         graft.plans.SortedShingleHashes(col(textCol), n),
         array().cast("array<long>"))).as("sg"))
     val dfc = sampled.groupBy("sg").agg(count(lit(1)).as("__df"))
-    // avg over zero rows is NULL, not NaN
-    val mean = dfc.agg(avg("__df")).collect()(0)
-    if (mean.isNullAt(0)) return Nil
-    val floor = floorMult * mean.getDouble(0)
-    dfc.filter(col("__df") > floor)
-      .orderBy(desc("__df"), col("sg")).limit(cap)
-      .collect().map(r => (r.getLong(1), r.getLong(0)))
+    // ONE action over the aggregate: each of the `cap` hottest rows
+    // carries the sampled mean (a one-row broadcast off the same
+    // aggregate, whose exchange the plan reuses). In desc(__df) order
+    // every row above the floor precedes every row at or below it, so
+    // flooring the collected rows keeps exactly what filter-then-limit
+    // would. No rows back means no sampled shingle, hence no mean: Nil.
+    val top = dfc.crossJoin(broadcast(dfc.agg(avg("__df").as("__mean"))))
+      .orderBy(desc("__df"), col("sg")).limit(cap).collect()
+    top.filter(r => r.getLong(1) > floorMult * r.getDouble(2))
+      .map(r => (r.getLong(1), r.getLong(0)))
       .sortBy(identity).map(_._2).toSeq
   }
 
-  /** Exact n-gram Jaccard pairs >= threshold — the one self-join every
-    * exact pair graph goes through. Output is RAW: one row per
+  /** Exact n-gram Jaccard pairs >= threshold — the one candidate join
+    * every exact pair graph goes through, within one corpus (`against`
+    * = None: pairs a_id < b_id of `df`) or across two (`against` =
+    * Some(old): every (a_id from `df`, b_id from `old`) pair, no id
+    * order imposed — the INCREMENTAL shape, where a daily batch is
+    * scored against the corpus and old-vs-old pairs never
+    * materialize). Output is RAW: one row per
     * (qualifying pair, shared prefix shingle), identical across a
     * pair's rows, so callers dedup with a plain distinct wherever their
     * deliverable lives (dd_ngram_jaccard fuses it into its
@@ -112,7 +121,9 @@ object Dedup {
     * FIRST `|X| - ceil(t*|X|) + 1` elements of each of its sets. Proof
     * shape: jac >= t forces overlap >= t*|A∪B| >= t*|X| for both sets
     * X, and the smallest SHARED element sits at position
-    * <= |X| - overlap + 1 in each — inside both prefixes. The same
+    * <= |X| - overlap + 1 in each — inside both prefixes. The bound
+    * holds for each set on its own, so it is as exact between two
+    * corpora as within one. The same
     * bound makes the size-ratio prefilter lossless: jac >= t forces
     * min(|A|,|B|) >= t * max(|A|,|B|). So indexing
     * only the prefix (~(1-t) of each set; 20 % at t=0.8) keeps EVERY
@@ -156,8 +167,13 @@ object Dedup {
     * candidate join (measured: 4.1M -> ~60 candidate rows on the zipf
     * sf1 clone). An empty list keeps the plan literally unchanged.
     *
-    * `selfJoinParts`: explicit partition count for the shared
-    * exchange. The join is shuffle_hash-hinted (the measured win over
+    * Across corpora each side has its own prefix exchange; `df` is the
+    * shuffle_hash BUILD side, so callers pass the smaller corpus (the
+    * batch) as `df` and the per-partition hash map stays batch-sized
+    * while the corpus side only streams.
+    *
+    * `joinParts`: explicit partition count for the prefix
+    * exchange(s). The join is shuffle_hash-hinted (the measured win over
     * sort-merge at bench scale) and an SHJ build side cannot spill —
     * the build rows carry the full packed shingle arrays, so
     * per-partition build bytes grow linearly with corpus while the
@@ -170,12 +186,8 @@ object Dedup {
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    n: Int, threshold: Double,
                    hot: Seq[Long] = Nil,
-                   selfJoinParts: Option[Int] = None): DataFrame = {
-    val hs = Par.spread(df.select(col(idCol).as("__id"), col(textCol).as("__text")))
-      .select(col("__id"),
-        coalesce(graft.plans.SortedShingleHashes(col("__text"), n),
-          array().cast("array<long>")).as("hs"))
-      .withColumn("sz", size(col("hs")).cast("long"))
+                   joinParts: Option[Int] = None,
+                   against: Option[DataFrame] = None): DataFrame = {
     // the recall proof's prefix length; greatest(1, ...) keeps
     // single-shingle docs indexed (their prefix IS the whole set)
     val prefixLen = greatest(lit(1),
@@ -183,17 +195,23 @@ object Dedup {
     val prefix =
       if (hot.isEmpty) slice(col("hs"), lit(1), prefixLen)
       else graft.plans.PrefixSkipHot(col("hs"), prefixLen, hot)
-    val pre = hs.select(col("__id"), col("sz"), col("hs"), explode(prefix).as("sg"))
-    val ex = selfJoinParts match {
-      case Some(p) => pre.repartition(p, col("sg"))
-      case None => pre.repartition(col("sg"))
+    def prefixes(corpus: DataFrame): DataFrame = {
+      val pre = shingleHashSets(corpus, idCol, textCol, n)
+        .select(col("__id"), col("sz"), col("hs"), explode(prefix).as("sg"))
+      joinParts match {
+        case Some(p) => pre.repartition(p, col("sg"))
+        case None => pre.repartition(col("sg"))
+      }
     }
+    val ex = prefixes(df)
     val a = ex.select(col("__id").as("a_id"), col("sz").as("a_sz"),
       col("hs").as("hs_a"), col("sg")).hint("shuffle_hash")
-    val b = ex.select(col("__id").as("b_id"), col("sz").as("b_sz"),
-      col("hs").as("hs_b"), col("sg"))
+    val b = against.fold(ex)(prefixes).select(col("__id").as("b_id"),
+      col("sz").as("b_sz"), col("hs").as("hs_b"), col("sg"))
+    // one orientation per self-pair; across corpora both ids are kept
+    val idOrder = if (against.isEmpty) col("a_id") < col("b_id") else lit(true)
     a.join(b, Seq("sg"))
-      .filter(col("a_id") < col("b_id") &&
+      .filter(idOrder &&
         col("a_sz") >= lit(threshold) * col("b_sz") &&
         col("b_sz") >= lit(threshold) * col("a_sz"))
       .withColumn("shared",
@@ -204,39 +222,7 @@ object Dedup {
       .select("a_id", "b_id", "shared", "jac")
   }
 
-  /** Cross-corpus exact Jaccard pairs over (possibly pre-partitioned)
-    * [[invertedIndex]] frames: each LEFT (new-batch) doc against the
-    * RIGHT (historical) corpus — the INCREMENTAL dedup shape. A daily
-    * batch arriving on a 100 TB corpus must never rescore old-vs-old
-    * pairs; here only (new, old) pairs sharing a shingle materialize,
-    * so the per-batch cost is proportional to the batch, not the
-    * corpus square, and a co-partitioned staged index joins with no
-    * exchange. The per-pair match count over ALL shingles IS the
-    * intersection size; the size-ratio prefilter is lossless for the
-    * threshold (see [[jaccardPairs]]), so mismatched-size pairs drop
-    * BEFORE the aggregation. */
-  def jaccardPairsAcrossIndex(idxNew: DataFrame, idxOld: DataFrame,
-                              threshold: Double): DataFrame = {
-    // build side = the BATCH index (bounded by the ingest window),
-    // probe side = the corpus. shuffle_hash instead of the planner's
-    // stat-blind pick: no sort of the corpus side, no driver-side
-    // broadcast collect, and a co-partitioned staged index joins with
-    // zero exchange; the per-partition hash map is batch-sized.
-    val a = idxNew.select(col("__id").as("new_id"), col("sz").as("a_sz"), col("sg"))
-      .hint("shuffle_hash")
-    val b = idxOld.select(col("__id").as("old_id"), col("sz").as("b_sz"), col("sg"))
-    a.join(b, Seq("sg"))
-      .filter(col("a_sz") >= lit(threshold) * col("b_sz") &&
-        col("b_sz") >= lit(threshold) * col("a_sz"))
-      .groupBy("new_id", "old_id", "a_sz", "b_sz")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jac",
-        col("shared").cast("double") / (col("a_sz") + col("b_sz") - col("shared")))
-      .filter(col("jac") >= threshold)
-      .select("new_id", "old_id", "shared", "jac")
-  }
-
-  /** MinHash + LSH near-dup pairs over a [[hashShingles]] frame: k-hash
+  /** MinHash + LSH near-dup pairs over a [[shingleHashSets]] frame: k-hash
     * signatures, b bands; docs sharing any band bucket become
     * candidates (buckets larger than maxBucket are dropped —
     * degenerate-key guard); candidates are then verified with the

@@ -47,13 +47,15 @@ object DedupQueries {
     |  count(*) AS n_docs, min(doc_id) AS keep_id
     |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin
 
-  /** The family's ONE exact-Jaccard pair policy: every pair graph —
-    * dd_ngram_jaccard's, the staged [[exactJaccard]], yesterday's
-    * old-old pairs and today's new-new pairs — goes through this call
-    * to Dedup.jaccardPairs over `docs` (the corpus or a slice of it),
-    * so the stop-shingle list and the self-join sizing are decided in
-    * one place. Rows are RAW (one per shared prefix shingle); callers
-    * dedup.
+  /** The family's ONE exact-Jaccard pair policy: every pair graph goes
+    * through this call to Dedup.jaccardPairs, so the stop-shingle list
+    * and the join sizing are decided in one place. Self-joins over
+    * `docs` (the corpus or a slice of it): dd_ngram_jaccard's, the
+    * staged [[exactJaccard]] and yesterday's old-old pairs
+    * ([[prevDayLabels]]). Cross-corpus joins of `docs` (the batch, the
+    * join's build side) `against` a second corpus: [[ddIncremental]]'s
+    * new-vs-old pairs and [[newDayPairs]]' new-vs-corpus pairs. Rows
+    * are RAW (one per shared prefix shingle); callers dedup.
     *
     * The stop-shingle list is staged once per (session, dir) — a
     * published corpus artifact like the IVF quantizer, detected on a
@@ -61,8 +63,8 @@ object DedupQueries {
     * corpus (the plan is then literally the r18 plan); on a zipf corpus
     * it excludes the quadratic prefix buckets. Exactness is
     * order-independent — any corpus-consistent order keeps the AllPairs
-    * proof, on a slice too — so the same DuckDB oracles hash-pin both
-    * regimes.
+    * proof, on a slice and across two slices too — so the same DuckDB
+    * oracles hash-pin both regimes.
     *
     * Scale-adaptive self-join partitioning (guide §2): the prefix
     * join's shuffle_hash build side carries the packed shingle arrays
@@ -72,15 +74,15 @@ object DedupQueries {
     * default heap. ~2000 docs/partition ≈ 25 MB of build rows; below
     * the session parallelism the explicit count is withheld and the
     * plan stays byte-identical to r18 (sf0.1: 5k docs → None). */
-  private def exactPairs(s: SparkSession, dir: String,
-                         docs: DataFrame): DataFrame = {
+  private def exactPairs(s: SparkSession, dir: String, docs: DataFrame,
+                         against: Option[DataFrame] = None): DataFrame = {
     val hot = graft.operators.Stage.value(s, dir, "dd_hot_shingles") {
       Dedup.hotShingles(Tables.documents(s, dir), "doc_id", "text", ShingleN)
     }
     val sessionPar = s.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = math.ceil(docCount(s, dir) / 2000.0).toInt
     Dedup.jaccardPairs(docs, "doc_id", "text", ShingleN, JaccardThreshold, hot,
-      selfJoinParts = if (parts > sessionPar) Some(parts) else None)
+      joinParts = if (parts > sessionPar) Some(parts) else None, against)
   }
 
   /** Builds its pair graph UNSTAGED: a headline bench query must
@@ -144,32 +146,21 @@ object DedupQueries {
                     (build: => DataFrame): DataFrame =
     graft.operators.Stage.frame(s, dir, key)(build)
 
-  /** Word-shingle sets staged once per (session, dir): tokenize +
-    * shingle is the dominant per-row cost of every text near-dup
-    * query, and all of them consume the identical frame. */
+  /** Word-shingle string sets staged once per (session, dir): the
+    * SimHash features of dd_simhash, the one near-dup query that reads
+    * the strings rather than their hashes. */
   private def docShingles(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "shingles") {
       Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", ShingleN)
     }
 
-  /** Hashed shingle arrays staged once: the inverted index, the
-    * MinHash signatures and their candidate verification consume the
-    * packed longs — the string bytes are hashed exactly once per (session,
-    * dir). */
+  /** Hashed shingle sets staged once for dd_minhash_lsh: the MinHash
+    * signatures and their candidate verification consume the packed
+    * longs — the string bytes are hashed exactly once per (session,
+    * dir), by the same fused chain the exact pair joins run. */
   private def hashedShingles(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "hshingles") {
-      Dedup.hashShingles(docShingles(s, dir))
-    }
-
-  /** The inverted shingle index, staged PRE-PARTITIONED on the hashed
-    * shingle: the checkpointed Dataset preserves its hash
-    * partitioning, so the incremental new-vs-old joins (dd_incremental
-    * and [[newDayPairs]]' new-old half) consume it without
-    * re-exchanging a single index row. Exact self-joins do not read
-    * it: they go through [[exactPairs]]' prefix filter. */
-  private def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "index") {
-      Dedup.invertedIndex(hashedShingles(s, dir)).repartition(col("sg"))
+      Dedup.shingleHashSets(Tables.documents(s, dir), "doc_id", "text", ShingleN)
     }
 
   /** Exact-Jaccard pair graph staged once — the ground truth the
@@ -335,25 +326,19 @@ object DedupQueries {
 
   /** Incremental dedup: every 5th doc plays the arriving batch, the
     * rest the historical corpus; each new doc is scored only against
-    * corpus docs sharing a shingle (Dedup.jaccardPairsAcrossIndex) —
-    * old-vs-old pairs never materialize, which is what makes daily
-    * ingest dedup affordable at corpus scale. */
+    * corpus docs sharing a PREFIX shingle ([[exactPairs]] against the
+    * old corpus) — old-vs-old pairs never materialize, which is what
+    * makes daily ingest dedup affordable at corpus scale. Built
+    * UNSTAGED, like [[ddNgramJaccard]]: a headline query measures its
+    * own work. The raw rows take the same one-exchange dedup + sort. */
   def ddIncremental(s: SparkSession, dir: String): DataFrame = {
-    val idx = shingleIndex(s, dir)
-    // coalesce(1), not sortSmall: directly above the pair-count
-    // aggregation's exchange, coalescing collapses the final agg, the
-    // jac filter and the deterministic sort into ONE post-shuffle task
-    // — one exchange fewer than agg + repartition(1), with the same
-    // single-task end state sortSmall already accepts for
-    // deliverable-sized outputs (probed 0.46 -> 0.36 s at sf0.1, rows
-    // identical). The map-side partial agg keeps the corpus-side work
-    // parallel; a corpus-sized pair output would keep the parallel
-    // final agg and sortSmall instead.
-    Dedup.jaccardPairsAcrossIndex(
-      idx.filter(col("__id") % 5 === 0),
-      idx.filter(col("__id") % 5 =!= 0),
-      JaccardThreshold)
-      .coalesce(1).sortWithinPartitions("new_id", "old_id")
+    val docs = Tables.documents(s, dir)
+    exactPairs(s, dir, docs.filter(col("doc_id") % 5 === 0),
+      Some(docs.filter(col("doc_id") % 5 =!= 0)))
+      .select(col("a_id").as("new_id"), col("b_id").as("old_id"),
+        col("shared"), col("jac"))
+      .repartition(1).dropDuplicates()
+      .sortWithinPartitions("new_id", "old_id")
   }
 
   /** Yesterday's converged labels (connected components over the
@@ -370,30 +355,31 @@ object DedupQueries {
         "a_id", "b_id")
     }
 
-  /** Today's pair batch (new-vs-corpus via the incremental index join,
-    * plus new-vs-new) — STAGED like the prior-day labels: in the
-    * pipeline this is the OUTPUT ARTIFACT of the pair-generation stage
-    * (the work [[ddIncremental]] times), handed to cluster maintenance
-    * as input. Recomputing it inside the timed merge double-counts a
-    * stage that already has its own query. */
+  /** Today's pair batch: the new docs against the WHOLE corpus in one
+    * [[exactPairs]] cross join, minus each doc's pair with itself.
+    * That covers new-old and new-new pairs at once; a new-new pair
+    * appears in both orientations, which the undirected edge set of
+    * Dedup.updateComponents absorbs. STAGED like the prior-day labels:
+    * in the pipeline this is the OUTPUT ARTIFACT of the
+    * pair-generation stage (the work [[ddIncremental]] times), handed
+    * to cluster maintenance as input. Recomputing it inside the timed
+    * merge double-counts a stage that already has its own query. */
   private def newDayPairs(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "new_pairs") {
-      val idx = shingleIndex(s, dir)
-      val iOld = idx.filter(col("__id") % 5 =!= 0)
-      val iNew = idx.filter(col("__id") % 5 === 0)
-      val dNew = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      Dedup.jaccardPairsAcrossIndex(iNew, iOld, JaccardThreshold)
-        .select(col("new_id").as("a_id"), col("old_id").as("b_id"))
-        .union(exactPairs(s, dir, dNew).select("a_id", "b_id").distinct())
+      val docs = Tables.documents(s, dir)
+      exactPairs(s, dir, docs.filter(col("doc_id") % 5 === 0), Some(docs))
+        .filter(col("a_id") =!= col("b_id"))
+        .select("a_id", "b_id").distinct()
     }
 
   /** Incremental CLUSTER maintenance (Dedup.updateComponents): the
     * %5 batch docs of [[ddIncremental]] arrive on a corpus whose
     * clusters were already converged; yesterday's labels (connected
     * components over old-old pairs only) are merged with today's
-    * new-old pairs (the incremental index join) plus new-new pairs —
-    * only clusters a new edge touches re-converge, everything else
-    * passes through label-identical.
+    * new-old and new-new pairs (one prefix join of the batch against
+    * the whole corpus, [[newDayPairs]]) — only clusters a new edge
+    * touches re-converge, everything else passes through
+    * label-identical.
     *
     * The oracle is the FULL-corpus recursive-CTE recompute
     * ([[ddClusterSql]]): old-old ∪ new-old ∪ new-new pairs is exactly

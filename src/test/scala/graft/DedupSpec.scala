@@ -131,7 +131,7 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)
       .select("a_id", "b_id").distinct().as[(Long, Long)].collect().toSet
     val lsh = Dedup.minhashLshPairs(
-      Dedup.hashShingles(Dedup.shingles(docs, "doc_id", "text", 3)),
+      Dedup.shingleHashSets(docs, "doc_id", "text", 3),
       k = 64, bands = 16, threshold = 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     // verification on full sets makes LSH precision exact; recall is the
@@ -277,20 +277,66 @@ class DedupSpec extends SparkSpec {
     assert(out.values.toSet === Set(1L))
   }
 
-  test("jaccardPairsAcrossIndex reports only cross-corpus pairs") {
-    // 1-2 near-dups split across batch/corpus -> reported;
-    // 3-4 near-dups both in the corpus -> never scored
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta iota"),
-      (3L, "one two three four five six seven eight"),
-      (4L, "one two three four five six seven nine")).toDF("doc_id", "text")
-    val idx = Dedup.invertedIndex(
-      Dedup.hashShingles(Dedup.shingles(docs, "doc_id", "text", 3)))
-    val out = Dedup.jaccardPairsAcrossIndex(
-      idx.filter($"__id" === 1L), idx.filter($"__id" =!= 1L), threshold = 0.5)
-      .select("new_id", "old_id").as[(Long, Long)].collect().toSet
-    assert(out === Set((1L, 2L)))
+  /** The cross-corpus reference: brute-force new x old Jaccard over
+    * the collected [[Dedup.shingles]] string sets, in plain Scala. Rows
+    * as (new id, old id, shared, jac); new-new and old-old pairs are
+    * never scored. */
+  private def bruteForceAcross(newDocs: org.apache.spark.sql.DataFrame,
+                               oldDocs: org.apache.spark.sql.DataFrame, n: Int,
+                               t: Double): Seq[(Long, Long, Long, Double)] = {
+    def sets(d: org.apache.spark.sql.DataFrame) =
+      Dedup.shingles(d, "doc_id", "text", n)
+        .select("__id", "sh").as[(Long, Seq[String])].collect()
+        .map { case (id, sh) => (id, Option(sh).getOrElse(Nil).toSet) }
+    val olds = sets(oldDocs)
+    (for {
+      (a, sa) <- sets(newDocs).toSeq
+      (b, sb) <- olds.toSeq
+      shared = (sa intersect sb).size.toLong
+      if shared > 0
+      jac = shared.toDouble / (sa.size + sb.size - shared)
+      if jac >= t
+    } yield (a, b, shared, jac)).sortBy(r => (r._1, r._2))
+  }
+
+  test("jaccardPairs against a second corpus equals a brute-force new x old Jaccard") {
+    // Nested pairs as in the self-join sweep (|A| = 5, |B| = 4, jac =
+    // 0.8): A's prefix is the tight one at t = 0.8, so A sits in the
+    // new corpus for odd i and in the old corpus for even i — a prefix
+    // one entry short on EITHER side loses pairs.
+    val nested = (1 to 20).flatMap { i =>
+      val toks = (1 to 7).map(k => s"n${i}w$k")
+      Seq((100L + 2 * i, toks.mkString(" ")), (101L + 2 * i, toks.init.mkString(" ")))
+    }
+    val nestedNew = (1 to 20).map(i => (if (i % 2 == 1) 100L else 101L) + 2 * i)
+    val docs = corpus.union(Seq(
+      (6L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (7L, "alpha beta gamma"), // single shingle
+      (8L, "alpha beta gamma"),
+      (9L, "the quick brown fox jumps over the lazy dog near the river bank today"), // new-new dup of 1
+      // 11-12 near-dups split across new/old -> reported;
+      // 13-14 near-dups both old -> never scored
+      (11L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (12L, "alpha beta gamma delta epsilon zeta eta iota"),
+      (13L, "one two three four five six seven eight"),
+      (14L, "one two three four five six seven nine")
+    ).toDF("doc_id", "text")).union(nested.toDF("doc_id", "text"))
+    val newIds = Set(1L, 3L, 5L, 7L, 9L, 11L) ++ nestedNew
+    val newDocs = docs.filter($"doc_id".isin(newIds.toSeq: _*))
+    val oldDocs = docs.filter(!$"doc_id".isin(newIds.toSeq: _*))
+    val hot = Dedup.hotShingles(docs, "doc_id", "text", 3, sampleMod = 1,
+      floorMult = 1.0)
+    assert(hot.nonEmpty, "no shingle above the mean document frequency")
+    for (t <- Seq(0.5, 0.8, 0.95, 1.0); h <- Seq(Nil, hot)) {
+      val want = bruteForceAcross(newDocs, oldDocs, 3, t)
+      assert(want.nonEmpty)
+      val got = pairRows(Dedup.jaccardPairs(newDocs, "doc_id", "text", 3, t, h,
+        against = Some(oldDocs)))
+      assert(got === want, s"cross-corpus prefix path diverged at t=$t, hot=${h.nonEmpty}")
+      assert(got.forall(r => newIds(r._1) && !newIds(r._2)),
+        "a pair within one corpus was scored")
+      if (t == 0.5) assert(got.exists(r => r._1 == 11L && r._2 == 12L))
+    }
   }
 
   test("connectedComponents throws rather than returning unconverged labels") {

@@ -72,6 +72,52 @@ class PrefixSkipHotSpec extends SparkSpec {
     assert(graft.operators.Dedup.hotShingles(empty, "doc_id", "text", 3) === Nil)
   }
 
+  /** hotShingles' contract in plain Scala: per-doc DISTINCT shingle
+    * hashes over the 1-in-`sampleMod` id sample, document frequency per
+    * hash, keep df > floorMult x mean df, hottest `cap` by (df desc,
+    * hash asc), returned coldest-first. */
+  private def hotReference(docs: Seq[(Long, String)], sampleMod: Int,
+                           floorMult: Double, cap: Int): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    val sampled = docs.filter { case (id, _) =>
+      Math.floorMod(XXH64.hashLong(id, 42L), sampleMod.toLong) == 0 }
+    val dfs = sampled.flatMap { case (_, text) =>
+      graft.plans.SortedShingleHashes.compute(UTF8String.fromString(text), 3)
+        .toLongArray().toSeq
+    }.groupBy(identity).map { case (h, hs) => (h, hs.size.toLong) }
+    if (dfs.isEmpty) return Nil
+    val floor = floorMult * (dfs.values.sum.toDouble / dfs.size)
+    dfs.toSeq.filter(_._2 > floor).sortBy { case (h, df) => (-df, h) }
+      .take(cap).map { case (h, df) => (df, h) }.sorted.map(_._2)
+  }
+
+  test("hotShingles equals a plain-Scala document-frequency reference") {
+    // planted one-shingle docs: df 6 (x1), df 4 (x3), df 2 (x2), and ten
+    // df-1 shingles, one of them repeated inside its doc ("r s t r s t"
+    // counts once). 32 occurrences over 16 shingles: mean 2.0, so at
+    // floorMult 1.0 the df-2 shingles sit exactly AT the floor (out),
+    // and cap 2 or 3 cuts inside the three-way df-4 tie (hash order).
+    def rep(text: String, k: Int) = Seq.fill(k)(text)
+    val texts = rep("xa ya za", 6) ++
+      (1 to 3).flatMap(k => rep(s"xb$k yb$k zb$k", 4)) ++
+      (1 to 2).flatMap(k => rep(s"xc$k yc$k zc$k", 2)) ++
+      Seq("r s t r s t") ++ (1 to 7).map(k => s"xd$k yd$k zd$k")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }
+    val df = docs.toDF("doc_id", "text")
+    def hot(sampleMod: Int, floorMult: Double, cap: Int) =
+      graft.operators.Dedup.hotShingles(df, "doc_id", "text", 3,
+        sampleMod = sampleMod, floorMult = floorMult, cap = cap)
+    assert(hotReference(docs, 1, 1.0, 4096).size === 4) // floor tie excluded
+    assert(hotReference(docs, 1, 0.999, 4096).size === 6) // ...and included
+    for ((mod, fm, cap) <- Seq((1, 1.0, 4096), (1, 1.0, 3), (1, 1.0, 2),
+        (1, 1.0, 1), (1, 0.999, 5), (1, 0.5, 4096), (2, 1.0, 4096),
+        (3, 1.0, 2))) {
+      assert(hot(mod, fm, cap) === hotReference(docs, mod, fm, cap),
+        s"sampleMod=$mod floorMult=$fm cap=$cap")
+    }
+  }
+
   test("registered dd_ngram_jaccard result unchanged by the hot-list stage") {
     val dir = "/root/testdata/sf0.001"
     val got = graft.queries.DedupQueries.queries("dd_ngram_jaccard")(spark, dir)

@@ -113,4 +113,30 @@ class ScratchPathSpec extends AnyFunSuite {
       s"the Dedup.jaccardPairs( call at $rel:$n is not inside " +
         s"DedupQueries.exactPairs (enclosing: $enclosing)")
   }
+
+  test("one hashed-set producer: SortedShingleHashes( only in shingleHashSets and hotShingles") {
+    // per-doc hashed shingle sets come from Dedup.shingleHashSets (the
+    // hot-list sample hashes its own 1-in-10 slice); a third operator
+    // call is a second producer growing back, and an exploded full
+    // set is the deleted inverted index
+    val lines = mainSourceLines
+    def enclosingDef(rel: String, n: Int): Option[String] = lines.filter {
+      case (r, m, l) => r == rel && m < n && l.trim.matches("""(private )?def \w+.*""")
+    }.lastOption.map(_._3.trim)
+    val uses = lines.collect {
+      case (rel, n, line) if rel.startsWith("operators/") &&
+          line.contains("SortedShingleHashes(") && !line.trim.startsWith("*") =>
+        (s"$rel:$n", enclosingDef(rel, n))
+    }
+    assert(uses.nonEmpty, "no SortedShingleHashes( call under operators/")
+    val stray = uses.filterNot { case (_, d) =>
+      d.exists(e => e.startsWith("def shingleHashSets(") || e.startsWith("def hotShingles("))
+    }
+    assert(stray.isEmpty, s"SortedShingleHashes( outside shingleHashSets/hotShingles: " +
+      stray.map { case (at, d) => s"$at (in $d)" }.mkString(", "))
+    val exploded = lines.collect {
+      case (rel, n, line) if line.contains("explode(col(\"hs\"))") => s"$rel:$n"
+    }
+    assert(exploded.isEmpty, s"full-set explode in main code: ${exploded.mkString(", ")}")
+  }
 }
