@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -146,57 +147,25 @@ object Similarity {
           col("dvals"), col("qvals"), lit(-1L)))
       .select("qid", "did")
 
-  /** Element-wise per-cluster mean over a `cluster` column, re-packed
-    * as an array and ROUNDED to 6 dp: raw avg() merges partial sums in
-    * shuffle-fetch order, and unrounded ulps can flip which centroids
-    * a query probes between runs (the kmeansCentroids determinism fix;
-    * one definition now serves both the trained quantizer and the
-    * in-plan ivfTopK overload — r18 review finding). */
-  private def clusterMean(d: DataFrame, vecCol: String,
-                          out: String): DataFrame =
-    d.select(col("cluster"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos").agg(avg("x").as("m"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => round(s.getField("m"), 6)).as(out))
+  /** A trained coarse quantizer: (cluster id, unit centroid) pairs
+    * sorted by cluster id. A driver value of c rows, built once per
+    * corpus by [[kmeansCentroids]] and passed to every IVF entry point. */
+  type Centroids = IndexedSeq[(Long, Array[Double])]
 
-  /** IVF-style ANN top-k: coarse centroids (mean vector per cluster
-    * column), each query probes its nprobe nearest centroids, and only
-    * those clusters' vectors are scanned. The cluster column plays the
-    * coarse-quantizer role (at scale: a k-means assignment). */
+  /** IVF ANN top-k: each query probes its nprobe nearest centroids, and
+    * only those cells' vectors are scanned. `data` carries its cell in
+    * `clusterCol` ([[ivfAssign]]'s output); `centroids` is the quantizer
+    * that assigned it. Probe scoring, candidate generation and the
+    * bounded-heap top-k all run in one plan; nprobe = |centroids| scans
+    * every cell and equals [[bruteTopK]]. */
   def ivfTopK(data: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, clusterCol: String, k: Int,
-              nprobe: Int = 2): DataFrame = {
-    val d = data.select(col(idCol).as("did"), toDouble(col(vecCol)).as("demb"),
-      col(clusterCol).as("cluster"))
-    val cent = clusterMean(d, "demb", "cemb")
-    ivfTopKWithCentroids(data, queries, idCol, vecCol, clusterCol,
-      cent, "cluster", "cemb", k, nprobe)
-  }
-
-  /** [[ivfTopK]] with the centroid table handed in — the SCALE shape:
-    * on a real corpus the centroids come from a separate (sampled)
-    * k-means job and are versioned alongside the cluster assignment,
-    * not recomputed per query; the in-plan mean of the other overload
-    * is the self-contained stand-in that reads the whole corpus once
-    * just to rebuild them. `centroids` needs one row per cluster:
-    * (centClusterCol, centVecCol: array<numeric>). Identical results
-    * to the in-plan overload when the handed-in frame IS the
-    * per-cluster mean (pinned by SimilaritySpec). Probe scoring,
-    * candidate generation and the bounded-heap top-k are shared. */
-  def ivfTopKWithCentroids(data: DataFrame, queries: DataFrame,
-                           idCol: String, vecCol: String, clusterCol: String,
-                           centroids: DataFrame, centClusterCol: String,
-                           centVecCol: String, k: Int,
-                           nprobe: Int = 2): DataFrame = {
+              vecCol: String, clusterCol: String, centroids: Centroids,
+              k: Int, nprobe: Int = 2): DataFrame = {
     val d = data.select(col(idCol).as("did"), toDouble(col(vecCol)).as("demb"),
       col(clusterCol).as("cluster"))
       .withColumn("dnrm", normPre(col("demb")))
-    val cent = centroids.select(col(centClusterCol).as("cluster"),
-      toDouble(col(centVecCol)).as("cemb"))
-      .withColumn("cnrm", normPre(col("cemb")))
-    val q = withNorm(queries, idCol, vecCol, "q")
-    val probes = probeCells(q, cent, nprobe)
+    val probes = probeCells(withNorm(queries, idCol, vecCol, "q"), centroids,
+      nprobe)
     val cand = d.join(broadcast(probes), Seq("cluster"))
       .filter(col("did") =!= col("qid"))
     topK(cand, k)
@@ -204,20 +173,17 @@ object Similarity {
 
   /** Which coarse cells each query probes — exposed as (qid, cluster)
     * so audits can weigh probed-cell mass (IVF's candidate fraction)
-    * next to recall. [[probeCells]] is the exact stage
-    * [[ivfTopKWithCentroids]] runs. */
+    * next to recall. [[probeCells]] is the exact stage [[ivfTopK]]
+    * runs. */
   def ivfProbes(queries: DataFrame, idCol: String, vecCol: String,
-                centroids: DataFrame, centClusterCol: String,
-                centVecCol: String, nprobe: Int): DataFrame = {
-    val cent = centroids.select(col(centClusterCol).as("cluster"),
-      toDouble(col(centVecCol)).as("cemb"))
-      .withColumn("cnrm", normPre(col("cemb")))
-    probeCells(withNorm(queries, idCol, vecCol, "q"), cent, nprobe)
+                centroids: Centroids, nprobe: Int): DataFrame =
+    probeCells(withNorm(queries, idCol, vecCol, "q"), centroids, nprobe)
       .select("qid", "cluster")
-  }
 
-  private def probeCells(q: DataFrame, cent: DataFrame,
+  private def probeCells(q: DataFrame, centroids: Centroids,
                          nprobe: Int): DataFrame = {
+    val cent = q.sparkSession.createDataFrame(centroids).toDF("cluster", "cemb")
+      .withColumn("cnrm", normPre(col("cemb")))
     val probeW = Window.partitionBy("qid").orderBy(
       (dotPre(col("qemb"), col("cemb")) / (col("qnrm") * col("cnrm"))).desc,
       col("cluster").asc)
@@ -228,10 +194,11 @@ object Similarity {
   }
 
   /** Fold over a one-row centroid array picking the max-dot cluster —
-    * the shuffle-free argmax behind both k-means training and corpus
-    * assignment. `cents` is array<struct<cluster:long, cemb:array<double>>>
-    * sorted by cluster id so strict-greater keeps the LOWEST cluster on
-    * exact ties (deterministic across partitionings). Centroids are
+    * the shuffle-free argmax behind corpus assignment, and the rule
+    * [[nearest]] follows on the driver. `cents` is
+    * array<struct<cluster:long, cemb:array<double>>> sorted by cluster
+    * id so strict-greater keeps the LOWEST cluster on exact ties
+    * (deterministic across partitionings). Centroids are
     * unit-normalized, so argmax dot = argmax cosine for any input
     * vector without normalizing the corpus side. */
   private def bestCluster(v: Column, cents: Column): Column =
@@ -245,65 +212,79 @@ object Similarity {
       },
       acc => acc.getField("c"))
 
-  private def centArray(centroids: DataFrame): DataFrame =
-    centroids.agg(sort_array(collect_list(
-      struct(col("cluster"), col("cemb")))).as("__cents"))
+  /** Training vectors per coarse cell: the quantizer is fit on at most
+    * PointsPerCell·c corpus vectors (the FAISS default; Jégou et al.,
+    * TPAMI 2011). */
+  private val PointsPerCell = 256
 
-  /** Deterministic spherical k-means coarse quantizer — the IVF index
-    * build. Init = the `c` lowest-id vectors (cluster = id rank);
-    * each Lloyd iteration assigns every vector to its max-cosine
-    * centroid via [[bestCluster]] (ONE narrow pass per iteration — the
-    * centroid table collapses to a single broadcast row, no shuffle on
-    * the corpus side) and recomputes centroids as the unit-normalized
-    * per-cluster mean of unit vectors, rounded to 6 dp so summation
-    * order can never flip an assignment across partitionings. Fixed
-    * iteration count (no data-dependent convergence probe) keeps the
-    * build deterministic; per-iteration centroid frames are eagerly
-    * localCheckpointed (c rows — O(iters) tiny jobs, O(1) lineage).
-    *
-    * Scale: at corpus scale this trains on a deterministic SAMPLE
-    * (pass a sampled frame) and the one full-corpus pass is the final
-    * assignment ([[ivfAssign]]) — the standard train-small/assign-once
-    * IVF build. A cluster that empties mid-iteration drops out (c
-    * shrinks), which the probe-side argmax handles transparently.
-    *
-    * Cluster labels are the seed vectors' OWN ids, not a 0..c-1 dense
-    * rank: labels only need to be stable and unique (every consumer
-    * keys or sorts by them), ids of the c lowest-id seeds are
-    * order-isomorphic to the dense rank so all id-ordered tie-breaks
-    * are unchanged, and the id avoids ranking the seed through an
-    * unpartitioned window — bounded at c rows here, but the lint
-    * banning single-task windows (RegistryPlanLintSpec) allows no
-    * unannotated exceptions. */
+  /** The plan's dot product ([[graft.plans.ArrayDot]]) on the driver. */
+  private def dot(a: Array[Double], b: Array[Double]): Double =
+    graft.plans.ArrayDot.compute(ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+
+  private def unit(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(dot(v, v))
+    v.map(_ / n)
+  }
+
+  /** [[bestCluster]] on the driver: strict-greater over clusters in id
+    * order, so an exact tie keeps the lower cluster id. */
+  private def nearest(u: Array[Double], cents: Centroids): Long =
+    cents.foldLeft((Double.MinValue, -1L)) { case (acc, (k, c)) =>
+      val dp = dot(u, c)
+      if (dp > acc._1) (dp, k) else acc
+    }._2
+
+  /** Deterministic spherical k-means coarse quantizer — the training
+    * half of the IVF index build. One Spark action collects the training
+    * set: the PointsPerCell·c vectors first in (xxhash64(id), id) order
+    * (the whole corpus below that size). The c-row fit runs on the
+    * driver, over that set in id order: zero-norm vectors are dropped
+    * and the rest normalized; the c lowest ids seed the clusters, each
+    * labelled by its seed's id; each of `iters` Lloyd rounds assigns
+    * every vector to its [[nearest]] centroid and replaces each centroid
+    * by the normalized per-cluster mean, rounded to 6 dp. A cluster that
+    * empties drops out (c shrinks). The fixed sample and round count
+    * make the build deterministic. The corpus-sized passes stay in
+    * Spark: [[ivfAssign]] and [[ivfTopK]]. */
   def kmeansCentroids(data: DataFrame, idCol: String, vecCol: String,
-                      c: Int, iters: Int = 8): DataFrame = {
+                      c: Int, iters: Int = 8): Centroids = {
     require(c >= 1 && iters >= 0, s"need c>=1, iters>=0 (got $c, $iters)")
-    val vn = data
-      .select(col(idCol).as("__vid"), toDouble(col(vecCol)).as("__e"))
-      .withColumn("__n", normPre(col("__e")))
-      .filter(col("__n") > 0)
-      .select(col("__vid"), transform(col("__e"), x => x / col("__n")).as("__u"))
-    var cent = vn.orderBy("__vid").limit(c)
-      .select(col("__vid").cast("long").as("cluster"), col("__u").as("cemb"))
-      .localCheckpoint()
+    val units = data
+      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(PointsPerCell * c)
+      .select(col(idCol).cast("long"), toDouble(col(vecCol)))
+      .collect().filterNot(_.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+      .filter { case (_, e) => dot(e, e) > 0 }
+      .map { case (id, e) => (id, unit(e)) }.toIndexedSeq
+    var cents: Centroids = units.take(c)
     for (_ <- 1 to iters) {
-      val asg = vn.crossJoin(broadcast(centArray(cent)))
-        .select(col("__u"), bestCluster(col("__u"), col("__cents")).as("cluster"))
-      cent = clusterMean(asg, "__u", "__r")
-        .withColumn("cemb", transform(col("__r"), x => x / normPre(col("__r"))))
-        .select("cluster", "cemb")
-        .localCheckpoint()
+      cents = units.groupBy { case (_, u) => nearest(u, cents) }
+        .toIndexedSeq.sortBy(_._1)
+        .map { case (k, members) =>
+          // id-order sum, then SQL round(_, 6): HALF_UP on the shortest decimal
+          (k, unit(Array.tabulate(members.head._2.length) { i =>
+            java.math.BigDecimal
+              .valueOf(members.foldLeft(0.0)(_ + _._2(i)) / members.size)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+          }))
+        }
     }
-    cent
+    cents
   }
 
   /** Assigns every corpus vector its coarse cell: one narrow pass with
     * the centroid set riding as a single broadcast row — the full-corpus
     * half of the IVF index build. Output = `data` + `cluster`. */
   def ivfAssign(data: DataFrame, vecCol: String,
-                centroids: DataFrame): DataFrame =
-    data.crossJoin(broadcast(centArray(centroids)))
+                centroids: Centroids): DataFrame = {
+    val cents = data.sparkSession.createDataFrame(Seq(Tuple1(centroids)))
+      .select(col("_1")
+        .cast("array<struct<cluster:bigint,cemb:array<double>>>")
+        .as("__cents"))
+    data.crossJoin(broadcast(cents))
       .withColumn("cluster",
         bestCluster(toDouble(col(vecCol)), col("__cents")))
       .drop("__cents")
+  }
 }

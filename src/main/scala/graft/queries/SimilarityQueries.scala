@@ -69,18 +69,20 @@ object SimilarityQueries {
     * scale; a corpus deployment uses C ≈ √N with the same machinery. */
   val IvfCells = 10
 
-  /** The IVF INDEX, staged once per (session, dir) like any index
-    * build: a deterministic spherical k-means quantizer trained on the
-    * corpus (at 100 TB: on a deterministic sample) and the one-pass
-    * cell assignment. The query measures probe + pruned scan — the
-    * serving cost — exactly as a real IVF deployment never re-trains
-    * its quantizer per query. */
-  private def ivfCentroids(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Stage.frame(s, dir, "ss_ivf_centroids") {
+  /** The IVF quantizer, a published corpus artifact like
+    * dd_hot_shingles: a deterministic spherical k-means fit on a bounded
+    * corpus sample (Similarity.kmeansCentroids, one Spark action), held
+    * once per (session, dir) as a driver value. The query measures probe
+    * + pruned scan — the serving cost — exactly as a real IVF deployment
+    * never re-trains its quantizer per query. */
+  private def ivfCentroids(s: SparkSession, dir: String): Similarity.Centroids =
+    graft.operators.Stage.value(s, dir, "ss_ivf_centroids") {
       Similarity.kmeansCentroids(data(s, dir), "vec_id", "embedding",
         c = IvfCells, iters = 8)
     }
 
+  /** The IVF index: the one-pass cell assignment, staged once per
+    * (session, dir) like any index build. */
   private def ivfIndexed(s: SparkSession, dir: String): DataFrame =
     graft.operators.Stage.frame(s, dir, "ss_ivf_index") {
       Similarity.ivfAssign(data(s, dir), "embedding", ivfCentroids(s, dir))
@@ -102,10 +104,9 @@ object SimilarityQueries {
       // RecallFloorSf1Spec pin >=0.85 at BOTH SFs so a drift fails
       // loudly. On clustered real embeddings the same index probes
       // C≈√N cells with nprobe ≪ C.
-      Similarity.ivfTopKWithCentroids(ivfIndexed(s, dir), querySet(s, dir),
-        "vec_id", "embedding", clusterCol = "cluster",
-        centroids = ivfCentroids(s, dir), centClusterCol = "cluster",
-        centVecCol = "cemb", k = K, nprobe = 7),
+      Similarity.ivfTopK(ivfIndexed(s, dir), querySet(s, dir), "vec_id",
+        "embedding", clusterCol = "cluster", centroids = ivfCentroids(s, dir),
+        k = K, nprobe = 7),
       bruteBase(s, dir),
       Seq("q_id", "vec_id"))
       .orderBy("q_id", "rank")
@@ -155,9 +156,8 @@ object SimilarityQueries {
       .filter(col("vec_id") % 50 === 0)
     val served =
       graft.streaming.StreamOps.runBatchTransforms(s, qStream, "st_ivf_serve") {
-        qb => Similarity.ivfTopKWithCentroids(indexed, qb, "vec_id",
-          "embedding", clusterCol = "cluster", centroids = cents,
-          centClusterCol = "cluster", centVecCol = "cemb", k = K, nprobe = 7)
+        qb => Similarity.ivfTopK(indexed, qb, "vec_id", "embedding",
+          clusterCol = "cluster", centroids = cents, k = K, nprobe = 7)
       }
     graft.operators.Audit.withRecall(served, bruteBase(s, dir),
       Seq("q_id", "vec_id"))

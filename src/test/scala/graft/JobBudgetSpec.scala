@@ -2,13 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.queries.DedupQueries
+import graft.queries.{DedupQueries, SimilarityQueries}
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Per-query Spark job budget for the dedup family at sf0.001. Fixed
-  * per-job latency dominates small-input passes, and nothing else pins
-  * how many jobs a query runs, so a change that adds jobs fails here.
+/** Per-query Spark job budget for the dedup and similarity families at
+  * sf0.001. Fixed per-job latency dominates small-input passes, and
+  * nothing else pins how many jobs a query runs, so a change that adds
+  * jobs fails here.
   *
   * Each query runs in a fresh `newSession()` (its staged frames and
   * values are rebuilt, as on a cold pass) and is counted twice: jobs
@@ -27,6 +28,8 @@ class JobBudgetSpec extends SparkSpec {
     Tables.documents(s, dir)
     Tables.embeddings(s, dir)
   }
+
+  private val queries = DedupQueries.queries ++ SimilarityQueries.queries
 
   private lazy val budget: Map[String, (Int, Int)] = {
     val src = scala.io.Source.fromResource("job_budget.tsv")
@@ -55,14 +58,15 @@ class JobBudgetSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("the budget covers exactly the registered dd_* queries") {
-    assert(budget.keySet === DedupQueries.queries.keySet)
+  test("the budget covers exactly the registered dd_* and similarity queries") {
+    assert(budget.keySet ===
+      DedupQueries.queries.keySet ++ SimilarityQueries.queries.keySet)
   }
 
-  DedupQueries.queries.keys.toSeq.sorted.foreach { q =>
+  queries.keys.toSeq.sorted.foreach { q =>
     test(s"$q stays within its job budget") {
       val session = spark.newSession()
-      val (df, build) = withJobCount(DedupQueries.queries(q)(session, dir))
+      val (df, build) = withJobCount(queries(q)(session, dir))
       val (_, save) = withJobCount(df.write.format("noop").mode("overwrite").save())
       info(s"jobs\t$q\t$build\t$save")
       val (maxBuild, maxSave) = budget.getOrElse(q, fail(s"no budget entry for $q"))

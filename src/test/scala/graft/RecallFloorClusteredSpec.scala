@@ -60,13 +60,12 @@ class RecallFloorClusteredSpec extends SparkSpec {
 
   test("clustered IVF tune (nprobe=2) holds recall >= 0.85 at cand_frac <= 0.35") {
     val cent = Similarity.kmeansCentroids(data, "vec_id", "embedding",
-      c = graft.queries.SimilarityQueries.IvfCells, iters = 8).localCheckpoint()
+      c = graft.queries.SimilarityQueries.IvfCells, iters = 8)
     val indexed = Similarity.ivfAssign(data, "embedding", cent).localCheckpoint()
-    val rec = recallMin(Similarity.ivfTopKWithCentroids(indexed, qs,
-      "vec_id", "embedding", "cluster", cent, "cluster", "cemb", K, nprobe = 2))
+    val rec = recallMin(Similarity.ivfTopK(indexed, qs, "vec_id", "embedding",
+      "cluster", cent, K, nprobe = 2))
     val sizes = indexed.groupBy("cluster").count()
-    val mass = Similarity.ivfProbes(qs, "vec_id", "embedding",
-      cent, "cluster", "cemb", 2)
+    val mass = Similarity.ivfProbes(qs, "vec_id", "embedding", cent, 2)
       .join(sizes, "cluster").agg(sum("count")).collect()(0).getLong(0)
     val frac = mass.toDouble / (nq * n)
     assert(rec >= 0.85, s"clustered IVF recall collapsed: $rec (measured 0.998)")

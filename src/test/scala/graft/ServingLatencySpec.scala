@@ -31,7 +31,7 @@ class ServingLatencySpec extends SparkSpec {
     import graft.queries.SimilarityQueries.IvfCells
     val data = graft.Tables.embeddings(spark, dir)
     val cent = Similarity.kmeansCentroids(data, "vec_id", "embedding",
-      c = IvfCells, iters = 8).localCheckpoint()
+      c = IvfCells, iters = 8)
     (cent, Similarity.ivfAssign(data, "embedding", cent).localCheckpoint())
   }
 
@@ -49,8 +49,8 @@ class ServingLatencySpec extends SparkSpec {
     graft.streaming.StreamOps
       .runBatchTransforms(spark, qStream, name) { qb =>
         stall(batch.getAndIncrement())
-        Similarity.ivfTopKWithCentroids(indexed, qb, "vec_id", "embedding",
-          "cluster", cent, "cluster", "cemb", K, nprobe = 7)
+        Similarity.ivfTopK(indexed, qb, "vec_id", "embedding", "cluster",
+          cent, K, nprobe = 7)
       }.write.format("noop").mode("overwrite").save()
     graft.streaming.StreamOps.ReplayMetrics.snapshot.getOrElse(name,
       fail(s"no replay metrics recorded for $name"))

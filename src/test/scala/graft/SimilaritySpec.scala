@@ -62,57 +62,82 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  private lazy val trained = Similarity.kmeansCentroids(emb, "vec_id",
+    "embedding", c = 10, iters = 8)
+
   test("ivfTopK with nprobe = all clusters equals brute force") {
-    val ivf = ranks(Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-      clusterCol = "label", k = 10, nprobe = 10))
+    val ivf = ranks(Similarity.ivfTopK(
+      Similarity.ivfAssign(emb, "embedding", trained), queries, "vec_id",
+      "embedding", clusterCol = "cluster", centroids = trained, k = 10,
+      nprobe = trained.size))
     val brute = ranks(Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10))
     assert(ivf === brute)
   }
 
-  test("ivfTopK with handed-in centroids equals the in-plan recompute") {
-    import org.apache.spark.sql.functions._
-    // the scale path: centroids arrive precomputed (k-means job output)
-    // instead of being rebuilt from the corpus inside the query plan.
-    // Handing in exactly the per-cluster mean must reproduce the
-    // in-plan overload row for row — scores, ranks and tie-breaks.
-    val cents = emb.select(col("label"),
-        posexplode(graft.functions.VectorFunctions.toDouble(col("embedding")))
-          .as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(avg("x").as("m"))
-      .groupBy("label")
-      // 6-dp rounded like the operator's own clusterMean — the handed-in
-      // frame must BE the per-cluster mean as the operator defines it
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => round(s.getField("m"), 6)).as("cvec"))
-    for (np <- Seq(1, 2)) {
-      val inPlan = ranks(Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-        clusterCol = "label", k = 5, nprobe = np))
-      val handed = ranks(Similarity.ivfTopKWithCentroids(emb, queries,
-        "vec_id", "embedding", "label", cents, "label", "cvec", k = 5,
-        nprobe = np))
-      assert(handed === inPlan, s"nprobe=$np diverged")
-    }
-  }
-
   test("kmeans IVF index: deterministic rebuild, recall@10 >= 0.75 at nprobe 6") {
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      c = 10, iters = 8)
     // deterministic: an independent rebuild lands on identical centroids
     // (6-dp-rounded means pin summation-order ulps)
-    val snap = cents.orderBy("cluster").collect().map(_.toString).toSeq
+    val snap = trained.map { case (k, v) => (k, v.toSeq) }
     val snap2 = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      c = 10, iters = 8).orderBy("cluster").collect().map(_.toString).toSeq
+      c = 10, iters = 8).map { case (k, v) => (k, v.toSeq) }
     assert(snap === snap2)
     assert(snap.size === 10)
     // the k-means quantizer at nprobe 6/10 must keep recall a user
     // would accept (measured ~0.85 on this corpus; the label quantizer
     // it replaced measured 0.57 at nprobe 4 — neighbor-blind cells)
-    val indexed = Similarity.ivfAssign(emb, "embedding", cents)
-    val ivf = ranks(Similarity.ivfTopKWithCentroids(indexed, queries,
-      "vec_id", "embedding", "cluster", cents, "cluster", "cemb",
-      k = 10, nprobe = 6))
+    val indexed = Similarity.ivfAssign(emb, "embedding", trained)
+    val ivf = ranks(Similarity.ivfTopK(indexed, queries, "vec_id", "embedding",
+      "cluster", trained, k = 10, nprobe = 6))
     val brute = ranks(Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10))
     val recall = ivf.keySet.count(brute.keySet.contains).toDouble / brute.size
     assert(recall >= 0.75, s"IVF recall@10 regressed: $recall (measured ~0.85)")
+  }
+
+  private def train(rows: Seq[(Long, Array[Float])], c: Int, iters: Int) =
+    Similarity.kmeansCentroids(rows.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", c, iters).map { case (k, v) => (k, v.toSeq) }
+
+  test("kmeansCentroids: zero-norm rows skipped, iters = 0 returns the normalized seeds") {
+    val rows = Seq(1L -> Array(0f, 0f), 2L -> Array(3f, 4f),
+      3L -> Array(0f, 2f), 4L -> Array(5f, 0f))
+    // id 1 has norm 0, so the two lowest usable ids seed the clusters
+    assert(train(rows, c = 2, iters = 0) ===
+      Seq(2L -> Seq(0.6, 0.8), 3L -> Seq(0.0, 1.0)))
+    // c above the vector count: every usable vector is its own cluster
+    val all = train(rows, c = 10, iters = 8)
+    assert(all.map(_._1) === Seq(2L, 3L, 4L))
+    all.zip(Seq(Seq(0.6, 0.8), Seq(0.0, 1.0), Seq(1.0, 0.0))).foreach {
+      case ((k, got), want) => got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g - w) < 1e-12, s"cluster $k: $got vs $want")
+      }
+    }
+  }
+
+  test("kmeansCentroids: an exact dot tie goes to the lower cluster id") {
+    // u = (1,1)/sqrt 2 has bit-equal dots with seeds (1,0) and (0,1)
+    val out = train(Seq(1L -> Array(1f, 0f), 2L -> Array(0f, 1f),
+      3L -> Array(1f, 1f)), c = 2, iters = 1)
+    // cluster 1 = {(1,0), u}: mean (0.85355339, 0.35355339) rounds to
+    // (0.853553, 0.353553), then unit length; cluster 2 keeps (0,1)
+    val n = math.sqrt(0.853553 * 0.853553 + 0.353553 * 0.353553)
+    assert(out === Seq(1L -> Seq(0.853553 / n, 0.353553 / n), 2L -> Seq(0.0, 1.0)))
+  }
+
+  test("kmeansCentroids: a duplicate seed's higher-id cluster empties and drops out") {
+    val out = train(Seq(1L -> Array(2f, 0f), 2L -> Array(1f, 0f),
+      3L -> Array(0f, 1f)), c = 3, iters = 1)
+    assert(out === Seq(1L -> Seq(1.0, 0.0), 3L -> Seq(0.0, 1.0)))
+  }
+
+  test("kmeansCentroids at sf0.001 equals the Spark Lloyd loop's centroids bit for bit") {
+    // SHA-256 of "id:hexbits,hexbits,...;..." over the c = 10, iters = 8
+    // centroids, captured from the Spark training loop this trainer replaced
+    val enc = trained.map { case (k, v) =>
+      s"$k:" + v.map(d => java.lang.Long.toHexString(
+        java.lang.Double.doubleToLongBits(d))).mkString(",")
+    }.mkString(";")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(enc.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(sha === "cbe9e1ea72d45abc4dc5adcee07b64b550e7972074e3d16b3b34dd4e1de7cb89")
   }
 }
