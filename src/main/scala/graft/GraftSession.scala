@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's tuned defaults.
@@ -57,8 +59,12 @@ object GraftSession {
       // operators.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", (256L * 1024).toString))
-      // managed (bucketed) tables land in scratch, not the repo cwd
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // managed (bucketed) tables land in scratch, not the repo cwd,
+      // in a directory of this JVM's own: Bucketing.writeBucketed
+      // deletes and rewrites its tables on every fresh JVM, so a shared
+      // warehouse let two graft JVMs on one host corrupt each other's
+      // bucketed tables mid-write
+      .config("spark.sql.warehouse.dir", defaultWarehouseDir)
       // Report the sortBy order of bucketed scans (off by default
       // since 3.0 because a multi-file bucket can't guarantee it, and
       // the check lists files at planning). Bucketing.writeBucketed
@@ -161,6 +167,14 @@ object GraftSession {
     * driver beside builder) keeps its live shuffle files. */
   private[graft] def defaultLocalDir: String =
     PidScratch.root("graft-local").toString
+
+  /** `<java.io.tmpdir>/graft-warehouse/pid-<this pid>` under the
+    * shared pid-scoped policy ([[PidScratch.claim]]: dead siblings are
+    * reclaimed at session start). Under java.io.tmpdir rather than
+    * [[PidScratch.root]]'s tmpfs preference: bucketed tables are data
+    * that outlives a query, not shuffle scratch, and must not hold RAM. */
+  private[graft] def defaultWarehouseDir: String =
+    PidScratch.claim(Paths.get(sys.props("java.io.tmpdir"), "graft-warehouse")).toString
 
   /** The session every main runs on: `SPARK_GRAFT_CPUS` local cores
     * and shuffle partitions (`defaultCpus` when unset), WARN logging,

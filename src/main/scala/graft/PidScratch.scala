@@ -3,9 +3,10 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** The one scratch-directory policy, shared by the shuffle scratch
-  * (spark.local.dir, [[GraftSession.defaultLocalDir]]) and the
-  * streaming replay root (checkpoints and side outputs in
-  * [[graft.streaming.StreamOps]]).
+  * (spark.local.dir, [[GraftSession.defaultLocalDir]]), the managed-table
+  * warehouse ([[GraftSession.defaultWarehouseDir]], on disk via
+  * [[claim]]) and the streaming replay root (checkpoints and side
+  * outputs in [[graft.streaming.StreamOps]]).
   *
   * tmpfs scratch consumes RAM, so /dev/shm is preferred only above a
   * usable-space floor: spills that should RELIEVE memory pressure, and

@@ -2,9 +2,13 @@ package graft.operators
 
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.plans.SimHash64
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for LLM-pipeline corpora.
   *
@@ -496,91 +500,90 @@ object Dedup {
     * representative of its duplicate cluster — the step that turns
     * pairwise near-dup output into "keep one doc per cluster".
     *
-    * Distributed min-label propagation — but ONLY over PAIR ENDPOINTS.
-    * A vertex with no edge can never change label, and in a dedup graph
-    * the endpoints are a vanishing fraction of the corpus (most docs
-    * are not near-duplicates of anything), so shuffling every vertex
-    * through every round would spend the whole loop re-asserting
-    * label = id for singletons. The loop converges over the endpoint
-    * set; singletons rejoin with label = id through one final narrow
-    * left join.
+    * Semi-naive min-label propagation over PAIR ENDPOINTS only, the
+    * way RaSQL evaluates a recursive min-aggregate and Pregelix halts
+    * vertices: only a vertex whose label fell in the last round sends
+    * it on, and the loop has converged when that delta is empty. A
+    * vertex with no edge never changes label and never enters the loop
+    * (in a dedup graph most docs are near-duplicates of nothing); it
+    * rejoins with label = id through one final left join.
     *
-    * Each round every endpoint takes the min of its own label and its
-    * neighbors' labels (one hash shuffle on vertex id per round), until
-    * a round changes nothing. Labels are localCheckpoint'ed per round —
-    * without lineage truncation an iterative DataFrame loop re-executes
-    * every prior round per action, turning O(rounds) into O(rounds²).
-    * Checkpoints are LAZY and each round's convergence probe is the
-    * action that materializes them: one Spark job per round, not two.
+    * The edges (symmetrized), the labels and every round's delta are
+    * RDDs on ONE HashPartitioner(spark.sql.shuffle.partitions), so the
+    * delta ⋈ edges and labels ⋈ candidates joins are narrow and a round
+    * has exactly one shuffle: the (dst, label) min. Round 1 reads the
+    * edges alone (a narrow per-src min over the neighbours). Each round
+    * then runs ONE Spark job — the count of the labels it lowered,
+    * which also materializes the round — and no SQL execution (the
+    * only one is the pairs' Dataset.rdd conversion, before round 1);
+    * its state is localCheckpoint'ed, so lineage stays one round deep
+    * instead of re-executing every prior round per action.
     *
-    * Rounds needed = the graph diameter. Near-dup clusters are
-    * quasi-cliques (every member pairs with most others — that is what
-    * "near-duplicate" means), so the diameter is 1-3 hops and this
-    * converges in 2-4 rounds of narrow (id, label) shuffles regardless
-    * of corpus size; the star-contraction family (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) drops the
-    * bound to O(log n) rounds but rewrites the EDGE set (wider shuffles
-    * per round) — the wrong trade for flat dedup graphs. maxIter guards
-    * the pathological chain case; non-convergence throws rather than
-    * returning silently-wrong upper-approximation labels. */
+    * Rounds = component diameter + 1 (the last one finds the delta
+    * empty). Near-dup clusters are quasi-cliques, so that is 2-4
+    * rounds regardless of corpus size; the star-contraction family
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14) drops the bound to O(log n) rounds but rewrites the EDGE
+    * set every round — the wrong trade for flat dedup graphs. A
+    * DataFrame formulation of the same loop cannot keep the
+    * co-partitioning: under AQE a checkpointed frame's reads are
+    * coalesced, so every round re-exchanges both join sides (measured
+    * 6 jobs and 2 QueryExecutions a round).
+    *
+    * Ids must be integral (the loop keys on Long; labels come back in
+    * the id column's type). maxIter counts every round, round 1 and
+    * the final empty one included, and guards the pathological chain
+    * case: non-convergence throws rather than returning
+    * silently-wrong upper-approximation labels. */
   def connectedComponents(vertices: DataFrame, idCol: String,
                           pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 25): DataFrame = {
-    // the convergence probe's decimal label-sum needs NUMERIC ids: a
-    // string id would crash its cast mid-loop under ANSI or (ANSI off)
-    // null the sum and fake round-1 convergence — fail LOUDLY at plan
-    // build instead, per this operator's throw-don't-be-wrong contract
-    require(vertices.schema(idCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"connectedComponents needs a numeric id column; '$idCol' is " +
-        s"${vertices.schema(idCol).dataType.simpleString} — hash or rank " +
-        "string ids to longs first (RankOps.withGlobalRank)")
-    // the edge set is checkpointed PRE-PARTITIONED on src: every round
-    // joins labels (already id-partitioned by the previous round's
-    // groupBy) against it, so after the one staging shuffle no round
-    // ever re-exchanges an edge — at corpus scale the edge set is the
-    // wide side of the loop
-    val sym = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(eager = false)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(eager = false)
-    // convergence probe: labels only ever DECREASE, so the label sum
-    // strictly decreases iff any vertex changed — one overflow-safe
-    // decimal agg over the checkpointed set instead of a per-round
-    // labels⋈labels comparison join. Running the probe is ALSO what
-    // materializes the round's lazy checkpoint.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      // sum over zero rows is NULL — normalize so an empty edge set
-      // converges instead of NPEing on the compare
-      val d = df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (d == null) java.math.BigDecimal.ZERO else d
+    val idType = vertices.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connectedComponents needs an integral id column; '$idCol' is " +
+        s"${idType.simpleString} — hash or rank string ids to longs first " +
+        "(RankOps.withGlobalRank)")
+    val spark = vertices.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // every round reads the edges: persisted, not checkpointed — their
+    // lineage is the pair plan, which never grows, and a job checkpoints
+    // only the marked RDDs nearest its result, so a mark here would sit
+    // behind each round's state and never be acted on. A pair with a
+    // null endpoint joins nothing.
+    val edges = pairs.where(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).rdd
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // a round's state: vertex -> (label, label before the round)
+    def settle(state: RDD[(Long, (Long, Long))]) = {
+      state.localCheckpoint()
+      val improved = state.filter { case (_, (l, prev)) => l < prev }.mapValues(_._1)
+      (state.mapValues(_._1), improved, improved.count())
     }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = sym.join(labels, sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"))
-        .union(labels)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(eager = false)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
+    var (labels, delta, lowered) = settle(edges.reduceByKey(part, math.min(_, _))
+      .mapPartitions(_.map { case (v, m) => (v, (math.min(v, m), v)) },
+        preservesPartitioning = true))
+    var rounds = 1
+    while (lowered > 0 && rounds < maxIter) {
+      val cand = delta.join(edges, part)
+        .map { case (_, (l, dst)) => (dst, l) }
+        .reduceByKey(part, math.min(_, _))
+      val (l, d, n) = settle(labels.leftOuterJoin(cand, part).mapValues {
+        case (prev, c) => (c.fold(prev)(math.min(prev, _)), prev)
+      })
+      labels = l; delta = d; lowered = n
+      rounds += 1
     }
-    require(converged,
+    edges.unpersist(blocking = false)
+    require(lowered == 0,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the near-dup quasi-clique assumption")
-    // singletons (no edge) pass through with label = id — they never
-    // entered the loop
+    val labelled = spark.createDataFrame(labels).toDF("__eid", "label")
+      .select(col("__eid").cast(idType).as("__eid"), col("label").cast(idType).as("label"))
     vertices.select(col(idCol).as("id"))
-      .join(labels.select(col("id").as("__eid"), col("label")),
-        col("id") === col("__eid"), "left")
+      .join(labelled, col("id") === col("__eid"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
   }
 
@@ -631,10 +634,12 @@ object Dedup {
                        newPairs: DataFrame, aCol: String, bCol: String,
                        maxIter: Int = 25): DataFrame = {
     val prev = prevLabels.select(col(idCol).as("id"), col(labelCol).as("label"))
-    // lazy checkpoints: both frames feed multiple branches below (the
-    // edge projection, the contracted vertex set, the untouched
-    // anti-join); the first action materializes them once, and build
-    // time runs no jobs
+    // checkpoints: both frames feed multiple branches below (the edge
+    // projection, the contracted vertex set, the untouched anti-join),
+    // so each computes once. Non-eager is not job-free: under AQE each
+    // call runs the frame's shuffle-map stages at build (touched's
+    // joins: 6 jobs at sf0.001), and only the final stage waits for
+    // the first action
     val pairs = newPairs.select(col(aCol).as("pa"), col(bCol).as("pb"))
       .localCheckpoint(eager = false)
     val touched = touchedVertices(prev, "id", "label", pairs, "pa", "pb")

@@ -11,9 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per session+input is the same stage-once-then-query discipline as
   * the bucketed-join tables.
   *
-  * Frames are LAZY localCheckpoints: registering a query stays a pure
-  * plan build, the first ACTION materializes the stage, and later
-  * queries (or bench repeats) read the stored blocks. Keyed by session
+  * Frames are `localCheckpoint(eager = false)`, which under AQE is only
+  * half lazy: the call itself runs one "localCheckpoint" SQL execution
+  * that materializes every shuffle-map stage of the frame's plan (3-5
+  * jobs for the dedup stages at sf0.001), and only the final stage
+  * waits for the first ACTION that reads the frame. Later queries (or
+  * bench repeats) read the stored blocks. Keyed by session
   * so spec sessions never cross-pollinate, and by dir so scale factors
   * never collide (DedupSpec pins both properties).
   *
@@ -75,7 +78,8 @@ object Stage {
   }
 
   /** A staged DataFrame: built once per (session, dir, key), shared as
-    * a lazy localCheckpoint. */
+    * a non-eager localCheckpoint (its shuffle-map stages run here; see
+    * above). */
   def frame(s: SparkSession, dir: String, key: String)
            (build: => DataFrame): DataFrame =
     memo(s, dir, key)(build.localCheckpoint(eager = false))

@@ -137,8 +137,9 @@ object DedupQueries {
     * session+input and every family member reads the staged frame.
     * Same precedent as Bucketing's stage-once-skip-if-present tables.
     *
-    * Frames are LAZY localCheckpoints: registering a query stays a
-    * pure plan build, the first ACTION materializes the stage, and
+    * Frames are Stage.frame's non-eager localCheckpoints: the first
+    * registration runs the stage's shuffle-map stages at the call (AQE
+    * plans them eagerly), the first ACTION runs its final stage, and
     * later queries (or bench repeats) read the stored blocks. Keyed by
     * session so spec sessions never cross-pollinate, and by dir so
     * sf0.01 and sf0.1 never collide. */
@@ -389,9 +390,11 @@ object DedupQueries {
     * full relabel. */
   def ddClusterIncr(s: SparkSession, dir: String): DataFrame = {
     val docsAll = Tables.documents(s, dir)
-    // lazy checkpoint: the labels feed BOTH the sizes aggregate and the
+    // checkpointed: the labels feed BOTH the sizes aggregate and the
     // join below — without lineage truncation the untouched∪relabeled
-    // union executes once per branch
+    // union executes once per branch. Not free at build: under AQE the
+    // call runs the union's shuffle-map stages (7 jobs at sf0.001);
+    // only its final stage waits for the first action
     val labels = Dedup.updateComponents(prevDayLabels(s, dir), "id", "cluster_id",
       docsAll.filter(col("doc_id") % 5 === 0), "doc_id",
       newDayPairs(s, dir), "a_id", "b_id")

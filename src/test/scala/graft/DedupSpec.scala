@@ -349,6 +349,58 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: an empty pair set labels every vertex with its own id") {
+    val verts = Seq(3L, 1L, 2L).toDF("doc_id")
+    val pairs = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id",
+      maxIter = 1).as[(Long, Long)].collect().toMap
+    assert(out === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("connectedComponents keeps IntegerType ids IntegerType") {
+    val verts = Seq(4, 3, 2, 1, 9).toDF("doc_id")
+    val pairs = Seq((4, 3), (3, 2), (2, 1)).toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+    assert(out.schema.map(_.dataType) ===
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+    assert(out.as[(Int, Int)].collect().toMap ===
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 1, 9 -> 9))
+  }
+
+  test("connectedComponents rejects a string id column before any job starts") {
+    val verts = Seq("a", "b").toDF("doc_id")
+    val pairs = Seq(("a", "b")).toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusBridge.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+      }
+      assert(e.getMessage.contains("RankOps.withGlobalRank"))
+      org.apache.spark.ListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0)
+  }
+
+  test("connectedComponents: a 4-clique plus a disjoint pair converges in exactly 2 rounds") {
+    // diameter 1: round 1 labels everything, round 2 finds no change
+    val verts = (1L to 6L).toDF("doc_id")
+    val clique = for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)
+    val pairs = (clique :+ ((6L, 5L))).toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id",
+      maxIter = 2).as[(Long, Long)].collect().toMap
+    assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L))
+    assertThrows[IllegalArgumentException] {
+      Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id", maxIter = 1)
+    }
+  }
+
   // yesterday: clusters {1,2}, {5,6}, singleton 9 (labels = min ids)
   private def prevLabels =
     Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (9L, 9L))

@@ -37,4 +37,11 @@ class GraftSessionSpec extends SparkSpec {
       .selectExpr("tk[0].id", "tk[1].id").collect().head
     assert((rows.getLong(0), rows.getLong(1)) === ((1L, 3L)))
   }
+
+  test("the warehouse is pid-scoped: concurrent JVMs never share bucketed tables") {
+    val live = java.lang.ProcessHandle.current().pid()
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+    assert(wh.endsWith(s"/graft-warehouse/pid-$live"),
+      s"warehouse $wh is not this JVM's pid-scoped directory")
+  }
 }

@@ -2,9 +2,13 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import graft.queries.{DedupQueries, SimilarityQueries}
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query Spark job budget for the dedup and similarity families at
   * sf0.001. Fixed per-job latency dominates small-input passes, and
@@ -41,21 +45,34 @@ class JobBudgetSpec extends SparkSpec {
     finally src.close()
   }
 
-  /** `body`'s result and the jobs started while it ran, counted with
-    * the listener bus drained on both sides. */
-  private def withJobCount[T](body: => T): (T, Int) = {
+  /** `body`'s result, the jobs started and the action names of the SQL
+    * executions (QueryExecutions reported to the session's listeners)
+    * finished while it ran, with the listener bus drained on both
+    * sides. */
+  private def withCounts[T](body: => T): (T, Int, Seq[String]) = {
     val sc = spark.sparkContext
     ListenerBusBridge.drain(sc)
-    val n = new AtomicInteger
+    val jobs = new AtomicInteger
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        execs.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        execs.add(f)
     }
     sc.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
     try {
       val out = body
       ListenerBusBridge.drain(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(listener)
+      (out, jobs.get, execs.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
   }
 
   test("the budget covers exactly the registered dd_* and similarity queries") {
@@ -66,12 +83,36 @@ class JobBudgetSpec extends SparkSpec {
   queries.keys.toSeq.sorted.foreach { q =>
     test(s"$q stays within its job budget") {
       val session = spark.newSession()
-      val (df, build) = withJobCount(queries(q)(session, dir))
-      val (_, save) = withJobCount(df.write.format("noop").mode("overwrite").save())
+      val (df, build, _) = withCounts(queries(q)(session, dir))
+      val (_, save, _) = withCounts(df.write.format("noop").mode("overwrite").save())
       info(s"jobs\t$q\t$build\t$save")
       val (maxBuild, maxSave) = budget.getOrElse(q, fail(s"no budget entry for $q"))
       assert(build <= maxBuild && save <= maxSave,
         s"$q ran $build build / $save save jobs; budget $maxBuild / $maxSave")
     }
+  }
+
+  test("connectedComponents runs one job per round and no SQL execution in its rounds") {
+    import spark.implicits._
+    // an n-chain has diameter n - 1, so the loop runs n rounds; the
+    // final left join onto the vertices then costs the same jobs
+    // whatever the round count (4 on Spark 4.1)
+    val joinJobs = Seq(3, 6).map { n =>
+      val verts = (1L to n).toDF("doc_id")
+      val pairs = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val (out, loopJobs, loopExecs) = withCounts(
+        graft.operators.Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id"))
+      assert(loopJobs === n, s"$n-chain: $loopJobs loop jobs for $n rounds")
+      // the one execution is the pairs' Dataset.rdd conversion (Spark
+      // 4.1 runs it as an execution named "rdd"); the rounds add none
+      assert(loopExecs === Seq("rdd"), s"$n-chain: SQL executions in the loop")
+      val (rows, join, joinExecs) = withCounts(out.as[(Long, Long)].collect())
+      assert(rows.toMap === (1L to n).map(_ -> 1L).toMap)
+      assert(joinExecs === Seq("collect"), "the listener must see the collect")
+      join
+    }
+    assert(joinJobs.distinct.size === 1 && joinJobs.head <= 4,
+      s"final join jobs vary with rounds or exceed 4: $joinJobs")
+    info(s"6-chain: 6 loop jobs + ${joinJobs.head} final-join jobs")
   }
 }
