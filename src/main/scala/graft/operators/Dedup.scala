@@ -498,15 +498,71 @@ object Dedup {
   /** Connected components over the near-dup pair graph: assigns every
     * vertex the MINIMUM id reachable from it, i.e. the canonical
     * representative of its duplicate cluster — the step that turns
-    * pairwise near-dup output into "keep one doc per cluster".
+    * pairwise near-dup output into "keep one doc per cluster". One
+    * [[relabel]] with every vertex its own base.
+    *
+    * Ids must be integral (the loop keys on Long; labels come back in
+    * the id column's type). maxIter counts every round, round 1 and
+    * the final empty one included, and guards the pathological chain
+    * case: non-convergence throws rather than returning
+    * silently-wrong upper-approximation labels. */
+  def connectedComponents(vertices: DataFrame, idCol: String,
+                          pairs: DataFrame, aCol: String, bCol: String,
+                          maxIter: Int = 25): DataFrame =
+    relabel(vertices.select(col(idCol).as("id"), col(idCol).as("base")), idCol,
+      pairs.select(col(aCol).as("a"), col(bCol).as("b")), maxIter)
+
+  /** INCREMENTAL connected-component maintenance: merges today's pair
+    * batch into yesterday's labels without re-converging the whole
+    * graph. At corpus scale a daily batch touches a vanishing fraction
+    * of clusters — relabeling 100 TB of stable docs because 0.1% got
+    * new edges is the difference between a nightly job and a weekly
+    * one.
+    *
+    * Contraction, then one [[relabel]]: every prior member's base is
+    * its prior cluster label and every batch doc's base is itself, and
+    * each new-pair endpoint is mapped onto its prior label (an unknown
+    * endpoint onto itself) — whole prior clusters collapse to single
+    * nodes (Kiveris et al.'s star contraction, applied once: the stars
+    * are yesterday's converged clusters), so rounds ∝ the diameter of
+    * the CLUSTER graph. The loop touches only contracted endpoints; a
+    * cluster no new pair reaches keeps its label through relabel's
+    * final left join. Old labels are min member ids, so the contracted
+    * minimum equals the minimum over all member ids — exactly the
+    * labels a full recompute over the union edge set would assign, the
+    * property the dd_cluster_incr oracle hash-verifies.
+    *
+    * @param newVertices today's batch vertex universe (ids unseen by
+    *        `prevLabels`; known ids are ignored — their cluster
+    *        membership only changes if a new PAIR touches it)
+    */
+  def updateComponents(prevLabels: DataFrame, idCol: String, labelCol: String,
+                       newVertices: DataFrame, newIdCol: String,
+                       newPairs: DataFrame, aCol: String, bCol: String,
+                       maxIter: Int = 25): DataFrame = {
+    val prev = prevLabels.select(col(idCol).as("id"), col(labelCol).as("base"))
+    val batch = newVertices.select(col(newIdCol).as("id"), col(newIdCol).as("base"))
+      .join(prev, Seq("id"), "left_anti")
+    def onto(end: String) = prev.select(col("id").as(end), col("base").as(s"${end}_l"))
+    val cEdges = newPairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .join(onto("a"), Seq("a"), "left")
+      .join(onto("b"), Seq("b"), "left")
+      .select(coalesce(col("a_l"), col("a")).as("a"), coalesce(col("b_l"), col("b")).as("b"))
+    relabel(prev.union(batch), idCol, cEdges, maxIter)
+  }
+
+  /** The one clustering loop behind [[connectedComponents]] and
+    * [[updateComponents]]: `verts` is (id, base), `pairs` is (a, b)
+    * over bases, and the result is (id, cluster_id) with cluster_id the
+    * minimum base reachable from the vertex's base.
     *
     * Semi-naive min-label propagation over PAIR ENDPOINTS only, the
     * way RaSQL evaluates a recursive min-aggregate and Pregelix halts
     * vertices: only a vertex whose label fell in the last round sends
     * it on, and the loop has converged when that delta is empty. A
-    * vertex with no edge never changes label and never enters the loop
+    * base with no edge never changes label and never enters the loop
     * (in a dedup graph most docs are near-duplicates of nothing); it
-    * rejoins with label = id through one final left join.
+    * keeps label = base through one final left join.
     *
     * The edges (symmetrized), the labels and every round's delta are
     * RDDs on ONE HashPartitioner(spark.sql.shuffle.partitions), so the
@@ -528,30 +584,23 @@ object Dedup {
     * DataFrame formulation of the same loop cannot keep the
     * co-partitioning: under AQE a checkpointed frame's reads are
     * coalesced, so every round re-exchanges both join sides (measured
-    * 6 jobs and 2 QueryExecutions a round).
-    *
-    * Ids must be integral (the loop keys on Long; labels come back in
-    * the id column's type). maxIter counts every round, round 1 and
-    * the final empty one included, and guards the pathological chain
-    * case: non-convergence throws rather than returning
-    * silently-wrong upper-approximation labels. */
-  def connectedComponents(vertices: DataFrame, idCol: String,
-                          pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    val idType = vertices.schema(idCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+    * 6 jobs and 2 QueryExecutions a round). */
+  private def relabel(verts: DataFrame, idCol: String, pairs: DataFrame,
+                      maxIter: Int): DataFrame = {
+    val baseType = verts.schema("base").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(baseType),
       s"connectedComponents needs an integral id column; '$idCol' is " +
-        s"${idType.simpleString} — hash or rank string ids to longs first " +
+        s"${baseType.simpleString} — hash or rank string ids to longs first " +
         "(RankOps.withGlobalRank)")
-    val spark = vertices.sparkSession
+    val spark = verts.sparkSession
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     // every round reads the edges: persisted, not checkpointed — their
     // lineage is the pair plan, which never grows, and a job checkpoints
     // only the marked RDDs nearest its result, so a mark here would sit
     // behind each round's state and never be acted on. A pair with a
     // null endpoint joins nothing.
-    val edges = pairs.where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("long"), col(bCol).cast("long"))
+    val edges = pairs.where(col("a").isNotNull && col("b").isNotNull)
+      .select(col("a").cast("long"), col("b").cast("long"))
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).rdd
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part)
@@ -581,94 +630,8 @@ object Dedup {
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the near-dup quasi-clique assumption")
     val labelled = spark.createDataFrame(labels).toDF("__eid", "label")
-      .select(col("__eid").cast(idType).as("__eid"), col("label").cast(idType).as("label"))
-    vertices.select(col(idCol).as("id"))
-      .join(labelled, col("id") === col("__eid"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
-  }
-
-  /** Members of yesterday's clusters that today's pairs touch: every
-    * vertex of any prev cluster containing an endpoint of `newPairs`.
-    * Exposed separately because it IS the incremental-maintenance
-    * contract — [[updateComponents]] re-converges exactly these plus
-    * the new batch, never the whole graph. */
-  def touchedVertices(prevLabels: DataFrame, idCol: String, labelCol: String,
-                      newPairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val prev = prevLabels.select(col(idCol).as("id"), col(labelCol).as("label"))
-    val endpoints = newPairs.select(col(aCol).as("id"))
-      .union(newPairs.select(col(bCol).as("id"))).distinct()
-    val touchedRoots = prev.join(endpoints, Seq("id"))
-      .select(col("label")).distinct()
-    prev.join(touchedRoots, Seq("label")).select("id", "label")
-  }
-
-  /** INCREMENTAL connected-component maintenance: merges today's pair
-    * batch into yesterday's labels without re-converging the whole
-    * graph. At corpus scale a daily batch touches a vanishing fraction
-    * of clusters — relabeling 100 TB of stable docs because 0.1% got
-    * new edges is the difference between a nightly job and a weekly
-    * one.
-    *
-    * Shape: (1) every new-pair endpoint is PROJECTED onto its prior
-    * cluster label (batch docs onto themselves) — the touched region
-    * CONTRACTS to one node per prior cluster plus the batch docs
-    * (Kiveris et al.'s star contraction, applied once: the stars are
-    * already known, they are yesterday's converged clusters); (2) the
-    * min-label loop ([[connectedComponents]]) re-converges that
-    * contracted graph — rounds ∝ the diameter of the CLUSTER graph,
-    * with whole prior clusters collapsed to single hops; (3) members
-    * inherit their root's new label through one narrow join, batch
-    * docs read theirs directly, untouched clusters pass through
-    * label-identical and never enter the loop. Old labels are min
-    * member ids, so the contracted minimum equals the minimum over
-    * all member ids — exactly the labels a full recompute over the
-    * union edge set would assign, the property the dd_cluster_incr
-    * oracle hash-verifies.
-    *
-    * @param newVertices today's batch vertex universe (ids unseen by
-    *        `prevLabels`; known ids are ignored — their cluster
-    *        membership only changes if a new PAIR touches it)
-    */
-  def updateComponents(prevLabels: DataFrame, idCol: String, labelCol: String,
-                       newVertices: DataFrame, newIdCol: String,
-                       newPairs: DataFrame, aCol: String, bCol: String,
-                       maxIter: Int = 25): DataFrame = {
-    val prev = prevLabels.select(col(idCol).as("id"), col(labelCol).as("label"))
-    // checkpoints: both frames feed multiple branches below (the edge
-    // projection, the contracted vertex set, the untouched anti-join),
-    // so each computes once. Non-eager is not job-free: under AQE each
-    // call runs the frame's shuffle-map stages at build (touched's
-    // joins: 6 jobs at sf0.001), and only the final stage waits for
-    // the first action
-    val pairs = newPairs.select(col(aCol).as("pa"), col(bCol).as("pb"))
-      .localCheckpoint(eager = false)
-    val touched = touchedVertices(prev, "id", "label", pairs, "pa", "pb")
-      .localCheckpoint(eager = false)
-    // checkpointed for the same two-consumer reason as pairs/touched:
-    // batchVerts feeds cVerts AND the relabeled union — unpinned, the
-    // newVertices scan + anti-join against prev executed twice
-    val batchVerts = newVertices.select(col(newIdCol).as("id"))
-      .join(prev, Seq("id"), "left_anti")
-      .localCheckpoint(eager = false)
-    // contract: endpoint → its prior cluster label (old endpoints are
-    // in `touched` by construction; batch endpoints map to themselves)
-    val cEdges = pairs
-      .join(touched.select(col("id").as("pa"), col("label").as("la")), Seq("pa"), "left")
-      .join(touched.select(col("id").as("pb"), col("label").as("lb")), Seq("pb"), "left")
-      .select(coalesce(col("la"), col("pa")).as("a"),
-        coalesce(col("lb"), col("pb")).as("b"))
-    val cVerts = touched.select(col("label").as("id")).distinct()
-      .union(batchVerts)
-    val rootCC = connectedComponents(cVerts, "id", cEdges, "a", "b", maxIter)
-      .localCheckpoint(eager = false)
-    // expand: members inherit their root's re-converged label
-    val relabeled = touched
-      .join(rootCC.select(col("id").as("label"), col("cluster_id")), Seq("label"))
-      .select(col("id"), col("cluster_id"))
-      .union(batchVerts.join(rootCC, Seq("id")).select(col("id"), col("cluster_id")))
-    val untouched = prev
-      .join(touched.select(col("label")).distinct(), Seq("label"), "left_anti")
-      .select(col("id"), col("label").as("cluster_id"))
-    untouched.union(relabeled)
+      .select(col("__eid").cast(baseType).as("__eid"), col("label").cast(baseType).as("label"))
+    verts.join(labelled, col("base") === col("__eid"), "left")
+      .select(col("id"), coalesce(col("label"), col("base")).as("cluster_id"))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Audit, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, count, length, lit, pmod, sum, when, xxhash64}
 
 /** Deduplication block over `documents` / `embeddings` (LLM-pipeline
@@ -137,7 +138,7 @@ object DedupQueries {
     * session+input and every family member reads the staged frame.
     * Same precedent as Bucketing's stage-once-skip-if-present tables.
     *
-    * Frames are Stage.frame's non-eager localCheckpoints: the first
+    * Frames are Stage.frame's non-eager local checkpoints: the first
     * registration runs the stage's shuffle-map stages at the call (AQE
     * plans them eagerly), the first ACTION runs its final stage, and
     * later queries (or bench repeats) read the stored blocks. Keyed by
@@ -264,13 +265,16 @@ object DedupQueries {
     * The DuckDB oracle computes the same labels with a recursive CTE
     * over the same edges, so the component structure is hash-verified,
     * not just row-counted. */
-  def ddCluster(s: SparkSession, dir: String): DataFrame = {
-    val labels = clusterLabels(s, dir)
-    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "cluster_id")
-      .select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
+  def ddCluster(s: SparkSession, dir: String): DataFrame =
+    withClusterSize(clusterLabels(s, dir))
+
+  /** The cluster queries' one tail: (id, cluster_id) labels as
+    * (doc_id, cluster_id, cluster_size) in doc_id order. The size is a
+    * window count over the cluster, so the labels have one consumer. */
+  private def withClusterSize(labels: DataFrame): DataFrame =
+    labels.select(col("id").as("doc_id"), col("cluster_id"),
+      count(lit(1)).over(Window.partitionBy("cluster_id")).as("cluster_size"))
       .orderBy("doc_id")
-  }
 
   /** The dedup DELIVERABLE: per duplicate cluster, the canonical doc to
     * KEEP (the min id — the cluster label) and what dropping the rest
@@ -388,22 +392,10 @@ object DedupQueries {
     * incremental path lands on precisely the labels a batch recompute
     * would — the invariant that lets a 100 TB pipeline skip the nightly
     * full relabel. */
-  def ddClusterIncr(s: SparkSession, dir: String): DataFrame = {
-    val docsAll = Tables.documents(s, dir)
-    // checkpointed: the labels feed BOTH the sizes aggregate and the
-    // join below — without lineage truncation the untouched∪relabeled
-    // union executes once per branch. Not free at build: under AQE the
-    // call runs the union's shuffle-map stages (7 jobs at sf0.001);
-    // only its final stage waits for the first action
-    val labels = Dedup.updateComponents(prevDayLabels(s, dir), "id", "cluster_id",
-      docsAll.filter(col("doc_id") % 5 === 0), "doc_id",
-      newDayPairs(s, dir), "a_id", "b_id")
-      .localCheckpoint(eager = false)
-    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "cluster_id")
-      .select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
-      .orderBy("doc_id")
-  }
+  def ddClusterIncr(s: SparkSession, dir: String): DataFrame =
+    withClusterSize(Dedup.updateComponents(prevDayLabels(s, dir), "id", "cluster_id",
+      Tables.documents(s, dir).filter(col("doc_id") % 5 === 0), "doc_id",
+      newDayPairs(s, dir), "a_id", "b_id"))
 
   val ddIncrementalSql: String = """
     |WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t

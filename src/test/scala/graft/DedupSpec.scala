@@ -434,11 +434,32 @@ class DedupSpec extends SparkSpec {
   }
 
   test("updateComponents re-converges only the touched region") {
+    // untouched cluster {5,6} carries a non-minimum label 6: a full
+    // recompute would lower it to 5, so a kept 6 shows the cluster
+    // never entered the loop; {1,2} is touched via 2 and absorbs 10
+    val prev = Seq((1L, 1L), (2L, 1L), (5L, 6L), (6L, 6L), (9L, 9L))
+      .toDF("id", "cluster_id")
+    val batch = Seq(10L).toDF("doc_id")
     val pairs = Seq((10L, 2L)).toDF("a_id", "b_id")
-    val touched = Dedup.touchedVertices(prevLabels, "id", "cluster_id",
-      pairs, "a_id", "b_id").select("id").as[Long].collect().toSet
-    // cluster {1,2} is touched (via vertex 2); {5,6} and 9 are not
-    assert(touched === Set(1L, 2L))
+    val out = Dedup.updateComponents(prev, "id", "cluster_id",
+      batch, "doc_id", pairs, "a_id", "b_id")
+      .as[(Long, Long)].collect().toMap
+    assert(out === Map(1L -> 1L, 2L -> 1L, 10L -> 1L,
+      5L -> 6L, 6L -> 6L, 9L -> 9L))
+  }
+
+  test("updateComponents ignores batch ids already labelled in prevLabels") {
+    // 2 is a known member of cluster 1 and arrives again in the batch;
+    // 10 is new and pairs with 6 (joins cluster 5)
+    val batch = Seq(2L, 10L).toDF("doc_id")
+    val pairs = Seq((10L, 6L)).toDF("a_id", "b_id")
+    val rows = Dedup.updateComponents(prevLabels, "id", "cluster_id",
+      batch, "doc_id", pairs, "a_id", "b_id")
+      .as[(Long, Long)].collect()
+    assert(rows.map(_._1).sorted.toSeq === Seq(1L, 2L, 5L, 6L, 9L, 10L),
+      "one row per id")
+    assert(rows.toMap === Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L,
+      9L -> 9L, 10L -> 5L))
   }
 
   test("ddKeepList: keeps the cluster min id, accounts dropped bytes, skips singletons") {

@@ -24,13 +24,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class JobBudgetSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  // table schemas are inferred once per JVM (Tables' catalog stand-in):
-  // infer them here so no query's count depends on which suite ran first
+  // table schemas are inferred once per JVM (Tables' catalog stand-in)
+  // and the streamed embeddings slices are staged once per host (under
+  // /tmp/graft-stream, kept across JVMs): do both here so no query's
+  // count depends on which suite or JVM ran first
   override def beforeAll(): Unit = {
     super.beforeAll()
     val s = spark.newSession()
     Tables.documents(s, dir)
     Tables.embeddings(s, dir)
+    Seq(2, 4).foreach(graft.streaming.StreamOps.embeddingsStreamSliced(s, dir, _))
   }
 
   private val queries = DedupQueries.queries ++ SimilarityQueries.queries
@@ -45,17 +48,20 @@ class JobBudgetSpec extends SparkSpec {
     finally src.close()
   }
 
-  /** `body`'s result, the jobs started and the action names of the SQL
-    * executions (QueryExecutions reported to the session's listeners)
-    * finished while it ran, with the listener bus drained on both
-    * sides. */
-  private def withCounts[T](body: => T): (T, Int, Seq[String]) = {
+  /** `body`'s result, the jobs started (those `counted` accepts) and the
+    * action names of the SQL executions (QueryExecutions reported to
+    * the session's listeners) finished while it ran, with the listener
+    * bus drained on both sides. */
+  private def withCounts[T](body: => T,
+                            counted: SparkListenerJobStart => Boolean = _ => true)
+      : (T, Int, Seq[String]) = {
     val sc = spark.sparkContext
     ListenerBusBridge.drain(sc)
     val jobs = new AtomicInteger
     val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (counted(e)) jobs.incrementAndGet()
     }
     val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -114,5 +120,37 @@ class JobBudgetSpec extends SparkSpec {
     assert(joinJobs.distinct.size === 1 && joinJobs.head <= 4,
       s"final join jobs vary with rounds or exceed 4: $joinJobs")
     info(s"6-chain: 6 loop jobs + ${joinJobs.head} final-join jobs")
+  }
+
+  test("updateComponents runs the loop over the new pairs only and equals a full recompute") {
+    import spark.implicits._
+    // prev: one 10-member cluster {100..109} and 50 untouched 2-member
+    // clusters {1000 + 10k, 1001 + 10k}; batch doc 5 pairs with member
+    // 104 and drags the big cluster to label 5, batch doc 7 is alone
+    val big = (100L to 109L).map(_ -> 100L)
+    val small = (0 until 50).flatMap { k =>
+      val root = 1000L + 10 * k
+      Seq(root -> root, (root + 1) -> root)
+    }
+    val prev = (big ++ small).toDF("id", "cluster_id")
+    val batch = Seq(5L, 7L).toDF("doc_id")
+    val newPairs = Seq((5L, 104L)).toDF("a_id", "b_id")
+    // the loop's jobs are the ones outside any SQL execution (the
+    // contraction's joins run inside the pairs' "rdd" execution)
+    val (out, loopJobs, _) = withCounts(graft.operators.Dedup.updateComponents(
+      prev, "id", "cluster_id", batch, "doc_id", newPairs, "a_id", "b_id"),
+      e => Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+    // the contracted edge (5, 100) has diameter 1: a lowering round
+    // and an empty one, whatever the number of untouched clusters
+    assert(loopJobs === 2, s"$loopJobs loop jobs")
+    val oldPairs = (100L until 109L).map(i => (i, i + 1)) ++
+      small.collect { case (id, root) if id != root => (root, id) }
+    val full = graft.operators.Dedup.connectedComponents(
+      prev.select($"id".as("doc_id")).union(batch), "doc_id",
+      (oldPairs :+ ((5L, 104L))).toDF("a_id", "b_id"), "a_id", "b_id")
+    val rows = out.as[(Long, Long)].collect()
+    assert(rows.sorted.toSeq === full.as[(Long, Long)].collect().sorted.toSeq)
+    val labels = rows.toMap
+    assert(labels(109L) === 5L && labels(1011L) === 1010L)
   }
 }
