@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -50,6 +53,19 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Exact row count of a table, summed from the parquet footers of its
+    * input files on the driver: the other half of the catalog stand-in
+    * (a catalog answers `numRows` from its table statistics). No Spark
+    * job runs, so a query builder can size a plan (join partitions, a
+    * cap guard, a grid cell) before anything executes. */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    load(spark, sfDir, name).inputFiles.iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 
   /** Canonical engine representation of `events.ts`: epoch NANOSECOND

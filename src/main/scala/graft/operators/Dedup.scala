@@ -4,7 +4,7 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.plans.SimHash64
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -81,10 +81,11 @@ object Dedup {
     * clears the floor and the list comes back empty (= the unchanged
     * fast plan); a sample with no shingles at all (an empty corpus,
     * or one whose sampled docs are all shorter than `n` tokens) has no
-    * mean and returns empty too. At 100 TB this list is a published
-    * corpus artifact built by the same pipeline that owns the dedup
-    * index (the ss_ivf_topk quantizer discipline); size it by a df
-    * floor, which bounds every remaining bucket. */
+    * mean and returns empty too. The list costs one action. At 100 TB
+    * this list is a published corpus artifact built by the same
+    * pipeline that owns the dedup index (the ss_ivf_topk quantizer
+    * discipline); size it by a df floor, which bounds every remaining
+    * bucket. */
   def hotShingles(df: DataFrame, idCol: String, textCol: String, n: Int,
                   sampleMod: Int = 10, floorMult: Double = 4.0,
                   cap: Int = 4096): Seq[Long] = {
@@ -93,18 +94,24 @@ object Dedup {
       .select(explode(coalesce(
         graft.plans.SortedShingleHashes(col(textCol), n),
         array().cast("array<long>"))).as("sg"))
-    val dfc = sampled.groupBy("sg").agg(count(lit(1)).as("__df"))
-    // ONE action over the aggregate: each of the `cap` hottest rows
-    // carries the sampled mean (a one-row broadcast off the same
-    // aggregate, whose exchange the plan reuses). In desc(__df) order
-    // every row above the floor precedes every row at or below it, so
-    // flooring the collected rows keeps exactly what filter-then-limit
-    // would. No rows back means no sampled shingle, hence no mean: Nil.
-    val top = dfc.crossJoin(broadcast(dfc.agg(avg("__df").as("__mean"))))
+    // ONE action over the aggregate: the top-`cap` collect, with the
+    // sampled mean observed over every aggregated row on its way into
+    // the top-k (2 jobs: the aggregate's shuffle-map stage and the
+    // top-k). In desc(__df) order every row above the floor precedes
+    // every row at or below it, so flooring the collected rows keeps
+    // exactly what filter-then-limit would. No rows back means no
+    // sampled shingle, hence no mean: Nil.
+    val mean = Observation("hot_shingles_mean")
+    val top = sampled.groupBy("sg").agg(count(lit(1)).as("__df"))
+      .observe(mean, avg("__df").as("mean"))
       .orderBy(desc("__df"), col("sg")).limit(cap).collect()
-    top.filter(r => r.getLong(1) > floorMult * r.getDouble(2))
-      .map(r => (r.getLong(1), r.getLong(0)))
-      .sortBy(identity).map(_._2).toSeq
+    if (top.isEmpty) Nil
+    else {
+      val floor = floorMult * mean.get("mean").asInstanceOf[Double]
+      top.filter(_.getLong(1) > floor)
+        .map(r => (r.getLong(1), r.getLong(0)))
+        .sortBy(identity).map(_._2).toSeq
+    }
   }
 
   /** Exact n-gram Jaccard pairs >= threshold — the one candidate join
@@ -562,18 +569,24 @@ object Dedup {
     * it on, and the loop has converged when that delta is empty. A
     * base with no edge never changes label and never enters the loop
     * (in a dedup graph most docs are near-duplicates of nothing); it
-    * keeps label = base through one final left join.
+    * keeps label = base through one final left join of the vertices
+    * onto the labels. The loop counts the labels, so a set under the
+    * broadcast threshold is broadcast from the start: the finish is one
+    * broadcast job and a map-side join, and the vertices are never
+    * exchanged. A null base gets a null label, a duplicated vertex row
+    * keeps both rows, and an endpoint that is no vertex adds no row.
     *
     * The edges (symmetrized), the labels and every round's delta are
     * RDDs on ONE HashPartitioner(spark.sql.shuffle.partitions), so the
     * delta ⋈ edges and labels ⋈ candidates joins are narrow and a round
     * has exactly one shuffle: the (dst, label) min. Round 1 reads the
     * edges alone (a narrow per-src min over the neighbours). Each round
-    * then runs ONE Spark job — the count of the labels it lowered,
-    * which also materializes the round — and no SQL execution (the
-    * only one is the pairs' Dataset.rdd conversion, before round 1);
-    * its state is localCheckpoint'ed, so lineage stays one round deep
-    * instead of re-executing every prior round per action.
+    * then runs ONE Spark job — the count of the labels it lowered and
+    * of all labels, which also materializes the round — and no SQL
+    * execution (the only one is the pairs' Dataset.rdd conversion,
+    * before round 1); its state is localCheckpoint'ed, so lineage stays
+    * one round deep instead of re-executing every prior round per
+    * action.
     *
     * Rounds = component diameter + 1 (the last one finds the delta
     * empty). Near-dup clusters are quasi-cliques, so that is 2-4
@@ -605,13 +618,18 @@ object Dedup {
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // a round's state: vertex -> (label, label before the round)
+    // a round's state: vertex -> (label, label before the round); its
+    // one job counts the labels it lowered and the labels in all (every
+    // edge endpoint, the same in every round)
     def settle(state: RDD[(Long, (Long, Long))]) = {
       state.localCheckpoint()
-      val improved = state.filter { case (_, (l, prev)) => l < prev }.mapValues(_._1)
-      (state.mapValues(_._1), improved, improved.count())
+      val (lowered, all) = state.aggregate((0L, 0L))(
+        { case ((n, m), (_, (l, prev))) => (if (l < prev) n + 1 else n, m + 1) },
+        { case ((n1, m1), (n2, m2)) => (n1 + n2, m1 + m2) })
+      (state.mapValues(_._1),
+        state.filter { case (_, (l, prev)) => l < prev }.mapValues(_._1), lowered, all)
     }
-    var (labels, delta, lowered) = settle(edges.reduceByKey(part, math.min(_, _))
+    var (labels, delta, lowered, labelCount) = settle(edges.reduceByKey(part, math.min(_, _))
       .mapPartitions(_.map { case (v, m) => (v, (math.min(v, m), v)) },
         preservesPartitioning = true))
     var rounds = 1
@@ -619,7 +637,7 @@ object Dedup {
       val cand = delta.join(edges, part)
         .map { case (_, (l, dst)) => (dst, l) }
         .reduceByKey(part, math.min(_, _))
-      val (l, d, n) = settle(labels.leftOuterJoin(cand, part).mapValues {
+      val (l, d, n, _) = settle(labels.leftOuterJoin(cand, part).mapValues {
         case (prev, c) => (c.fold(prev)(math.min(prev, _)), prev)
       })
       labels = l; delta = d; lowered = n
@@ -629,9 +647,12 @@ object Dedup {
     require(lowered == 0,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the near-dup quasi-clique assumption")
+    // a (long, long) row is 24 bytes to the planner
     val labelled = spark.createDataFrame(labels).toDF("__eid", "label")
       .select(col("__eid").cast(baseType).as("__eid"), col("label").cast(baseType).as("label"))
-    verts.join(labelled, col("base") === col("__eid"), "left")
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    verts.join(if (threshold >= 0 && labelCount * 24 <= threshold) broadcast(labelled) else labelled,
+        col("base") === col("__eid"), "left")
       .select(col("id"), coalesce(col("label"), col("base")).as("cluster_id"))
   }
 }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Frames are `localCheckpoint(eager = false)`, which under AQE is only
   * half lazy: the call itself runs one "localCheckpoint" SQL execution
-  * that materializes every shuffle-map stage of the frame's plan (3-5
-  * jobs for the dedup stages at sf0.001), and only the final stage
-  * waits for the first ACTION that reads the frame. Later queries (or
-  * bench repeats) read the stored blocks. Keyed by session
+  * that materializes every shuffle-map and broadcast stage of the
+  * frame's plan (at sf0.001: 3 jobs for the dedup pair graph, 1 — the
+  * labels' broadcast — for the cluster labels), and only the final
+  * stage waits for the first ACTION that reads the frame. Later
+  * queries (or bench repeats) read the stored blocks. Keyed by session
   * so spec sessions never cross-pollinate, and by dir so scale factors
   * never collide (DedupSpec pins both properties).
   *
@@ -78,13 +79,13 @@ object Stage {
   }
 
   /** A staged DataFrame: built once per (session, dir, key), shared as
-    * a non-eager localCheckpoint (its shuffle-map stages run here; see
-    * above). */
+    * a non-eager localCheckpoint (its shuffle-map and broadcast stages
+    * run here; see above). */
   def frame(s: SparkSession, dir: String, key: String)
            (build: => DataFrame): DataFrame =
     memo(s, dir, key)(build.localCheckpoint(eager = false))
 
-  /** A staged scalar (a count, a tuned parameter) — the build MAY run
+  /** A staged value (a hot list, a fitted quantizer) — the build MAY run
     * Spark actions; it executes once per (session, dir, key). */
   def value[T <: AnyRef](s: SparkSession, dir: String, key: String)
                         (build: => T): T =

@@ -139,11 +139,11 @@ object DedupQueries {
     * Same precedent as Bucketing's stage-once-skip-if-present tables.
     *
     * Frames are Stage.frame's non-eager local checkpoints: the first
-    * registration runs the stage's shuffle-map stages at the call (AQE
-    * plans them eagerly), the first ACTION runs its final stage, and
-    * later queries (or bench repeats) read the stored blocks. Keyed by
-    * session so spec sessions never cross-pollinate, and by dir so
-    * sf0.01 and sf0.1 never collide. */
+    * registration runs the stage's shuffle-map and broadcast stages at
+    * the call (AQE plans them eagerly), the first ACTION runs its final
+    * stage, and later queries (or bench repeats) read the stored
+    * blocks. Keyed by session so spec sessions never cross-pollinate,
+    * and by dir so sf0.01 and sf0.1 never collide. */
   private def staged(s: SparkSession, dir: String, key: String)
                     (build: => DataFrame): DataFrame =
     graft.operators.Stage.frame(s, dir, key)(build)
@@ -173,17 +173,15 @@ object DedupQueries {
       exactPairs(s, dir, Tables.documents(s, dir)).dropDuplicates()
     }
 
-  /** Staged corpus row counts — shared by the scale-adaptive self-join
-    * partitioning ([[exactPairs]]) and the cap-collapse guards
-    * (ddSimhash / ddEmbeddingLsh): one tiny count job per (session,
-    * dir), the Stage.value discipline hotShingles already set. */
+  /** Corpus row counts from the parquet footers (Tables.rowCount, no
+    * job) — shared by the scale-adaptive self-join partitioning
+    * ([[exactPairs]]) and the cap-collapse guards (ddSimhash /
+    * ddEmbeddingLsh). */
   private def docCount(s: SparkSession, dir: String): Long =
-    graft.operators.Stage.value[java.lang.Long](s, dir, "doc_count")(
-      java.lang.Long.valueOf(Tables.documents(s, dir).count())).longValue
+    Tables.rowCount(s, dir, "documents")
 
   private def embCount(s: SparkSession, dir: String): Long =
-    graft.operators.Stage.value[java.lang.Long](s, dir, "emb_count")(
-      java.lang.Long.valueOf(Tables.embeddings(s, dir).count())).longValue
+    Tables.rowCount(s, dir, "embeddings")
 
   def ddMinhashLsh(s: SparkSession, dir: String): DataFrame =
     Audit.withRecall(

@@ -57,12 +57,10 @@ object GeoQueries {
   /** Signal count the fixed [[CellDeg]] was sized against (sf0.1:
     * 100k events / 199 ≈ 500 signals over the Kyiv box). */
   private val RefSignals = 500.0
-  /** Events row count memoized per (session, dir): one metadata-cheap
-    * count backs the density-adaptive cell sizing below. */
+  /** Events row count from the parquet footers (Tables.rowCount, no
+    * job): it backs the density-adaptive cell sizing below. */
   private def eventsCount(s: SparkSession, dir: String): Long =
-    graft.operators.Stage.value(s, dir, "events_count") {
-      java.lang.Long.valueOf(Tables.events(s, dir).count())
-    }.longValue()
+    Tables.rowCount(s, dir, "events")
 
   def geoNearestSignal(s: SparkSession, dir: String): DataFrame = {
     // density-adaptive grid: the signal layer GROWS with the data
@@ -97,7 +95,7 @@ object GeoQueries {
       originLat = GeoFunctions.KyivBounds._1,
       originLon = GeoFunctions.KyivBounds._3,
       maxAbsLatDeg = GeoFunctions.KyivBounds._2,
-      // the staged count attests the layer is dim-sized, so the
+      // the footer count attests the layer is dim-sized, so the
       // candidate joins broadcast it explicitly — at sf10 the planner
       // (blind to the localCheckpoint's size) planned an SMJ that
       // shuffled+sorted the 10M-position side twice (GeoNearest

@@ -401,6 +401,54 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  // the left-join semantics of the labels finish: every vertex row comes
+  // back exactly once, and only vertex rows come back
+  test("connectedComponents: a null vertex id comes back with a null cluster_id") {
+    val verts = Seq(Some(1L), None, Some(2L), Some(3L)).toDF("doc_id")
+    val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+      .as[(Option[Long], Option[Long])].collect().sortBy(_._1)
+    assert(out.toSeq === Seq((None, None), (Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(3L))))
+  }
+
+  test("connectedComponents: a duplicated vertex id keeps both rows") {
+    val verts = Seq(1L, 2L, 2L, 3L).toDF("doc_id")
+    val pairs = Seq((3L, 2L)).toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+      .as[(Long, Long)].collect().sorted
+    assert(out.toSeq === Seq((1L, 1L), (2L, 2L), (2L, 2L), (3L, 2L)))
+  }
+
+  test("connectedComponents: a pair endpoint missing from the vertices adds no row") {
+    // 7 links 2 to 0 and is no vertex: 2 takes label 0, 7 gets no row
+    val verts = Seq(2L, 3L).toDF("doc_id")
+    val pairs = Seq((2L, 7L), (7L, 0L)).toDF("a_id", "b_id")
+    val out = Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+      .as[(Long, Long)].collect().sorted
+    assert(out.toSeq === Seq((2L, 0L), (3L, 3L)))
+  }
+
+  test("connectedComponents: result schema keeps the id type and nullability") {
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+    def shape(verts: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame) =
+      Dedup.connectedComponents(verts, "doc_id", pairs, "a_id", "b_id")
+        .schema.map(f => (f.name, f.dataType, f.nullable))
+    def want(t: DataType, nullable: Boolean) =
+      Seq(("id", t, nullable), ("cluster_id", t, nullable))
+    assert(shape(Seq(1L, 2L).toDF("doc_id"), Seq((1L, 2L)).toDF("a_id", "b_id")) ===
+      want(LongType, nullable = false))
+    assert(shape(Seq(Some(1L), None).toDF("doc_id"), Seq((1L, 2L)).toDF("a_id", "b_id")) ===
+      want(LongType, nullable = true))
+    assert(shape(Seq(1, 2).toDF("doc_id"), Seq((1, 2)).toDF("a_id", "b_id")) ===
+      want(IntegerType, nullable = false))
+    assert(shape(Seq(Some(1), None).toDF("doc_id"), Seq((1, 2)).toDF("a_id", "b_id")) ===
+      want(IntegerType, nullable = true))
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    assert(shape(docs, Seq((1L, 2L)).toDF("a_id", "b_id")) ===
+      want(docs.schema("doc_id").dataType, docs.schema("doc_id").nullable))
+  }
+
   // yesterday: clusters {1,2}, {5,6}, singleton 9 (labels = min ids)
   private def prevLabels =
     Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (9L, 9L))

@@ -138,4 +138,14 @@ class ScratchPathSpec extends AnyFunSuite {
     }
     assert(exploded.isEmpty, s"full-set explode in main code: ${exploded.mkString(", ")}")
   }
+
+  test("query builders size plans from metadata: no .count() under queries/") {
+    // a count inside a builder is a Spark action at build time; sizes
+    // come from Tables.rowCount (parquet footers) or other metadata
+    val uses = mainSourceLines.collect {
+      case (rel, n, line) if rel.startsWith("queries/") && line.contains(".count()") =>
+        s"$rel:$n"
+    }
+    assert(uses.isEmpty, s".count() in query builders: ${uses.mkString(", ")}")
+  }
 }
