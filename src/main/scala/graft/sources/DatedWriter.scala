@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.PidScratch
+
 /** Date-partitioned landing writer mirroring the reference's
   * date-rotated JSONL output (kpt/poller/writer.py:18-57
   * `build_file_path` / `_should_rotate`: one output file per yyyyMMdd
@@ -93,7 +95,10 @@ object DatedWriter {
     if (!Files.isDirectory(root) && Files.isDirectory(stranded))
       Files.move(stranded, root, StandardCopyOption.ATOMIC_MOVE)
     require(Files.isDirectory(root), s"compactDated: no zone at $outDir")
-    val entries = Files.list(root).iterator().asScala.toList
+    val entries = {
+      val st = Files.list(root)
+      try st.iterator().asScala.toList finally st.close()
+    }
     val (book, dataDirs) = entries.partition { p =>
       val n = p.getFileName.toString
       n.startsWith("_") || n.startsWith(".")
@@ -104,9 +109,7 @@ object DatedWriter {
         "partitions and _/. bookkeeping")
     if (dataDirs.isEmpty) return
     val staging = Paths.get(outDir + "__compacting")
-    if (Files.exists(staging))
-      Files.walk(staging).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+    PidScratch.deleteRecursive(staging)
     // read WITHOUT the date_key string normalization: partitionBy must
     // write back the identical directory values
     val df = s.read.parquet(outDir)
@@ -121,21 +124,19 @@ object DatedWriter {
     // recovery path restores nothing once root exists) — a _SUCCESS
     // or _commits entry could be permanently lost while data survived
     book.foreach { p =>
-      Files.walk(p).iterator().asScala.foreach { q =>
+      val st = Files.walk(p)
+      try st.iterator().asScala.foreach { q =>
         val t = staging.resolve(root.relativize(q))
         if (Files.isDirectory(q)) Files.createDirectories(t)
         else Files.copy(q, t, StandardCopyOption.REPLACE_EXISTING)
-      }
+      } finally st.close()
     }
     // swap: old zone aside, staging (data + bookkeeping) in
     val old = Paths.get(outDir + "__precompact")
-    if (Files.exists(old))
-      Files.walk(old).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+    PidScratch.deleteRecursive(old)
     Files.move(root, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(staging, root, StandardCopyOption.ATOMIC_MOVE)
-    Files.walk(old).sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
+    PidScratch.deleteRecursive(old)
   }
 
   /** Replaces `dst` with a file-level copy of the `src` tree (hard
@@ -151,16 +152,15 @@ object DatedWriter {
     import scala.jdk.CollectionConverters._
     val s0 = Paths.get(src)
     val d0 = Paths.get(dst)
-    if (Files.exists(d0))
-      Files.walk(d0).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    Files.walk(s0).iterator().asScala.foreach { p =>
+    PidScratch.deleteRecursive(d0)
+    val st = Files.walk(s0)
+    try st.iterator().asScala.foreach { p =>
       val t: Path = d0.resolve(s0.relativize(p))
       if (Files.isDirectory(p)) Files.createDirectories(t)
       else try Files.createLink(t, p)
       catch { case _: UnsupportedOperationException | _: java.io.IOException =>
         Files.copy(p, t)
       }
-    }
+    } finally st.close()
   }
 }
