@@ -11,10 +11,22 @@ import graft.sources.LocalFs
   * Local mode is a stand-in for a multi-executor cluster: nothing here
   * hardcodes partition counts into operator code — shuffle parallelism is
   * session-level so a cluster deploy only changes the builder args.
+  *
+  * Every engine setting is a Spark conf with one constant default.
+  * [[builder]] returns a `SparkSession.Builder`, so a deployment
+  * overrides any of them the Spark way:
+  * `GraftSession.builder(...).config(key, value)`. Two environment
+  * variables remain: `SPARK_GRAFT_CPUS` (local cores and shuffle
+  * partitions) and `SPARK_GRAFT_LOCAL_DIR` (the `spark.local.dir`
+  * path). README's "Engine settings" table lists each conf and its
+  * measured reason.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  /** `SPARK_GRAFT_CPUS`, read once. */
+  private val envCpus: Option[Int] = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+
+  def builder(master: String = s"local[${envCpus.getOrElse(32)}]",
+              shufflePartitions: Int = envCpus.getOrElse(32))
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -45,22 +57,23 @@ object GraftSession {
       // sf1 lineitem (113 MB, 2 MB row groups via GenScale) scans
       // 32-wide with this, single-threaded without it. A cluster
       // deployment, whose files arrive in many 100 MB+ splits, raises
-      // this back to the standard default via the env override — like
-      // shufflePartitions, it is a deployment knob, not operator
+      // this back to the standard default with
+      // `GraftSession.builder(...).config(key, value)` — like
+      // shufflePartitions, it is a deployment setting, not operator
       // semantics.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", (2L * 1024 * 1024).toString))
+      .config("spark.sql.files.maxPartitionBytes", (2L * 1024 * 1024).toString)
       // AQE's coalesce floor (default 1 MB) serializes CPU-bound
       // post-shuffle stages at this harness's data sizes: the slim
       // per-vehicle lag window shuffles ~10 MB compressed at sf1 and
       // was coalesced to a handful of tasks on a 32-core box (window
       // sort + haversine are compute-bound, not IO-bound — measured
       // 0.52 → 0.39 s on ta_speed_lag at sf1). On a cluster feed the
-      // shuffle dwarfs any floor and the knob is inert; like
+      // shuffle dwarfs any floor and the setting is inert; like
       // maxPartitionBytes above it scales with the harness, not the
-      // operators.
+      // operators, and is overridden the same way
+      // (`GraftSession.builder(...).config(key, value)`).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", (256L * 1024).toString))
+        (256L * 1024).toString)
       // managed (bucketed) tables land in scratch, not the repo cwd,
       // in a directory of this JVM's own: Bucketing.writeBucketed
       // deletes and rewrites its tables on every fresh JVM, so a shared
@@ -96,7 +109,7 @@ object GraftSession {
       // monitor-blocked time in a 90 s window — the flat ~+0.3 s
       // per-query tax was THIS, not janino/dispatch. tmpfs makes the
       // critical section microseconds again. A cluster deployment
-      // points this at its local SSDs via the env override — the
+      // points this at its local SSDs via SPARK_GRAFT_LOCAL_DIR — the
       // standard knob (spark.local.dir), not operator semantics.
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", defaultLocalDir))
@@ -157,10 +170,10 @@ object GraftSession {
       // ephemeral tmpfs scratch rebuilt per run, where the companion
       // files are pure per-batch file-op overhead on the micro-batch
       // floor (measured A/B in OPTIMIZATION_r20.md). A deployment
-      // with durable checkpoints re-enables via the env override —
-      // a durability knob, not operator semantics.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      // with durable checkpoints re-enables it with
+      // `GraftSession.builder(...).config(key, "true")` — a durability
+      // setting, not operator semantics.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // Hadoop's local file system without libhadoop forks a `chmod`
       // for every file create and mkdir, and a `readlink` for every
       // FileContext rename: parquet part files, task commits,
@@ -202,7 +215,7 @@ object GraftSession {
     * enforces — so the line is known-benign and only crowded the
     * bounded log tails the bench and verify runs capture. */
   def get(defaultCpus: Int): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(_.toInt)
+    val cpus = envCpus.getOrElse(defaultCpus)
     val spark = builder(master = s"local[$cpus]", shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

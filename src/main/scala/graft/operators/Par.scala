@@ -44,14 +44,10 @@ object Par {
     * schemas should pre-project to the narrow join columns (every
     * in-tree caller does) or pass a tightened maxEstRows. */
   def broadcastIfFewRows(df: DataFrame,
-                         maxEstRows: Long = 50000L): DataFrame = {
-    val stats = df.queryExecution.optimizedPlan.stats
-    val width = math.max(8, df.schema.fields.map(_.dataType.defaultSize).sum + 8)
-    val estRows = stats.rowCount.map(_.toLong)
-      .getOrElse((stats.sizeInBytes / width).toLong)
-    if (estRows <= maxEstRows) org.apache.spark.sql.functions.broadcast(df)
+                         maxEstRows: Long = 50000L): DataFrame =
+    if (estRows(df) <= maxEstRows) org.apache.spark.sql.functions.broadcast(df)
     else df.hint("merge")
-  }
+
   /** Row-arbitrated broadcast for a side whose OWN stats are useless —
     * a join output, where planning-time sizeInBytes is a byte product
     * that overshoots by orders of magnitude. The row estimate comes
@@ -69,13 +65,17 @@ object Par {
     * both sides keep growing, without blocking AQE's own runtime
     * broadcast flip the way a merge hint would. */
   def broadcastIfProxyFewRows(df: DataFrame, proxy: DataFrame,
-                              maxEstRows: Long): DataFrame = {
-    val stats = proxy.queryExecution.optimizedPlan.stats
-    val width = math.max(8, proxy.schema.fields.map(_.dataType.defaultSize).sum + 8)
-    val estRows = stats.rowCount.map(_.toLong)
-      .getOrElse((stats.sizeInBytes / width).toLong)
-    if (estRows <= maxEstRows) org.apache.spark.sql.functions.broadcast(df)
+                              maxEstRows: Long): DataFrame =
+    if (estRows(proxy) <= maxEstRows) org.apache.spark.sql.functions.broadcast(df)
     else df
+
+  /** The plan's row count when CBO stats carry one, else its
+    * sizeInBytes over the schema's Catalyst-default row width (plus
+    * the 8-byte row header), floored at 8 bytes. */
+  private def estRows(df: DataFrame): Long = {
+    val stats = df.queryExecution.optimizedPlan.stats
+    val width = math.max(8, df.schema.fields.map(_.dataType.defaultSize).sum + 8)
+    stats.rowCount.map(_.toLong).getOrElse((stats.sizeInBytes / width).toLong)
   }
 
   /** Spreads narrow rows across the session's shuffle parallelism

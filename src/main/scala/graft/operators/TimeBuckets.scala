@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * single-window plan runs as-is (the carry machinery's fixed stages
   * cost more than the skew they remove at small volume), while an
   * UNKNOWN size estimates huge and buckets — the safe default for a
-  * 100 TB scan. The threshold is env-overridable
-  * (SPARK_GRAFT_WINDOW_BUCKET_ROWS) so the local skew rehearsal can
-  * exercise the bucketed plans at harness scale.
+  * 100 TB scan. The threshold is the constant [[DefaultBucketRows]];
+  * a caller that needs the bucketed plans at harness scale (the spec
+  * harness, a skew rehearsal) forces a count through the operators'
+  * `buckets` argument.
   */
 object TimeBuckets {
 
@@ -59,15 +60,6 @@ object TimeBuckets {
     * the same direction). */
   val DefaultBucketRows: Long = 2L * 1000 * 1000
 
-  /** System property first (an in-session toggle, so the skew rehearsal
-    * can A/B default-vs-bucketed inside ONE session — cross-window
-    * comparisons on this host are untrustworthy), then env, then the
-    * 100 TB-safe default. Read at plan BUILD time. */
-  def bucketRowsTarget: Long =
-    sys.props.get("spark.graft.windowBucketRows")
-      .orElse(sys.env.get("SPARK_GRAFT_WINDOW_BUCKET_ROWS")).map(_.toLong)
-      .getOrElse(DefaultBucketRows)
-
   /** Catalyst-default row width of `df`'s schema, floored at 8 bytes so
     * a degenerate schema cannot explode the row estimate. */
   def estimatedRowWidth(df: DataFrame): Long =
@@ -77,7 +69,7 @@ object TimeBuckets {
   def estimatedRows(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes / estimatedRowWidth(df)
 
-  /** Bucket count: one per [[bucketRowsTarget]] of estimated input
+  /** Bucket count: one per [[DefaultBucketRows]] of estimated input
     * rows, capped at the session's shuffle parallelism (more buckets
     * than tasks only multiplies seams), floored at 1 (= stay
     * single-window). `buckets > 0` forces a count — the spec harness
@@ -87,7 +79,7 @@ object TimeBuckets {
     else {
       val parts = BigInt(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      ((estimatedRows(df) / bucketRowsTarget) min parts max BigInt(1)).toInt
+      ((estimatedRows(df) / DefaultBucketRows) min parts max BigInt(1)).toInt
     }
 
   /** Per-key lag(1) of `lagCols` (ordered by tsCol, tieCol; appended as

@@ -372,14 +372,6 @@ object StreamOps {
     math.max(2, math.min(8, par / 8))
   }
 
-  /** Thread-scoped state-store provider override for specs. A global
-    * setting would silently flip concurrent suites' replays onto
-    * RocksDB during a spec's window, so this DynamicVariable scopes the
-    * override to the calling thread (replaySession runs on
-    * the caller's thread; the child session's conf is fixed before any
-    * micro-batch thread starts). */
-  val ProviderOverride = new scala.util.DynamicVariable[Option[String]](None)
-
   /** Fresh CHILD session for one finite replay: shares the
     * SparkContext (executors, cache, scheduler) but owns its SQLConf,
     * so the replay's two conf overrides are SCOPED to this run. No
@@ -411,10 +403,18 @@ object StreamOps {
     * dynamic session conf is copied first (static and core keys,
     * which Spark rejects with an AnalysisException, are skipped) and
     * the custom function registry re-asserted — the child must plan
-    * exactly like the parent except for the overrides. A child of a
-    * [[graft.GraftSession.builder]] session inherits its artifact
-    * isolation off, so the replay reuses the classes the parent
-    * already compiled instead of recompiling them. */
+    * exactly like the parent except for the overrides. That copy is
+    * also how a deployment picks the state-store provider: the default
+    * HDFS-backed in-memory store wins at this harness's state sizes
+    * (the sf1 A/B in SCALE.md round 15 measured RocksDB strictly
+    * slower here), while state that outgrows executor heap (dedup key
+    * spaces, session maps) wants RocksDB's spill-to-disk store. Set
+    * `spark.sql.streaming.stateStore.providerClass` on the session (a
+    * runtime conf) and every replay of it uses that provider; results
+    * are store-independent, which StateStoreProviderSpec hash-gates.
+    * A child of a [[graft.GraftSession.builder]] session inherits its
+    * artifact isolation off, so the replay reuses the classes the
+    * parent already compiled instead of recompiling them. */
   private def replaySession(s: SparkSession, stateful: Boolean,
                             noFlush: Boolean): SparkSession = {
     val ss = s.newSession()
@@ -423,26 +423,6 @@ object StreamOps {
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
     graft.GraftSession.ensureFunctions(ss)
-    // State-store provider: a DEPLOYMENT knob (like SPARK_GRAFT_LOCAL_DIR
-    // / SPARK_GRAFT_SPLIT_BYTES), not operator semantics. The default
-    // HDFS-backed in-memory store wins at this harness's state sizes
-    // (the sf1 A/B in SCALE.md round 15 measured RocksDB strictly
-    // slower here), but at 100 TB-deployment state sizes — dedup key
-    // spaces or session maps that outgrow executor heap — RocksDB's
-    // spill-to-disk store is the right default and this is where it
-    // flips on: SPARK_GRAFT_STATE_PROVIDER=rocksdb (or any fully
-    // qualified provider class). Results are store-independent —
-    // StateStoreProviderSpec hash-gates a stateful replay under
-    // RocksDB against the default store.
-    val provider = ProviderOverride.value
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER"))
-      .map {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case fqcn => fqcn
-      }
-    provider.foreach(p =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
     if (stateful)
       ss.conf.set("spark.sql.shuffle.partitions", replayStateParts(s).toString)
     if (noFlush)

@@ -139,6 +139,33 @@ class ScratchPathSpec extends AnyFunSuite {
     assert(exploded.isEmpty, s"full-set explode in main code: ${exploded.mkString(", ")}")
   }
 
+  test("engine settings are Spark confs: env and sys-prop reads only where allowed") {
+    // an engine setting is one Spark conf with one constant default,
+    // overridden with GraftSession.builder(...).config(key, value); a
+    // second channel (an env var, a JVM property, a spark.graft.* key)
+    // reaches only builder-made sessions, never a driver-supplied one.
+    // Allowed: the Bench/Verify mains' harness variables, the scratch
+    // root (java.io.tmpdir) and GraftSession's two host-level values.
+    val read = """sys\.(env|props)|System\.(getenv|getProperty)""".r
+    val allowed: Map[String, Seq[String]] = Map(
+      "Bench.scala" -> Nil,
+      "Verify.scala" -> Nil,
+      "PidScratch.scala" -> Seq("java.io.tmpdir"),
+      "GraftSession.scala" ->
+        Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOCAL_DIR", "java.io.tmpdir"))
+    val reads = mainSourceLines.collect {
+      case (rel, n, line) if read.findFirstIn(line).nonEmpty &&
+          !allowed.get(rel).exists(ks => ks.isEmpty || ks.exists(line.contains)) =>
+        s"$rel:$n"
+    }
+    assert(reads.isEmpty, s"env/sys-prop reads outside the allowed sites: " +
+      reads.mkString(", "))
+    val keys = mainSourceLines.collect {
+      case (rel, n, line) if line.contains("spark.graft.") => s"$rel:$n"
+    }
+    assert(keys.isEmpty, s"spark.graft.* conf keys in main code: ${keys.mkString(", ")}")
+  }
+
   test("query builders size plans from metadata: no .count() under queries/") {
     // a count inside a builder is a Spark action at build time; sizes
     // come from Tables.rowCount (parquet footers) or other metadata

@@ -148,11 +148,14 @@ class WindowDecompSpec extends SparkSpec {
     // SAME bucket count — the byte estimate alone differs by the width
     // ratio, which is exactly the mis-engagement the rows conversion
     // removes (a hot key's sequential window cost is per-row)
-    val n = 512
-    val slim = spark.range(n).select(col("id").as("k"), col("id").as("ts_us"))
-    val wide = spark.range(n).select(col("id").as("k"), col("id").as("ts_us"),
-      (col("id") * 1.5).as("d1"), (col("id") * 2.5).as("d2"),
-      concat(lit("payload-"), col("id")).as("s1"))
+    def frames(n: Long) = {
+      val r = spark.range(n)
+      (r.select(col("id").as("k"), col("id").as("ts_us")),
+        r.select(col("id").as("k"), col("id").as("ts_us"),
+          (col("id") * 1.5).as("d1"), (col("id") * 2.5).as("d2"),
+          concat(lit("payload-"), col("id")).as("s1")))
+    }
+    val (slim, wide) = frames(512)
     val slimRows = TimeBuckets.estimatedRows(slim)
     val wideRows = TimeBuckets.estimatedRows(wide)
     // same row count → row estimates within a small factor (string
@@ -163,14 +166,13 @@ class WindowDecompSpec extends SparkSpec {
     assert(wideBytes > slimBytes * 2, "fixture must differ in width")
     assert((slimRows - wideRows).abs * 4 <= slimRows.max(wideRows),
       s"row estimates diverged: slim=$slimRows wide=$wideRows")
-    // with a forced per-bucket rows target both widths engage IDENTICALLY
-    sys.props("spark.graft.windowBucketRows") = (n / 8).toString
-    try {
-      val bs = TimeBuckets.bucketCount(slim, 0)
-      val bw = TimeBuckets.bucketCount(wide, 0)
-      assert(bs > 1, "forced target must engage the hatch")
-      assert(bs === bw, s"widths engaged differently: slim=$bs wide=$bw")
-    } finally { sys.props.remove("spark.graft.windowBucketRows"); () }
+    // past the default rows target both widths engage IDENTICALLY; the
+    // frames are only planned, never run, so their size is free
+    val (bigSlim, bigWide) = frames(16 * TimeBuckets.DefaultBucketRows)
+    val bs = TimeBuckets.bucketCount(bigSlim, 0)
+    val bw = TimeBuckets.bucketCount(bigWide, 0)
+    assert(bs > 1, "an estimate past the rows target must engage the hatch")
+    assert(bs === bw, s"widths engaged differently: slim=$bs wide=$bw")
   }
 
   test("withBucket: degenerate bounds collapse to one bucket") {
