@@ -93,14 +93,15 @@ object Par {
     * touches `df.rdd`, because materializing the probe's physical plan
     * compiles its whole-stage-codegen classes, a per-call Janino tax
     * that showed up as a 0.5-2.5 s regression across every spread
-    * caller in the round-4 bench. Split estimate per leaf:
-    * ceil(fileSize / maxPartitionBytes) summed over files — the number
-    * of independently consumable chunks a columnar scan yields (a small
-    * parquet file is ONE row group regardless of how many sub-file
-    * splits the scheduler plans, so planned-partition counts
-    * overestimate effective parallelism). Non-file leaves (in-memory
-    * test relations) estimate 1 and keep the pre-probe unconditional
-    * behavior. */
+    * caller in the round-4 bench. Split estimate per leaf, the scan
+    * planner's packing arithmetic: a file over maxPartitionBytes counts
+    * ceil(fileSize / maxPartitionBytes) chunks, and the smaller files
+    * count as the bins they pack into, ceil(Σ(fileSize + openCost) /
+    * maxPartitionBytes) — a small parquet file is ONE row group
+    * regardless of how many sub-file splits the scheduler plans, and a
+    * pile of small files runs as a few packed tasks, so neither is a
+    * parallel source. Non-file leaves (in-memory test relations)
+    * estimate 1 and keep the pre-probe unconditional behavior. */
   def spread(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val target = sess.conf.get("spark.sql.shuffle.partitions").toInt
@@ -141,16 +142,17 @@ object Par {
     * those frames are small by construction, so the round-robin shuffle
     * is noise there. */
   private def estimatedScanSplits(df: DataFrame): Long = {
-    val maxSplit = math.max(1L,
-      df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val conf = df.sparkSession.sessionState.conf
+    val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
+    val openCost = conf.filesOpenCostInBytes
+    def ceilDiv(a: Long): Long = (a + maxSplit - 1) / maxSplit
     val leaves = df.queryExecution.analyzed.collect {
       case lr: LogicalRelation =>
         lr.relation match {
           case fs: HadoopFsRelation =>
-            fs.location.listFiles(Nil, Nil).iterator
-              .flatMap(_.files)
-              .map(f => math.max(1L, (f.getLen + maxSplit - 1) / maxSplit))
-              .sum
+            val lens = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
+            val (large, small) = lens.partition(_ > maxSplit)
+            large.map(ceilDiv).sum + ceilDiv(small.map(_ + openCost).sum)
           case _ => 1L
         }
     }

@@ -308,7 +308,7 @@ object IngestQueries {
     // over-split (file-commit overhead, not parallelism, dominated);
     // the knob rises with the per-date volume at scale
     graft.sources.DatedWriter.writeDated(posDf, "ts", out, filesPerDate = 1)
-    graft.sources.DatedWriter.readDated(s, out)
+    graft.sources.DatedWriter.readDated(s, out, posDf.schema)
       .filter(col("date_key") >= "20240105" && col("date_key") <= "20240108")
       .groupBy("date_key")
       .agg(count(lit(1)).as("n"), countDistinct("vehicle_id").as("n_vehicles"),
@@ -667,17 +667,17 @@ object IngestQueries {
     // (compaction consumes its input in place): the measured cost is
     // the maintenance job itself — one clustered shuffle + rewrite +
     // swap — not rebuilding the 120-small-file input per invocation.
+    val posDf = PositionView.fromEvents(events(s, dir))
+      .select("event_id", "vehicle_id", "ts", "value")
     val pristine = graft.operators.Stage.value(s, dir, "compact_zone_src") {
       val p = base + "_pristine"
-      val posDf = PositionView.fromEvents(events(s, dir))
-        .select("event_id", "vehicle_id", "ts", "value")
       graft.sources.DatedWriter.writeDated(posDf, "ts", p, filesPerDate = 4)
       p
     }
     val out = base + "_work"
     graft.sources.DatedWriter.cloneTree(pristine, out)
     graft.sources.DatedWriter.compactDated(s, out, filesPerDate = 1)
-    graft.sources.DatedWriter.readDated(s, out)
+    graft.sources.DatedWriter.readDated(s, out, posDf.schema)
       .groupBy("date_key")
       .agg(count(lit(1)).as("n"), countDistinct("vehicle_id").as("n_vehicles"),
         round(sum("value"), 2).as("sum_value"))

@@ -483,7 +483,7 @@ object MiscQueries {
         timestamp_micros(expr(graft.sources.PositionView.TsUsSql)).as("ts"),
         col("value"))
     StreamOps.runToDated(s, src, "ts", out)
-    graft.sources.DatedWriter.readDated(s, out)
+    graft.sources.DatedWriter.readDated(s, out, src.schema)
       .groupBy("date_key")
       .agg(count(lit(1)).as("n"), countDistinct("vehicle_id").as("n_vehicles"),
         round(sum("value"), 2).as("sum_value"))
@@ -539,7 +539,7 @@ object MiscQueries {
     // the next session: same checkpoint, no planted failure — recovers
     // the buffered batch and drains the remaining backlog
     StreamOps.runToDatedRecoverable(s, src, "ts", out, ckpt)
-    graft.sources.DatedWriter.readDated(s, out)
+    graft.sources.DatedWriter.readDated(s, out, src.schema)
       .groupBy("date_key")
       .agg(count(lit(1)).as("n"), countDistinct("vehicle_id").as("n_vehicles"),
         round(sum("value"), 2).as("sum_value"))

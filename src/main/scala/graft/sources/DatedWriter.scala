@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.PidScratch
 
@@ -50,12 +51,14 @@ object DatedWriter {
       .write.partitionBy("date_key").format(format).mode(mode).save(outDir)
   }
 
-  /** Reads a dated landing dir. date_key is normalized back to string:
-    * the digits-only directory value would otherwise infer as int, and
-    * the partition column must compare like the writer produced it. */
-  def readDated(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("date_key", col("date_key").cast("string"))
+  /** Reads a dated landing dir written from frames of schema
+    * `written` (the frame [[writeDated]] was given, without date_key).
+    * The schema is the caller's, so the read runs no footer-inference
+    * job, and date_key is declared a string: the digits-only directory
+    * value would otherwise infer as int, and the partition column must
+    * compare like the writer produced it. */
+  def readDated(s: SparkSession, outDir: String, written: StructType): DataFrame =
+    s.read.schema(written.add("date_key", StringType)).parquet(outDir)
 
   /** Compacts a dated landing zone down to `filesPerDate` files per
     * date partition — the small-files maintenance job every appended

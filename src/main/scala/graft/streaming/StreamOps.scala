@@ -109,19 +109,21 @@ object StreamOps {
     eventsStreamStaged(s, dir, slices, filesPerTrigger = Some(1))
 
   /** [[eventsStreamSliced]]'s N-file stage drained in ONE AvailableNow
-    * batch (no maxFilesPerTrigger): the batch's scan plans one task per
-    * file, so the decode+project feeding a stateful shuffle runs at
-    * N-way parallelism instead of inheriting the single backlog file's
-    * one split. The repartition alternative pays an extra full-row
-    * shuffle INSIDE the batch; pre-splitting the backlog is free
-    * after the one-time stage — and is the shape a production landing
-    * zone already has (many files per date). */
+    * batch (no maxFilesPerTrigger): on a [[replaySession]] the batch's
+    * scan plans one task per file, so the decode+project feeding a
+    * stateful shuffle runs at N-way parallelism instead of inheriting
+    * the single backlog file's one split. The repartition alternative
+    * pays an extra full-row shuffle INSIDE the batch; pre-splitting
+    * the backlog is free after the one-time stage — and is the shape a
+    * production landing zone already has (many files per date). */
   def eventsStreamWide(s: SparkSession, dir: String, files: Int): DataFrame =
     eventsStreamStaged(s, dir, files, filesPerTrigger = None)
 
   /** Ranged backlog drained `filesPerBatch` files per micro-batch from
-    * a `slices`-file stage: each batch's scan plans one task per file,
-    * so a per-batch parse/probe runs filesPerBatch-way parallel WITHOUT
+    * a `slices`-file stage: on a [[replaySession]] each batch's scan
+    * plans one task per file (on any other session the planner packs
+    * small files by bytes into fewer tasks), so a per-batch
+    * parse/probe runs filesPerBatch-way parallel WITHOUT
     * the in-batch shuffle a repartition fan-out would pay
     * (measured on st_asof_serve at sf1: an in-probe Par.spread made the
     * batch p50 834 -> 1211 ms — the exchange costs more than the serial
@@ -414,15 +416,29 @@ object StreamOps {
     * are store-independent, which StateStoreProviderSpec hash-gates.
     * A child of a [[graft.GraftSession.builder]] session inherits its
     * artifact isolation off, so the replay reuses the classes the
-    * parent already compiled instead of recompiling them. */
-  private def replaySession(s: SparkSession, stateful: Boolean,
-                            noFlush: Boolean): SparkSession = {
+    * parent already compiled instead of recompiling them.
+    *
+    * The child's scans plan one task per file: its open cost is raised
+    * to the split size, so no two files share a task. A replay's
+    * source is a staged backlog whose slices ([[wideReplayFiles]])
+    * exist to split its CPU-bound decode across cores, and the
+    * session's 64 KB open cost packs them by bytes into tasks of about
+    * 2 MB — at sf0.1 the whole events backlog (2.0 MB) into one task:
+    * st_positions_parse read 0.70 → 1.40 s, and st_session_window,
+    * st_sliding_counts, st_stream_dedup and st_sessionize 11-23%
+    * slower, in a same-window `graft.Bench` A/B on 4 cores (SCALE.md).
+    * Reads on the parent session, such as the sinks' read-backs, still
+    * pack. */
+  private[graft] def replaySession(s: SparkSession, stateful: Boolean,
+                                   noFlush: Boolean): SparkSession = {
     val ss = s.newSession()
     s.conf.getAll.foreach { case (k, v) =>
       try ss.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
     graft.GraftSession.ensureFunctions(ss)
+    ss.conf.set("spark.sql.files.openCostInBytes",
+      ss.sessionState.conf.filesMaxPartitionBytes.toString)
     if (stateful)
       ss.conf.set("spark.sql.shuffle.partitions", replayStateParts(s).toString)
     if (noFlush)
@@ -838,7 +854,11 @@ object StreamOps {
     * stateful stage's floor, a different trade). At the default 32
     * that resolves to 16, the probed optimum at sf1 (2.36 → 1.92 s on
     * st_session_window; one-file baseline runs the 1M-row decode on a
-    * single core). */
+    * single core). Each slice is one scan task because the replays
+    * plan on a [[replaySession]], whose open cost equals the split
+    * size; under the builder's 64 KB open cost the planner would pack
+    * the slices by bytes into tasks of about 2 MB, which at sf0.1 is
+    * the whole backlog in one task. */
   def wideReplayFiles(s: SparkSession): Int =
     math.max(4, math.min(32,
       s.conf.get("spark.sql.shuffle.partitions").toInt / 2))

@@ -19,15 +19,30 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def day(d: Int, id: Long) =
     (id, java.sql.Timestamp.valueOf(f"2024-01-$d%02d 10:00:00"))
 
+  /** The written schema of every zone here: `day` rows as (id, ts). */
+  private val written = Seq(day(1, 0L)).toDF("id", "ts").schema
+
+  private def readDated(dir: String) = DatedWriter.readDated(spark, dir, written)
+
   test("writes one directory per date and reads back the same rows") {
     val dir = freshDir()
     val df = Seq(day(1, 1L), day(1, 2L), day(2, 3L)).toDF("id", "ts")
     DatedWriter.writeDated(df, "ts", dir)
     val dates = new java.io.File(dir).list().filter(_.startsWith("date_key="))
     assert(dates.toSet === Set("date_key=20240101", "date_key=20240102"))
-    val back = DatedWriter.readDated(spark, dir)
+    val back = readDated(dir)
       .select("id", "date_key").as[(Long, String)].collect().toSet
     assert(back === Set((1L, "20240101"), (2L, "20240101"), (3L, "20240102")))
+  }
+
+  test("readDated plans its read without a job and keeps date_key a string") {
+    val dir = freshDir()
+    DatedWriter.writeDated(Seq(day(1, 1L), day(2, 2L)).toDF("id", "ts"), "ts", dir)
+    val s = spark.newSession()
+    val (back, jobs, _) = JobBudgetSpec.withCounts(s)(DatedWriter.readDated(s, dir, written))
+    assert(jobs === 0, "the read-back inferred its schema")
+    assert(back.columns.toSeq === Seq("id", "ts", "date_key"))
+    assert(back.schema("date_key").dataType === org.apache.spark.sql.types.StringType)
   }
 
   test("append rotates into the new date without touching existing ones") {
@@ -35,7 +50,7 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     DatedWriter.writeDated(Seq(day(1, 1L)).toDF("id", "ts"), "ts", dir)
     DatedWriter.writeDated(Seq(day(2, 2L)).toDF("id", "ts"), "ts", dir,
       mode = "append")
-    val back = DatedWriter.readDated(spark, dir)
+    val back = readDated(dir)
       .select("id", "date_key").as[(Long, String)].collect().toSet
     assert(back === Set((1L, "20240101"), (2L, "20240102")))
   }
@@ -55,7 +70,7 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(files >= 1 && files <= 4, s"${d.getName} wrote $files files")
     }
     // and nothing was lost in the pre-write shuffle
-    assert(DatedWriter.readDated(spark, dir).count() === 2000)
+    assert(readDated(dir).count() === 2000)
   }
 
   test("runToDated replay is exactly-once: a re-run never double-counts") {
@@ -66,7 +81,7 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def replay(): Unit = graft.streaming.StreamOps.runToDated(spark,
       spark.readStream.schema(src.schema).parquet(stage), "ts", dir)
     replay(); replay() // second replay must REPLACE, not append onto, the zone
-    val back = DatedWriter.readDated(spark, dir)
+    val back = readDated(dir)
     assert(back.count() === 3)
     assert(back.groupBy("date_key").count().orderBy("date_key")
       .as[(String, Long)].collect().toSeq === Seq(("20240101", 2L), ("20240102", 1L)))
@@ -90,7 +105,7 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       StreamOps.runToDatedRecoverable(spark, src, "ts", dir, ckpt,
         failAtBatch = Some(1L), fresh = true)
     }
-    val afterCrash = DatedWriter.readDated(spark, dir).count()
+    val afterCrash = readDated(dir).count()
     assert(afterCrash < 40, "crash point must leave the zone incomplete")
     // the buffered rows sit in staging, not the zone — the reference's
     // buffer file surviving the dropped session
@@ -98,13 +113,13 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
     // session 2: same checkpoint, no failure — recovery + drain
     StreamOps.runToDatedRecoverable(spark, src, "ts", dir, ckpt)
-    val back = DatedWriter.readDated(spark, dir)
+    val back = readDated(dir)
     assert(back.count() === 40, "recovered zone must hold every row exactly once")
     assert(back.select("id").distinct().count() === 40, "no duplicated rows")
 
     // a THIRD run over the same checkpoint is a no-op on the zone
     StreamOps.runToDatedRecoverable(spark, src, "ts", dir, ckpt)
-    assert(DatedWriter.readDated(spark, dir).count() === 40)
+    assert(readDated(dir).count() === 40)
   }
 
   test("runToDated refuses to clear a directory that is not a landing zone") {
@@ -176,12 +191,12 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .map(p => p.getFileName.toString ->
           java.nio.file.Files.list(p).iterator().asScala
             .count(_.getFileName.toString.endsWith(".parquet"))).toMap
-    val before = DatedWriter.readDated(spark, dir)
+    val before = readDated(dir)
       .collect().map(_.toString).sorted.toSeq
     assert(filesPerDate().values.exists(_ > 1), "fixture not fragmented")
     DatedWriter.compactDated(spark, dir, filesPerDate = 1)
     assert(filesPerDate().values.forall(_ === 1), s"not compacted: ${filesPerDate()}")
-    val after = DatedWriter.readDated(spark, dir)
+    val after = readDated(dir)
       .collect().map(_.toString).sorted.toSeq
     assert(after === before)
     assert(java.nio.file.Files.exists(marker), "bookkeeping lost in the swap")
@@ -218,14 +233,14 @@ class DatedWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // Spark's own file handles coming and going
     val grown = openFds() - before
     assert(grown < rounds / 5, s"$grown fds more after $rounds rounds")
-    assert(DatedWriter.readDated(spark, work).count() === 20)
+    assert(readDated(work).count() === 20)
   }
 
   test("a date filter reaches the scan as a partition filter") {
     val dir = freshDir()
     val df = (1 to 10).map(d => day(d, d.toLong)).toDF("id", "ts")
     DatedWriter.writeDated(df, "ts", dir)
-    val q = DatedWriter.readDated(spark, dir)
+    val q = readDated(dir)
       .filter(col("date_key") >= "20240103" && col("date_key") <= "20240104")
     assert(q.collect().map(_.getAs[Long]("id")).toSet === Set(3L, 4L))
     val scans = collectWithSubqueries(q.queryExecution.executedPlan) {

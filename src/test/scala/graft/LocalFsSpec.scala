@@ -174,6 +174,6 @@ class LocalFsSpec extends SparkSpec {
       rec.close()
       Files.deleteIfExists(dump)
     }
-    assert(graft.sources.DatedWriter.readDated(spark, zone).count() === 200)
+    assert(graft.sources.DatedWriter.readDated(spark, zone, schema).count() === 200)
   }
 }

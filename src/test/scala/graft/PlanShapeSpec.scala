@@ -119,10 +119,15 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("spread").toString
     val df = (1L to 4000L).map(i => (i, s"payload_$i")).toDF("id", "s")
-    df.repartition(8).write.parquet(s"$dir/multi")   // 8 files -> >= 4 splits
-    df.coalesce(1).write.parquet(s"$dir/single")     // 1 file  ->    1 split
+    df.repartition(8).write.parquet(s"$dir/multi")   // 8 files of ~8 KB
+    df.coalesce(1).write.parquet(s"$dir/single")     // 1 file  -> 1 split
+    // 8 small files pack into ONE ~2 MB scan task under the session's
+    // 64 KB open cost, so the multi-split source needs a split size
+    // under the file size: each file then counts as >= 2 splits
+    val split = spark.newSession()
+    split.conf.set("spark.sql.files.maxPartitionBytes", "2048")
 
-    val multi = graft.operators.Par.spread(spark.read.parquet(s"$dir/multi"))
+    val multi = graft.operators.Par.spread(split.read.parquet(s"$dir/multi"))
     val multiShuffles = collectWithSubqueries(executed(multi)) {
       case e: ShuffleExchangeLike => e
     }

@@ -94,13 +94,13 @@ class ReplayHarnessSpec extends SparkSpec {
 
   twice("runToDated", "dated:harness_dated") {
     StreamOps.runToDated(spark, datedSource, "ts", datedDir)
-    graft.sources.DatedWriter.readDated(spark, datedDir)
+    graft.sources.DatedWriter.readDated(spark, datedDir, datedSource.schema)
   }
 
   twice("runToDatedRecoverable (fresh)", "recover:harness_recover") {
     StreamOps.runToDatedRecoverable(spark, datedSource, "ts", recoverDir,
       StreamOps.recoverCheckpointDir("harness_recover"), fresh = true)
-    graft.sources.DatedWriter.readDated(spark, recoverDir)
+    graft.sources.DatedWriter.readDated(spark, recoverDir, datedSource.schema)
   }
 
   /** The full audit trail; SinkAudit's API exposes only its memory-sink
