@@ -113,17 +113,38 @@ object TextFunctions {
     "es" -> Seq("el", "la", "los", "de", "es"),
     "fr" -> Seq("le", "la", "les", "et", "est"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(markers)))
+  /** [[langIdOfTokens]] over the whitespace [[tokens]] of `text`. */
+  def langId(text: Column): Column = langIdOfTokens(tokens(text))
 
-  def langId(text: Column): Column = {
-    // argmax over scores with fixed language order for ties
-    val scored = LangMarkers.map { case (lang, m) => (lang, langScore(text, m)) }
-    scored.tail.foldLeft((scored.head._2, lit(scored.head._1))) {
-      case ((bestScore, bestLang), (lang, score)) =>
-        (when(score > bestScore, score).otherwise(bestScore),
-          when(score > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
+  /** Language of a token array: the [[LangMarkers]] language with the
+    * most marker tokens, ties to the earlier language, and the first
+    * language (`en`) for a null array.
+    *
+    * One walk of the array: a single `aggregate` keeps a struct of one
+    * counter per language, and its finish lambda runs the argmax fold
+    * over the counters. The fold copies each earlier score into both
+    * the condition and the branch of the next `when`; with one
+    * `size(filter(tokens, ...))` per score, every copy was its own
+    * higher-order function, which runs interpreted and is never
+    * common-subexpression-eliminated, so the plan walked each token
+    * array 18 times for 4 distinct scores. Over the counters the same
+    * copies are field reads. */
+  def langIdOfTokens(toks: Column): Column = {
+    val langs = LangMarkers.map(_._1)
+    val zero = struct(langs.map(l => lit(0).as(l)): _*)
+    val counted = aggregate(toks, zero,
+      (acc, t) => struct(LangMarkers.map { case (l, m) =>
+        (acc.getField(l) + when(t.isInCollection(m), 1).otherwise(0)).as(l)
+      }: _*),
+      acc => {
+        val scored = langs.map(l => (l, acc.getField(l)))
+        scored.tail.foldLeft((scored.head._2, lit(scored.head._1))) {
+          case ((bestScore, bestLang), (lang, score)) =>
+            (when(score > bestScore, score).otherwise(bestScore),
+              when(score > bestScore, lit(lang)).otherwise(bestLang))
+        }._2
+      })
+    coalesce(counted, lit(langs.head))
   }
 
   /** PII patterns shared by the Spark and oracle sides. Kept inside the

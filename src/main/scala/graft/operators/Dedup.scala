@@ -342,8 +342,12 @@ object Dedup {
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double,
                      maxRows: Long = EmbeddingPairsMaxRows): DataFrame = {
+    // a plain cast, not VectorFunctions.toDouble's transform (same
+    // doubles): the zero-norm filter below is pushed under this
+    // projection with `emb` inlined twice, and a higher-order function
+    // runs interpreted, uneliminated, once per copy
     val e = df.select(col(idCol).as("__id"),
-      VectorFunctions.toDouble(col(vecCol)).as("emb"))
+      col(vecCol).cast("array<double>").as("emb"))
       .withColumn("nrm", VectorFunctions.normPre(col("emb")))
       // zero-norm guard: a contentless (all-zero) embedding gives
       // cos = 0/0 = NaN, and Spark orders NaN LARGEST, so NaN >=

@@ -124,8 +124,8 @@ object SimilarityQueries {
     * DuckDB oracle pins it. */
   def stAnnServe(s: SparkSession, dir: String): DataFrame = {
     val corpus = data(s, dir)
-    val qStream = graft.streaming.StreamOps.embeddingsStreamSliced(s, dir, 4)
-      .filter(col("vec_id") % 50 === 0)
+    def qStream(ss: SparkSession) = graft.streaming.StreamOps
+      .embeddingsStreamSliced(ss, dir, 4).filter(col("vec_id") % 50 === 0)
     graft.streaming.StreamOps.runBatchTransforms(s, qStream, "st_ann_serve") {
       qb => Similarity.bruteTopK(corpus, qb, "vec_id", "embedding", K)
     }.orderBy("q_id", "rank")
@@ -152,8 +152,8 @@ object SimilarityQueries {
     // stateless against the static index, so the drained union is
     // slicing-independent and each extra batch only pays the engine
     // floor + an index-probe stage launch
-    val qStream = graft.streaming.StreamOps.embeddingsStreamSliced(s, dir, 2)
-      .filter(col("vec_id") % 50 === 0)
+    def qStream(ss: SparkSession) = graft.streaming.StreamOps
+      .embeddingsStreamSliced(ss, dir, 2).filter(col("vec_id") % 50 === 0)
     val served =
       graft.streaming.StreamOps.runBatchTransforms(s, qStream, "st_ivf_serve") {
         qb => Similarity.ivfTopK(indexed, qb, "vec_id", "embedding",

@@ -175,9 +175,11 @@ object TextQueries {
       langId(col("text")).as("lang_pred"))
       .sortWithinPartitions("doc_id")
 
-  /** CASE-chain replica of the langId fold: the fold keeps the EARLIER
-    * language on ties, so lang k wins only with a strict > over the max
-    * of all earlier scores. */
+  /** CASE-chain replica of langId's argmax: the fold over the four
+    * marker counters keeps the EARLIER language on ties, so lang k wins
+    * only with a strict > over the max of all earlier scores. DuckDB
+    * scores each language with its own list_filter; the Spark side
+    * counts all four in one walk of the tokens. */
   val txLangIdSql: String = {
     val score = LangMarkers.map { case (lang, markers) =>
       val set = markers.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -424,16 +426,21 @@ object TextQueries {
     * reason. Every signal here is a per-row expression (token count,
     * marker-score language, duplicate-token fraction) so the whole
     * filter is one narrow scan inside whole-stage codegen — no joins,
-    * no shuffle except the final order. */
+    * no shuffle except the final order.
+    *
+    * The tokens are projected once as a column that all three signals
+    * read: CollapseProject does not inline a non-cheap alias with more
+    * than one reference, so each document's text is split once. */
   def txQualityFilter(s: SparkSession, dir: String): DataFrame = {
-    val toks = tokens(col("text"))
+    val toks = col("toks")
     val dupFrac = lit(1.0) -
       size(array_distinct(toks)).cast("double") / size(toks)
     val reason = when(size(toks) < 20, "short")
-      .when(langId(col("text")) =!= "en", "lang")
+      .when(langIdOfTokens(toks) =!= "en", "lang")
       .when(dupFrac > 0.3, "repetitive")
       .otherwise("keep")
     docsSpreadOrdered(s, dir)
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), reason.as("reason"))
       .withColumn("keep", col("reason") === "keep")
       .sortWithinPartitions("doc_id")
@@ -557,8 +564,8 @@ object TextQueries {
     // 2 ranged slices — the r18 serving-family convention (stateless
     // probe against a static artifact; extra batches only pay the
     // engine floor)
-    val evalStream = graft.streaming.StreamOps
-      .documentsStreamSliced(s, dir, 2)
+    def evalStream(ss: SparkSession) = graft.streaming.StreamOps
+      .documentsStreamSliced(ss, dir, 2)
       .filter(trainSplit(col("doc_id")) === "val")
       .select("doc_id", "text")
     graft.streaming.StreamOps

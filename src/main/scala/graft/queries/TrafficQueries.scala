@@ -486,7 +486,6 @@ object TrafficQueries {
     // Par.spread alternative measured worse — see eventsStreamSlicedWide;
     // the A/B ladder was 8/4: 2.14 s, 16/8: 1.91 s, 32/16: 2.11 s at
     // sf1 — 16/8 is the listing/commit-vs-parallelism sweet spot)
-    val stream = graft.streaming.StreamOps.eventsStreamSlicedWide(s, dir, 16, 8)
     try {
       // warm the serving plan before accepting traffic: one probe row
       // through the same transform compiles the join's codegen classes,
@@ -498,7 +497,9 @@ object TrafficQueries {
       probe(Tables.events(s, dir).limit(1))
         .write.mode("overwrite")
         .parquet(graft.streaming.StreamOps.scratchPath("st_asof_serve"))
-      graft.streaming.StreamOps.runBatchTransforms(s, stream, "st_asof_serve")(probe)
+      graft.streaming.StreamOps.runBatchTransforms(s,
+        graft.streaming.StreamOps.eventsStreamSlicedWide(_, dir, 16, 8),
+        "st_asof_serve")(probe)
         .sortWithinPartitions("event_id")
     } finally { packed.unpersist(); () }
   }

@@ -999,10 +999,17 @@ object StreamOps {
     * against static state (an ANN index, a dimension snapshot) rather
     * than cross-batch streaming state. No state store runs, so the
     * shuffle-partition clamp is skipped and `f`'s plan keeps the
-    * session parallelism. */
-  def runBatchTransforms(s: SparkSession, df: DataFrame, name: String)
+    * session parallelism.
+    *
+    * The stream is built on a [[replaySession]], like every other
+    * runner's, so each staged slice of a batch stays one scan task;
+    * on the caller's session the 64 KB open cost packs a batch's
+    * slices into one task. */
+  def runBatchTransforms(s: SparkSession, build: SparkSession => DataFrame,
+                         name: String)
                         (f: DataFrame => DataFrame): DataFrame = {
     val root = runRoot("fb", name)
+    val df = build(replaySession(s, stateful = false, noFlush = false))
     // the transform's output schema, captured from the first batch's
     // plan so the drain read never infers footers (readBatchDirs)
     @volatile var outSchema: StructType = null

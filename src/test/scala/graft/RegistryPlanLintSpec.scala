@@ -15,6 +15,11 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   *
   * Doubles as a construction smoke test: every registered query must
   * at least build its plan on a vanilla-shaped session.
+  *
+  * The lints see each query's final physical plan. A subplan that a
+  * `Stage.frame` checkpoint materialized is a scan of the checkpoint
+  * here, so its own plan is not linted; nor are the per-batch plans
+  * of a streaming replay.
   */
 class RegistryPlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -40,6 +45,35 @@ class RegistryPlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(offenders.isEmpty,
       s"shuffled cartesian in: ${offenders.mkString(", ")}")
+  }
+
+  test("no operator evaluates the same lambda subtree twice") {
+    // A higher-order function (filter, transform, aggregate, ...) runs
+    // interpreted and is never common-subexpression-eliminated, so two
+    // semantically equal copies in one operator walk the same array
+    // twice per row. Copies arise when an expression is inlined into
+    // several places: a fold that repeats each earlier score in its
+    // condition and its branch, or a filter pushed through a projection
+    // that substitutes an alias used twice. A scan's pushed dataFilters
+    // repeat its parent Filter's condition and are not counted.
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val offenders = plans.flatMap { case (name, plan) =>
+      collectWithSubqueries(plan) { case p =>
+        val exprs = p match {
+          case scan: FileSourceScanExec =>
+            scan.expressions.filterNot(e => scan.dataFilters.exists(_ eq e))
+          case _ => p.expressions
+        }
+        exprs.flatMap(_.collect { case h: HigherOrderFunction => h.canonicalized })
+          .groupBy(identity).collect {
+            case (h, copies) if copies.size > 1 =>
+              s"$name (${p.nodeName}: ${copies.size}x ${h.prettyName})"
+          }
+      }.flatten
+    }
+    assert(offenders.isEmpty,
+      s"operators holding one lambda subtree more than once: ${offenders.mkString(", ")}")
   }
 
   test("unpartitioned windows appear only over post-aggregation frames") {

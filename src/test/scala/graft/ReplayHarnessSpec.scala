@@ -80,7 +80,7 @@ class ReplayHarnessSpec extends SparkSpec {
   }
 
   twice("runBatchTransforms", "harness_fb") {
-    StreamOps.runBatchTransforms(spark, events(spark), "harness_fb")(
+    StreamOps.runBatchTransforms(spark, events, "harness_fb")(
       _.groupBy("event_type").agg(count(lit(1)).as("n")))
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps.ReplayMetrics.BatchStats
 
@@ -43,8 +44,8 @@ class ServingLatencySpec extends SparkSpec {
     import graft.queries.SimilarityQueries.K
     val (cent, indexed) = index
     val batch = new java.util.concurrent.atomic.AtomicInteger(0)
-    val qStream = graft.streaming.StreamOps
-      .embeddingsStreamSliced(spark, dir, Slices)
+    def qStream(ss: SparkSession) = graft.streaming.StreamOps
+      .embeddingsStreamSliced(ss, dir, Slices)
       .filter(col("vec_id") % 50 === 0)
     graft.streaming.StreamOps
       .runBatchTransforms(spark, qStream, name) { qb =>

@@ -30,13 +30,65 @@ class TextFunctionsSpec extends SparkSpec {
     assert(fps.size === 1)
   }
 
+  /** Plain-Scala langId: a separate count per language over whitespace
+    * tokens, folded in LangMarkers order with a strict `>`, so ties keep
+    * the earlier language; a null text is `en`. */
+  private def referenceLangId(text: String): String =
+    if (text == null) LangMarkers.head._1
+    else {
+      val toks = text.split("\\s+").toSeq
+      val scored = LangMarkers.map { case (l, m) => (l, toks.count(m.contains)) }
+      scored.tail.foldLeft(scored.head) { (best, cur) =>
+        if (cur._2 > best._2) cur else best
+      }._1
+    }
+
   test("langId picks the marker-richest language, earlier wins ties") {
-    val df = Seq(
-      "the cat and the dog is here",   // en
-      "der hund und die katze ist da", // de
-      "zzz qqq www").toDF("text")      // no markers anywhere -> en (first)
-    val out = df.select(langId(col("text"))).as[String].collect().toSeq
-    assert(out === Seq("en", "de", "en"))
+    val cases = Seq(
+      "the cat and the dog is here" -> "en",
+      "der hund und die katze ist da" -> "de",
+      "el perro y los gatos es grande" -> "es",
+      "le chat et les chiens est ici" -> "fr",
+      // 'la' is a marker of both es and fr
+      "la la la le" -> "fr",
+      "la" -> "es",
+      // every pairwise tie goes to the earlier language
+      "the der" -> "en", "the el" -> "en", "the le" -> "en",
+      "der el" -> "de", "der le" -> "de", "el le" -> "es",
+      // a later language that leads mid-fold still loses a tie
+      "der der el el el le le le" -> "es",
+      "is is der der der" -> "de",
+      // 3-way and 4-way ties
+      "the der el" -> "en", "der el le" -> "de", "the el le" -> "en",
+      "the der le" -> "en", "the der el le" -> "en",
+      "and and und und los los les les" -> "en",
+      // no markers, empty, whitespace only, null
+      "zzz qqq www" -> "en", "" -> "en", "   " -> "en", "\t \n" -> "en",
+      (null: String) -> "en")
+    val texts = cases.map(_._1)
+    assert(texts.map(referenceLangId) === cases.map(_._2))
+    val out = texts.zipWithIndex.toDF("text", "i")
+      .select(col("i"), langId(col("text")).as("lang"))
+      .as[(Int, String)].collect().sortBy(_._1).map(_._2).toSeq
+    assert(out === texts.map(referenceLangId))
+  }
+
+  test("tx_quality_filter labels a long non-English document 'lang'") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-langid-")
+    val filler = (1 to 20).map(i => s"w$i").mkString(" ")
+    Seq(
+      (1L, s"$filler der die das und ist"),
+      (2L, s"$filler el la los de es"),
+      (3L, s"$filler le les et est"),
+      (4L, s"$filler the a of and is"),
+      // fr outscores en, but with under 20 tokens the short rule wins
+      (5L, "le les et est"))
+      .toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    val out = graft.queries.TextQueries.txQualityFilter(spark, dir.toString)
+      .select("doc_id", "reason").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(out === Seq(1L -> "lang", 2L -> "lang", 3L -> "lang", 4L -> "keep",
+      5L -> "short"))
   }
 
   test("quality signals on punctuation-free single token") {
