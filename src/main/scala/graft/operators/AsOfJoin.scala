@@ -1,267 +1,97 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, TimestampType}
 
-/** Scalable as-of (backward) join: for every left row, attach the most
-  * recent right row with right.time <= left.time (optionally per key).
+/** Backward as-of join: for every left row, attach the most recent
+  * series row with series.time <= left.time, per key.
   *
   * Mirrors the reference's intent of correlating vehicle positions with
   * the hourly weather series (weather/pipeline/extract.py fetches hourly
   * rows keyed by time; the analysis joins "conditions at that moment").
   *
-  * Implementation is the union-tag-window pattern: tag both sides, union,
-  * ONE hash shuffle, sort by (time, side) within partitions, then a
-  * last-non-null window to propagate the right row forward.
+  * One mechanism, a broadcast binary-search probe:
+  *  - [[packSeries]] builds the INDEX artifact: per key the series
+  *    collapses to ONE row of time-sorted arrays (times as longs,
+  *    payloads as aligned structs);
+  *  - [[probePacked]] hands that row to every left row through a
+  *    broadcast hash join on the keys, and plans.AsOfIndex picks the
+  *    last series index with series.t <= left.t inside generated code
+  *    (O(log |series|) per row, no allocation). The big side is never
+  *    shuffled, sorted or unioned: scan → broadcast probe → project;
+  *  - [[backwardBroadcast]] is their one-shot composition. A serving
+  *    caller packs once, persists the index and probes each batch.
   *
-  * An as-of key is typically low-cardinality (5 event types, 25 routes),
-  * so a key-partitioned window caps parallelism at |keys| no matter how
-  * many executors exist — a 100 TB left side would funnel through 5
-  * sorted partitions. Above [[BucketBytesTarget]] of (Catalyst-estimated)
-  * left input per window group the operator therefore partitions the
-  * window on (key, TIME BUCKET) instead, restoring parallelism at the
-  * cost of a cross-bucket fix-up that is exact and cheap: the last right
-  * payload of every earlier bucket is computed on the RIGHT side only
-  * (the small series), cumulated per key over a |keys| x B frame, and
-  * injected into the union as a synthetic NULL-time row per bucket —
-  * ascending sort puts NULLS FIRST, so the carry-in lands ahead of every
-  * real row of its bucket and the fill stays a pure window; the big side
-  * never joins. Bucket boundaries come from the right side's time range
-  * (the series spans the observation period by construction); left rows
-  * outside it clamp to the edge buckets. Bucketing is monotone in time,
-  * so "same time => same bucket" and every in-bucket window sees exactly
-  * the right rows between its carry-in and the row itself — the result
-  * is row-identical to the single-window form (spec-asserted).
+  * Contract: the right side is a BOUNDED reference series — an hourly
+  * weather series is |hours| × |keys| rows however large the position
+  * stream grows — and unique per (keys, time). A series too large to
+  * broadcast is not re-planned: it fails loudly in Spark's broadcast.
   *
-  * Below the threshold the single-window plan runs as-is: at small
-  * volume the fix-up's fixed stages (series checkpoint, bounds, carry
-  * frame) cost more than the skew they remove (measured +0.4 s at
-  * sf0.1), while the estimate-driven switch keeps the 100 TB path the
-  * default — an UNKNOWN size (no stats) estimates huge and buckets.
+  * Semantics (AsOfJoinSpec checks them against a brute-force as-of):
+  * inclusive at equal times, values travel as one struct (no torn
+  * matches), null-key series rows never match, and null-key/null-time
+  * left rows and rows before the first series point get null values.
   */
 object AsOfJoin {
 
-  /** Estimated left bytes above which the window is time-bucketed. */
-  val BucketBytesTarget: Long = 256L << 20
+  /** Left column names the probe writes; a left frame carrying one
+    * would be silently overwritten or fail as ambiguous. */
+  private val Reserved = Seq("__ts", "__ps", "__asof")
 
-  /** @param left       big side; must carry `keyCols` and `timeCol`
+  /** The monotone LONG image both sides' times are compared on.
+    * Timestamp and TimestampNTZ share the same unix_micros image under
+    * the session's pinned-UTC clock. */
+  private def asLong(c: Column, dt: DataType): Column = dt match {
+    case TimestampType => unix_micros(c)
+    case TimestampNTZType => unix_micros(c.cast(TimestampType))
+    case DateType => unix_date(c).cast("long")
+    case _ => c.cast("long")
+  }
+
+  private def epochScale(dt: DataType): String = dt match {
+    case TimestampType | TimestampNTZType => "micros"
+    case DateType => "days"
+    case other => s"raw:$other"
+  }
+
+  /** One-shot as-of: `right` packed by [[packSeries]], then probed by
+    * [[probePacked]].
+    *
+    * @param left       big side; must carry `keyCols` and `timeCol`
     * @param right      series side; must carry `keyCols`, `timeCol`, and
     *                   `valueCols` (columns to attach)
     * @param timeCol    orderable column name present on both sides
     * @param valueCols  right-side payload column names to carry over
-    * @param buckets    time buckets per key; 0 = size the bucket count
-    *                   from the left plan's size estimate (1 bucket per
-    *                   [[BucketBytesTarget]], capped at the session's
-    *                   shuffle parallelism)
     */
-  def backward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-               timeCol: String, valueCols: Seq[String],
-               buckets: Int = 0): DataFrame = {
-    val leftCols = left.columns
-    // A valueCol name colliding with a left column would emit the name
-    // twice in taggedLeft and corrupt the unionByName — fail fast.
-    require(valueCols.intersect(leftCols).isEmpty,
-      s"valueCols ${valueCols.intersect(leftCols).mkString(",")} collide with left columns; rename first")
-    // reserved internals: a left frame already carrying __tb (e.g. an
-    // undropped TimeBuckets column — the shared bucketing convention)
-    // would be silently OVERWRITTEN by the bucketed path's withColumn
-    // and the final select would return bucket ids as the caller's
-    // data; __side/__vals at least fail with a duplicate-column error,
-    // but fail fast uniformly (r18 review finding)
-    val reservedHit = Seq("__tb", "__side", "__vals").filter(leftCols.contains)
-    require(reservedHit.isEmpty,
-      s"left columns ${reservedHit.mkString(",")} collide with AsOfJoin " +
-        "internals; drop or rename them first")
-    val b = if (buckets > 0) buckets else {
-      val bytes = left.queryExecution.optimizedPlan.stats.sizeInBytes
-      val parts = BigInt(left.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      ((bytes / BucketBytesTarget) min parts max BigInt(1)).toInt
-    }
-    // Contract: right must be unique per (keyCols, timeCol) — duplicate
-    // right timestamps would make which value wins nondeterministic.
-    // Series produced by groupBy(hour) satisfy this by construction.
-    //
-    // SQL equality never matches NULL keys, but a window partitionBy
-    // groups NULLs together — drop null-key right rows so a null-key
-    // left row falls through to null values exactly like an ASOF JOIN.
-    //
-    // Bucketed path: lazy checkpoint — the series then feeds three
-    // consumers (time bounds, the union, the per-bucket boundary agg);
-    // without lineage truncation a derived series (weatherSeries is
-    // itself a groupBy) would re-aggregate once per consumer.
-    val rightRaw = keyCols.foldLeft(right)((d, k) => d.filter(col(k).isNotNull))
-    val rightNonNull = if (b == 1) rightRaw else rightRaw.localCheckpoint(eager = false)
-
-    // side=0 sorts right rows before left rows at equal time → a right
-    // row at exactly t is visible to a left row at t (inclusive as-of).
-    // Values travel as ONE struct, not independent columns: filling each
-    // column separately with last(ignoreNulls) would mix fields from
-    // DIFFERENT right rows whenever the latest row holds a null in one
-    // field (a "torn" match). The struct is non-null exactly for right
-    // rows, so last(ignoreNulls) always lands on a single right row.
-    val payloadType = org.apache.spark.sql.types.StructType(
-      valueCols.map(c => right.schema(c).copy(name = c)))
-    val payload = struct(valueCols.map(col): _*)
-    val taggedRight = rightNonNull.select(
-      keyCols.map(col) ++ Seq(col(timeCol), lit(0).as("__side"),
-        payload.as("__vals")) ++
-        leftCols.filterNot(c => keyCols.contains(c) || c == timeCol)
-          .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val taggedLeft = left.select(
-      keyCols.map(col) ++ Seq(col(timeCol), lit(1).as("__side"),
-        lit(null).cast(payloadType).as("__vals")) ++
-        leftCols.filterNot(c => keyCols.contains(c) || c == timeCol).map(col): _*)
-
-    val (unioned, partCols) =
-      if (b == 1) (taggedRight.unionByName(taggedLeft), keyCols.map(col))
-      else {
-        // Bucket boundaries ride the plan as a broadcast 1-row aggregate
-        // — no driver-side collect. The bucket key must be a MONOTONE
-        // numeric image of the time column (the in-bucket sort still
-        // uses the exact timeCol): a bare double cast covers numerics
-        // but is not defined for timestamps (TIMESTAMP_NTZ -> DOUBLE
-        // is not a valid cast), so temporal types go through their
-        // epoch integers. The NTZ -> TIMESTAMP cast reinterprets the
-        // same micros under the engine's pinned UTC session timezone —
-        // monotone, which is all bucketing needs.
-        import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
-        def asBucketKey(c: Column): Column = left.schema(timeCol).dataType match {
-          case TimestampType => unix_micros(c).cast("double")
-          case TimestampNTZType => unix_micros(c.cast(TimestampType)).cast("double")
-          case DateType => unix_date(c).cast("double")
-          case _ => c.cast("double")
-        }
-        val bounds = rightNonNull.agg(
-          min(asBucketKey(col(timeCol))).as("__lo"),
-          max(asBucketKey(col(timeCol))).as("__hi"))
-        def withBucket(df: DataFrame): DataFrame = {
-          val w = (col("__hi") - col("__lo")) / b
-          df.crossJoin(broadcast(bounds))
-            .withColumn("__tb",
-              // empty/degenerate right (null or zero-width bounds) -> one
-              // bucket; clamp handles left times outside the right range
-              when(col("__lo").isNull || (w <= 0), lit(0)).otherwise(
-                // clamp in the LONG domain BEFORE narrowing: a left time
-                // > 2^31 bucket widths outside the right range would
-                // overflow the int cast (ANSI throw / wrapped clamp-to-0)
-                least(greatest(
-                  floor((asBucketKey(col(timeCol)) - col("__lo")) / w),
-                  lit(0L)), lit((b - 1).toLong)).cast("int")))
-            .drop("__lo", "__hi")
-        }
-        // Cross-bucket carry-in, computed on the SMALL side only: the
-        // last right payload per (key, bucket), spread onto the full
-        // key x bucket grid (a bucket with no right rows still needs the
-        // carry from earlier ones; bucket 0 joins in so its payload
-        // enters the carry window — its own carry is null and drops at
-        // the isNotNull filter), then "last earlier bucket's value" per
-        // key — a window over |keys| x B rows.
-        val grpCols = keyCols :+ "__tb"
-        val perBucket = withBucket(rightNonNull)
-          .groupBy(grpCols.map(col): _*)
-          .agg(max_by(payload, col(timeCol)).as("__last"))
-        val grid = rightNonNull.select(keyCols.map(col): _*).distinct()
-          .withColumn("__tb", explode(sequence(lit(0), lit(b - 1), lit(1))))
-        val cw = Window.partitionBy(keyCols.map(col): _*).orderBy(col("__tb"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val carryRows = grid.join(perBucket, grpCols, "left")
-          .withColumn("__vals", last(col("__last"), ignoreNulls = true).over(cw))
-          .filter(col("__vals").isNotNull)
-          .select(keyCols.map(col) ++ Seq(
-            lit(null).cast(left.schema(timeCol).dataType).as(timeCol),
-            lit(-1).as("__side"), col("__vals"), col("__tb")) ++
-            leftCols.filterNot(c => keyCols.contains(c) || c == timeCol)
-              .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-        (withBucket(taggedRight.unionByName(taggedLeft)).unionByName(carryRows),
-          keyCols.map(col) :+ col("__tb"))
-      }
-
-    val w = Window.partitionBy(partCols: _*)
-      .orderBy(col(timeCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = unioned
-      .withColumn("__asof", last(col("__vals"), ignoreNulls = true).over(w))
-    filled.filter(col("__side") === 1)
-      .select(leftCols.map(col) ++
-        valueCols.map(c => col(s"__asof.$c").as(c)): _*)
-  }
-
-  /** [[backward]] for a BOUNDED series side, via broadcast + binary
-    * search: per key the series collapses to ONE row of time-sorted
-    * arrays, a broadcast hash join hands that row to every left row,
-    * and plans.AsOfIndex picks the last series index with
-    * series.t <= left.t inside generated code (O(log |series|) per
-    * row, no allocation). The big side is never shuffled, sorted or
-    * unioned — scan → broadcast probe → project — the scale-right
-    * shape whenever the right side is REFERENCE data: an hourly
-    * weather series is |hours| × |keys| rows however large the
-    * position stream grows. An unbounded right side must keep
-    * [[backward]] (a broadcast of it would not fit).
-    *
-    * Semantics match [[backward]] row for row (spec-asserted):
-    * inclusive at equal times (binary search takes <=), values travel
-    * as one struct (no torn matches), null-key right rows never match,
-    * null-key/null-time left rows and rows before the first series
-    * point get null values. */
   def backwardBroadcast(left: DataFrame, right: DataFrame, keyCols: Seq[String],
                         timeCol: String, valueCols: Seq[String]): DataFrame = {
-    val leftCols = left.columns
-    require(valueCols.intersect(leftCols).isEmpty,
-      s"valueCols ${valueCols.intersect(leftCols).mkString(",")} collide with left columns; rename first")
-    // reserved internals: a left frame already carrying __tb (e.g. an
-    // undropped TimeBuckets column — the shared bucketing convention)
-    // would be silently OVERWRITTEN by the bucketed path's withColumn
-    // and the final select would return bucket ids as the caller's
-    // data; __side/__vals at least fail with a duplicate-column error,
-    // but fail fast uniformly (r18 review finding)
-    val reservedHit = Seq("__tb", "__side", "__vals").filter(leftCols.contains)
-    require(reservedHit.isEmpty,
-      s"left columns ${reservedHit.mkString(",")} collide with AsOfJoin " +
-        "internals; drop or rename them first")
-    import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, TimestampType}
-    // the two sides' time columns are normalized to longs INDEPENDENTLY
-    // below; types on DIFFERENT epoch scales (DateType days vs
-    // TimestampType micros, or a raw long against either) would compare
-    // silently wrong, where backward's unionByName fails fast — so fail
-    // fast here too. Timestamp vs TimestampNTZ is fine: both map to the
-    // same unix_micros image under the session's pinned-UTC clock.
-    def epochScale(dt: DataType): String = dt match {
-      case TimestampType | TimestampNTZType => "micros"
-      case DateType => "days"
-      case other => s"raw:$other"
-    }
-    require(epochScale(left.schema(timeCol).dataType) ==
-        epochScale(right.schema(timeCol).dataType),
-      s"asof time column '$timeCol' epoch-scale mismatch: left " +
-        s"${left.schema(timeCol).dataType} vs right ${right.schema(timeCol).dataType}; " +
+    // each side's time column is normalized to longs independently;
+    // types on DIFFERENT epoch scales (DateType days vs TimestampType
+    // micros, or a raw long against either) would compare silently
+    // wrong, so fail fast
+    val (lt, rt) = (left.schema(timeCol).dataType, right.schema(timeCol).dataType)
+    require(epochScale(lt) == epochScale(rt),
+      s"asof time column '$timeCol' epoch-scale mismatch: left $lt vs right $rt; " +
         "cast one side first")
-    // the monotone LONG image lives in packSeries/probePacked (each
-    // normalizes its own side) — no local copy, so the normalization
-    // cannot diverge from the one that actually runs
     probePacked(left,
       packSeries(right, keyCols, timeCol, valueCols),
       keyCols, timeCol, valueCols)
   }
 
-  /** The broadcast as-of's INDEX artifact: one row per key with the
-    * series' times (ascending longs) and payload structs as aligned
-    * arrays. Split out of [[backwardBroadcast]] so a SERVING caller can
-    * build it once, persist it, and probe arriving batches against it
-    * — inlined, the packing aggregation (groupBy + collect_list + its
-    * shuffle) re-ran inside EVERY micro-batch's broadcast build
-    * (AsofDetail r16: ~40% of steady per-batch latency, and the whole
-    * batch-0 tail). `epochScale` consistency with the probe side is
-    * the caller's contract here; the one-shot path still requires it. */
+  /** The as-of INDEX artifact: one row per key with the series' times
+    * (ascending longs) and payload structs as aligned arrays. Split out
+    * of [[backwardBroadcast]] so a SERVING caller can build it once,
+    * persist it, and probe arriving batches against it — inlined, the
+    * packing aggregation (groupBy + collect_list + its shuffle) re-ran
+    * inside EVERY micro-batch's broadcast build (AsofDetail r16: ~40%
+    * of steady per-batch latency, and the whole batch-0 tail).
+    * `epochScale` consistency with the probe side is the caller's
+    * contract here; the one-shot path still requires it. */
   def packSeries(right: DataFrame, keyCols: Seq[String], timeCol: String,
                  valueCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
-    def asLong(c: Column): Column = right.schema(timeCol).dataType match {
-      case TimestampType => unix_micros(c)
-      case TimestampNTZType => unix_micros(c.cast(TimestampType))
-      case DateType => unix_date(c).cast("long")
-      case _ => c.cast("long")
-    }
+    // SQL equality never matches NULL keys: drop null-key series rows so
+    // a null-key left row falls through to null values like an ASOF JOIN
     val rightNonNull = keyCols.foldLeft(right)((d, k) => d.filter(col(k).isNotNull))
     val payload = struct(valueCols.map(col): _*)
     // one row per key: ascending times with payloads aligned — sorting
@@ -269,7 +99,7 @@ object AsOfJoin {
     rightNonNull
       .groupBy(keyCols.map(col): _*)
       .agg(sort_array(collect_list(struct(
-        asLong(col(timeCol)).as("__t"),
+        asLong(col(timeCol), right.schema(timeCol).dataType).as("__t"),
         payload.as("__p")))).as("__s"))
       .select(keyCols.map(col) ++ Seq(
         col("__s.__t").as("__ts"), col("__s.__p").as("__ps")): _*)
@@ -282,18 +112,17 @@ object AsOfJoin {
     * JOIN semantics. */
   def probePacked(left: DataFrame, packed: DataFrame, keyCols: Seq[String],
                   timeCol: String, valueCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, TimestampType}
     val leftCols = left.columns
-    def asLong(c: Column, dt: DataType): Column = dt match {
-      case TimestampType => unix_micros(c)
-      case TimestampNTZType => unix_micros(c.cast(TimestampType))
-      case DateType => unix_date(c).cast("long")
-      case _ => c.cast("long")
-    }
-    val joined = left.join(broadcast(packed), keyCols, "left")
+    val reservedHit = Reserved.filter(leftCols.contains)
+    require(reservedHit.isEmpty,
+      s"left columns ${reservedHit.mkString(",")} collide with AsOfJoin " +
+        "internals; drop or rename them first")
+    val valueHit = valueCols.intersect(leftCols)
+    require(valueHit.isEmpty,
+      s"valueCols ${valueHit.mkString(",")} collide with left columns; rename first")
     val idx = graft.plans.AsOfIndex(col("__ts"),
       asLong(col(timeCol), left.schema(timeCol).dataType))
-    joined
+    left.join(broadcast(packed), keyCols, "left")
       .withColumn("__asof", when(idx >= 0, element_at(col("__ps"), idx + 1)))
       .select(leftCols.map(col) ++
         valueCols.map(c => col(s"__asof.$c").as(c)): _*)

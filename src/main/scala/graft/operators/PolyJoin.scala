@@ -27,13 +27,11 @@ import org.apache.spark.sql.functions._
   * cell and a (poly, cell) row is unique, so no post-join dedup is
   * needed. Work is linear in |points| at fixed polygon density.
   *
-  * Scale: the default broadcasts the exploded poly-cell dim (a city's
+  * Scale: the exploded poly-cell dim is always broadcast (a city's
   * district/landuse layer is a few thousand rows — classic broadcast
-  * territory). For continent-scale layers pass `broadcastPolys =
-  * false`: the join becomes a shuffle hash join on the cell key, both
-  * sides partition by cell, and `cellDeg` trades dim fan-out (smaller
-  * cells → more rows per polygon) against candidate selectivity
-  * (bigger cells → more polygons per point).
+  * territory), so the point side is never shuffled. `cellDeg` trades
+  * dim fan-out (smaller cells → more rows per polygon) against
+  * candidate selectivity (bigger cells → more polygons per point).
   */
 object PolyJoin {
 
@@ -93,9 +91,6 @@ object PolyJoin {
     *                  `convex = false` any simple ring works)
     * @param cellDeg   prefilter grid cell edge, in coordinate degrees —
     *                  pick on the order of the typical polygon size
-    * @param broadcastPolys broadcast the exploded poly-cell dim (true
-    *                  for layers up to ~millions of cells); false →
-    *                  shuffle hash join partitioned by cell
     * @param convex    true → cross-product-sign fold (convex CCW rings
     *                  only, boundary-inclusive); false → ray-crossing
     *                  parity (any simple ring, boundary by crossing
@@ -104,7 +99,6 @@ object PolyJoin {
   def containsJoin(points: DataFrame, latCol: String, lonCol: String,
                    polys: DataFrame, polyIdCol: String, vertsCol: String,
                    cellDeg: Double,
-                   broadcastPolys: Boolean = true,
                    convex: Boolean = true): DataFrame = {
     val v = col(vertsCol)
     val xs = transform(v, p => p("x"))
@@ -118,11 +112,10 @@ object PolyJoin {
       .withColumn("__pcx", explode(sequence(col("__cx0"), col("__cx1"))))
       .withColumn("__pcy", explode(sequence(col("__cy0"), col("__cy1"))))
       .select(col(polyIdCol), col("__verts"), col("__pcx"), col("__pcy"))
-    val dim = if (broadcastPolys) broadcast(polyCells) else polyCells
     points
       .withColumn("__cx", floor(col(lonCol) / cellDeg).cast("long"))
       .withColumn("__cy", floor(col(latCol) / cellDeg).cast("long"))
-      .join(dim, col("__cx") === col("__pcx") && col("__cy") === col("__pcy"))
+      .join(broadcast(polyCells), col("__cx") === col("__pcx") && col("__cy") === col("__pcy"))
       .filter(
         if (convex) containsConvex(col(latCol), col(lonCol), col("__verts"))
         else containsRayCast(col(latCol), col(lonCol), col("__verts")))

@@ -11,17 +11,18 @@ import org.apache.spark.sql.functions._
   * key's entire history in ONE sorted task: the round-14 zipf(1.5)
   * rehearsal (SCALE.md) put 39% of a 1M-row stream on one key and
   * measured the window family straggling at 1.65-2.33x — at 100 TB the
-  * same shape is a single multi-TB sequential task. The escape hatch,
-  * proven exact in [[AsOfJoin.backward]], is to partition the window on
-  * (key, time bucket) and repair the cross-bucket seam with an EXACT
-  * carry: the only rows a bucket cannot see are in earlier buckets, and
+  * same shape is a single multi-TB sequential task. The escape hatch
+  * is to partition the window on (key, time bucket) and repair the
+  * cross-bucket seam with an EXACT carry (WindowDecompSpec checks it
+  * row-identical to the single window at every bucket count): the
+  * only rows a bucket cannot see are in earlier buckets, and
   * the per-key windows used here depend on that history only through a
   * bounded per-bucket summary (last row, prefix totals) that a
   * map-side-combined aggregate produces at |keys| x B rows.
   *
-  * Like AsOfJoin, the decomposition engages by plan ESTIMATE — but in
-  * ROWS, not bytes ([[DefaultBucketRows]], the byte estimate divided by
-  * the schema's row width): a hot key's sequential window cost is
+  * The decomposition engages by plan ESTIMATE — in ROWS, not bytes
+  * ([[DefaultBucketRows]], the byte estimate divided by the schema's
+  * row width): a hot key's sequential window cost is
   * per-row, so a byte threshold engages at wildly different hot-task
   * seconds depending on row width. Below the threshold the
   * single-window plan runs as-is (the carry machinery's fixed stages
@@ -133,15 +134,14 @@ object TimeBuckets {
 
   /** Appends `__tb` in [0, b): equal-width buckets of the NUMERIC time
     * column, bounds riding the plan as a broadcast 1-row aggregate (no
-    * driver collect — same shape as AsOfJoin's bucketed path).
+    * driver collect).
     *
-    * SIBLINGS: AsOfJoin.backward carries its own copy (adds
-    * temporal-type normalization) and RankOps.withGlobalRank another
-    * (adds null→-1 and NaN→last-bucket routing for VALUE columns —
-    * time columns here are non-null non-NaN by the callers' contract).
-    * A fix to the shared floor arithmetic must visit all three; they
-    * differ deliberately in edge handling, which is why they are not
-    * one function. Bucketing
+    * SIBLING: RankOps.withGlobalRank carries the other copy (adds
+    * null→-1 and NaN→last-bucket routing for VALUE columns — time
+    * columns here are non-null non-NaN by the callers' contract). A
+    * fix to the shared floor arithmetic must visit both; they differ
+    * deliberately in edge handling, which is why they are not one
+    * function. Bucketing
     * is monotone in the time column, so same time => same bucket and
     * every bucket's rows are contiguous in the per-key order; the
     * degenerate bounds (empty input, single timestamp) collapse to one

@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * per-row allocation — called from generated code on the stream side
   * of a broadcast join, which is what lets the as-of attach run with
   * NO shuffle or sort of the big side (operators/AsOfJoin
-  * .backwardBroadcast). Null array or null t yields null. Duplicate
-  * times return the LAST duplicate's index, matching the
-  * union-tag-window form's "most recent right row wins" fill. */
+  * .probePacked). Null array or null t yields null. The comparison is
+  * inclusive (a series point AT t matches), and duplicate times return
+  * the LAST duplicate's index. */
 case class AsOfIndex(left: Expression, right: Expression)
   extends BinaryExpression with ImplicitCastInputTypes {
   override def dataType: DataType = IntegerType

@@ -512,7 +512,7 @@ object MiscQueries {
     * mapping onto the reference's buffer/.processing/confirm files. */
   def stRecoverBuffered(s: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    def src = StreamOps.eventsStreamSliced(s, dir, 3)
+    def src = StreamOps.eventsStreamSlicedWide(s, dir, 3, 1)
       .select(col("event_id"), col("user_id").as("vehicle_id"),
         timestamp_micros(expr(graft.sources.PositionView.TsUsSql)).as("ts"),
         col("value"))

@@ -19,18 +19,17 @@ object Bucketing {
     * existing location — so both the catalog entry AND any orphaned
     * directory are cleared first.
     *
-    * `reuse = true` (default) returns immediately when THIS JVM's
-    * catalog already has the table: bucketing is a one-time layout
-    * investment — the whole point is paying the shuffle+sort once and
-    * joining shuffle-free forever after — so repeated calls (bench
-    * rounds, repeated queries) must not re-stage it. Callers key the
-    * table name by source dir, which is immutable here; pass
-    * `reuse = false` when the source may have changed. A fresh JVM
-    * always rebuilds (the in-memory catalog starts empty). */
+    * Returns immediately when THIS JVM's catalog already has the
+    * table: bucketing is a one-time layout investment — the whole point
+    * is paying the shuffle+sort once and joining shuffle-free forever
+    * after — so repeated calls (bench rounds, repeated queries) must
+    * not re-stage it. Callers key the table name by source dir, which
+    * is immutable here. A fresh JVM always rebuilds (the in-memory
+    * catalog starts empty). */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int, reuse: Boolean = true): Unit = {
+                    numBuckets: Int): Unit = {
     val s = df.sparkSession
-    if (reuse && s.catalog.tableExists(table)) return
+    if (s.catalog.tableExists(table)) return
     s.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       s.sessionState.conf.warehousePath, table.toLowerCase)

@@ -98,18 +98,7 @@ object StreamOps {
   }
 
   /** [[eventsStream]] over an N-file staged copy of the events table,
-    * read one file per micro-batch — the multi-batch replay harness
-    * for restart/recovery operators (a single-file backlog is one
-    * AvailableNow batch, which cannot exercise a MID-stream failure).
-    * The sliced copy is staged once per (dir, slices) and reused:
-    * batch boundaries then stay fixed across the failed run and its
-    * recovery restart, exactly like the reference's buffer files
-    * surviving a dropped session. */
-  def eventsStreamSliced(s: SparkSession, dir: String, slices: Int): DataFrame =
-    eventsStreamStaged(s, dir, slices, filesPerTrigger = Some(1))
-
-  /** [[eventsStreamSliced]]'s N-file stage drained in ONE AvailableNow
-    * batch (no maxFilesPerTrigger): on a [[replaySession]] the batch's
+    * drained in ONE AvailableNow batch (no maxFilesPerTrigger): on a [[replaySession]] the batch's
     * scan plans one task per file, so the decode+project feeding a
     * stateful shuffle runs at N-way parallelism instead of inheriting
     * the single backlog file's one split. The repartition alternative
@@ -129,7 +118,15 @@ object StreamOps {
     * batch p50 834 -> 1211 ms — the exchange costs more than the serial
     * parse it relieves; multi-file batches get the parallelism for
     * free). Batch boundaries stay deterministic: files drain in stamped
-    * mtime (range) order, so batch k = ranges [k*f, (k+1)*f). */
+    * mtime (range) order, so batch k = ranges [k*f, (k+1)*f).
+    *
+    * With `filesPerBatch = 1` this is the multi-batch replay harness
+    * for restart/recovery operators (a single-file backlog is one
+    * AvailableNow batch, which cannot exercise a MID-stream failure):
+    * the stage is built once per (dir, slices) and reused, so batch
+    * boundaries stay fixed across the failed run and its recovery
+    * restart, exactly like the reference's buffer files surviving a
+    * dropped session. */
   def eventsStreamSlicedWide(s: SparkSession, dir: String, slices: Int,
                              filesPerBatch: Int): DataFrame =
     eventsStreamStaged(s, dir, slices, filesPerTrigger = Some(filesPerBatch))

@@ -34,18 +34,6 @@ class PolyJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out === Set((1L, 1), (2L, 2)))
   }
 
-  test("shuffle-dim path (broadcastPolys=false) matches the broadcast path") {
-    // the continent-scale route never runs in the registered queries
-    // (they broadcast a city layer) — pin its row-identity here
-    val p = pts((1L, 0.5, 0.5), (2L, 0.5, 1.5), (3L, 0.5, 9.0),
-      (4L, -0.5, 0.5), (5L, 0.5, 1.0), (6L, 1.0, 2.0))
-    def run(bc: Boolean) = PolyJoin.containsJoin(
-      p, "lat", "lon", polyDf(squares), "poly_id", "verts",
-      cellDeg = 0.5, broadcastPolys = bc)
-      .select("id", "poly_id").as[(Long, Int)].collect().toSet
-    assert(run(false) === run(true))
-  }
-
   test("a point on a shared border belongs to both polygons") {
     val out = PolyJoin.containsJoin(pts((7L, 0.5, 1.0)),
       "lat", "lon", polyDf(squares), "poly_id", "verts", cellDeg = 0.5)

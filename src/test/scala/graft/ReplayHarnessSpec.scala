@@ -18,7 +18,7 @@ class ReplayHarnessSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def events(ss: SparkSession): DataFrame =
-    StreamOps.eventsStreamSliced(ss, sf, 2)
+    StreamOps.eventsStreamSlicedWide(ss, sf, 2, 1)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

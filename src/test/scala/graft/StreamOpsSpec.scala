@@ -136,7 +136,7 @@ class StreamOpsSpec extends SparkSpec {
       "spec_sess_final_1b", proj))
     val fourBatches = shape(StreamOps.runToParquetWithState(spark,
       ss => StreamOps.sessionCounts(
-        StreamOps.eventsStreamSliced(ss, sf, 4), "30 minutes"),
+        StreamOps.eventsStreamSlicedWide(ss, sf, 4, 1), "30 minutes"),
       "spec_sess_final_4b", proj))
     assert(oneBatch.nonEmpty)
     assert(fourBatches === oneBatch)

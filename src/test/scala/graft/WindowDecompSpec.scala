@@ -5,12 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The (key, time-bucket) carry-in decomposition must be ROW-IDENTICAL
-  * to the single-window plans for every bucket count — same contract as
-  * AsOfJoinSpec's B-invariance. The fixture is adversarial on seams:
-  * duplicate timestamps (tie-break on event_id), one hot key carrying
-  * most rows (the zipf shape the decomposition exists for), keys with a
-  * single row, gaps straddling bucket boundaries, and B far above the
-  * distinct-time count (empty buckets → carry-through). */
+  * to the single-window plans for every bucket count. The fixture is
+  * adversarial on seams: duplicate timestamps (tie-break on event_id),
+  * one hot key carrying most rows (the zipf shape the decomposition
+  * exists for), keys with a single row, gaps straddling bucket
+  * boundaries, and B far above the distinct-time count (empty buckets
+  * → carry-through). */
 class WindowDecompSpec extends SparkSpec {
   import spark.implicits._
 
