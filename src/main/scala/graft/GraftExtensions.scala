@@ -1,12 +1,13 @@
 package graft
 
-import graft.plans.{ArrayDot, ArrayXxHash64, BinaryGpsDecode, BpePieceCount, BpeTokenCount, ByteStats, ConvexContains, GeoRangeRule, HaversineDist, ImageHeaderDecode, MinHashSig, NormalizeText, OsmNodeParse, OsmRelationParse, OsmWayParse, PrefixSkipHot, RayCastContains, RingArea, SimHash64, SortedIntersectCount, PunctCount, SortedShingleHashes, TopKPairs, WordShingles, WsTokenCount}
+import graft.plans.{ArrayDot, ArrayXxHash64, BinaryGpsDecode, BpePieceCount, BpeTokenCount, ByteStats, ConvexContains, GeoRangeRule, HaversineDist, ImageHeaderDecode, MinHashSig, NormalizeText, OsmNodeParse, OsmRelationParse, OsmWayParse, PrefixSkipHot, RayCastContains, RingArea, SimHash64, SmallSortFinish, SortedIntersectCount, PunctCount, SortedShingleHashes, TopKPairs, WordShingles, WsTokenCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions registering graft's custom Catalyst expressions,
-  * wired via `spark.sql.extensions=graft.GraftExtensions` (set by
+/** Session extensions registering graft's custom Catalyst expressions
+  * and optimizer rules, wired via
+  * `spark.sql.extensions=graft.GraftExtensions` (set by
   * GraftSession.builder). Extension-injected functions resolve in SQL
   * text and through `functions.call_function` alike.
   *
@@ -18,6 +19,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // geo range filters gain a sargable latitude-band prefilter
     ext.injectOptimizerRule(_ => GeoRangeRule)
+    // small global sorts finish in one task: statically from relation
+    // sizes, and at runtime from materialized query stages
+    ext.injectOptimizerRule(_ => SmallSortFinish)
+    ext.injectRuntimeOptimizerRule(_ => SmallSortFinish)
   }
 }
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Per-query Spark job budget for the dedup and similarity families at
+/** Per-query Spark job budget for the dedup and similarity families
+  * and three queries whose final sort finishes in one task, at
   * sf0.001. Fixed per-job latency dominates small-input passes, and
   * nothing else pins how many jobs a query runs, so a change that adds
   * jobs fails here.
@@ -28,18 +29,27 @@ class JobBudgetSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   // table schemas are inferred once per JVM (Tables' catalog stand-in)
-  // and the streamed embeddings slices are staged once per host (under
-  // /tmp/graft-stream, kept across JVMs): do both here so no query's
-  // count depends on which suite or JVM ran first
+  // and the streamed embeddings and events slices are staged once per
+  // host (under /tmp/graft-stream, kept across JVMs): do both here so
+  // no query's count depends on which suite or JVM ran first
   override def beforeAll(): Unit = {
     super.beforeAll()
     val s = spark.newSession()
     Tables.documents(s, dir)
     Tables.embeddings(s, dir)
     Seq(2, 4).foreach(graft.streaming.StreamOps.embeddingsStreamSliced(s, dir, _))
+    graft.streaming.StreamOps.eventsStream(s, dir)
+    graft.streaming.StreamOps.eventsStreamWide(s, dir,
+      graft.streaming.StreamOps.wideReplayFiles(s))
   }
 
-  private val queries = DedupQueries.queries ++ SimilarityQueries.queries
+  // beyond the two families: the perfbench pipeline replays and
+  // interactive geo_range_query, whose final sorts SmallSortFinish
+  // finishes in one task (no range-sample job, no range shuffle)
+  private val sortFinished = Seq("st_windowed_counts", "st_dated_sink", "geo_range_query")
+
+  private val queries = DedupQueries.queries ++ SimilarityQueries.queries ++
+    sortFinished.map(q => q -> SparkEntry.queries(q))
 
   private lazy val budget: Map[String, (Int, Int)] = {
     val src = scala.io.Source.fromResource("job_budget.tsv")
@@ -51,9 +61,8 @@ class JobBudgetSpec extends SparkSpec {
     finally src.close()
   }
 
-  test("the budget covers exactly the registered dd_* and similarity queries") {
-    assert(budget.keySet ===
-      DedupQueries.queries.keySet ++ SimilarityQueries.queries.keySet)
+  test("the budget covers exactly the dd_*, similarity and sort-finished queries") {
+    assert(budget.keySet === queries.keySet)
   }
 
   queries.keys.toSeq.sorted.foreach { q =>

@@ -29,12 +29,13 @@ class RegistryPlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   // plan executes any streaming replay it contains (the run* harnesses
   // are eager), so the pass leaves behind the physical plans AND the
   // SinkAudit trail of which sink every replay landed in.
-  private lazy val plans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+  private lazy val frames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
     graft.streaming.StreamOps.SinkAudit.clear()
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf).queryExecution.executedPlan
-    }
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) => name -> fn(spark, sf) }
   }
+
+  private lazy val plans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
+    frames.map { case (name, df) => name -> df.queryExecution.executedPlan }
 
   test("no registered query plans a shuffled cartesian product") {
     val offenders = plans.flatMap { case (name, plan) =>
@@ -136,5 +137,60 @@ class RegistryPlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     plans.length // force the registry pass
     val mem = graft.streaming.StreamOps.SinkAudit.memorySinks
     assert(mem.isEmpty, s"registered queries using the memory sink: $mem")
+  }
+
+  test("no batch query range-partitions a sort input SmallSortFinish would finish") {
+    // A global sort whose input is under AQE's coalesce floor sorts in
+    // one task (graft.plans.SmallSortFinish): no range-boundary sample
+    // job and no range shuffle. The rule decides at runtime from the
+    // sizes of materialized query stages, so this lint runs every batch
+    // query and checks each range exchange left in its final adaptive
+    // plan: the exchange's measured input must be above the floor, or
+    // the operators between it and the nearest query stage or scan must
+    // be ones the rule does not trust (a generator, an object operator,
+    // an RDD or v2 scan, an explicit repartition). The measured size is
+    // at most the rule's estimate, so a sort the rule rightly left alone
+    // (estimate above the floor, measured below it) would show here
+    // too; at sf0.001 none does. A Spark upgrade that reorders AQE's
+    // rules, stops calling runtime optimizer rules or changes stage
+    // statistics fails here. Runs last: it executes the plans the other
+    // lints inspect.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, BroadcastQueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.internal.SQLConf
+    val floor = spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    // the physical forms of the operators whose size estimate the rule
+    // trusts, down to a stage or a file/local scan
+    def bounded(p: SparkPlan): Boolean = p match {
+      case s: ShuffleQueryStageExec => s.shuffle.shuffleOrigin == ENSURE_REQUIREMENTS
+      case _: BroadcastQueryStageExec | _: FileSourceScanExec | _: LocalTableScanExec => true
+      case _: ProjectExec | _: FilterExec | _: BaseAggregateExec | _: WindowExec |
+           _: SortExec | _: BaseJoinExec | _: UnionExec | _: WholeStageCodegenExec |
+           _: InputAdapter | _: AQEShuffleReadExec | _: ColumnarToRowExec =>
+        p.children.forall(bounded)
+      case _ => false
+    }
+    // the range exchange planned for a global sort (an explicit
+    // repartitionByRange spread has its own shuffle origin)
+    def sortRange(s: ShuffleQueryStageExec): Boolean = s.shuffle match {
+      case e: ShuffleExchangeExec => e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+        e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    val offenders = frames.filterNot(_._2.isStreaming).flatMap { case (name, df) =>
+      df.collect()
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: ShuffleQueryStageExec if sortRange(s) &&
+            s.getRuntimeStatistics.sizeInBytes <= floor && bounded(s.shuffle.child) =>
+          s"$name (${s.getRuntimeStatistics.sizeInBytes} B)"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"range exchange over a sort input under the ${floor} B coalesce floor in: ${offenders.mkString(", ")}")
   }
 }
