@@ -1,24 +1,23 @@
 package graft
 
-import graft.plans.{ArrayDot, ArrayXxHash64, BinaryGpsDecode, BpePieceCount, BpeTokenCount, ByteStats, ConvexContains, GeoRangeRule, HaversineDist, ImageHeaderDecode, MinHashSig, NormalizeText, OsmNodeParse, OsmRelationParse, OsmWayParse, PrefixSkipHot, RayCastContains, RingArea, SimHash64, SmallSortFinish, SortedIntersectCount, PunctCount, SortedShingleHashes, TopKPairs, WordShingles, WsTokenCount}
+import graft.plans.{ArrayDot, BinaryGpsDecode, BpePieceCount, BpeTokenCount, ByteStats, ConvexContains, ImageHeaderDecode, MinHashSig, NormalizeText, OsmNodeParse, OsmRelationParse, OsmWayParse, PrefixSkipHot, RayCastContains, RingArea, SimHash64, SmallSortFinish, SortedIntersectCount, PunctCount, SortedShingleHashes, TopKPairs, WordShingles, WsTokenCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions registering graft's custom Catalyst expressions
-  * and optimizer rules, wired via
-  * `spark.sql.extensions=graft.GraftExtensions` (set by
+  * and its one optimizer rule, [[graft.plans.SmallSortFinish]], wired
+  * via `spark.sql.extensions=graft.GraftExtensions` (set by
   * GraftSession.builder). Extension-injected functions resolve in SQL
   * text and through `functions.call_function` alike.
   *
   * For sessions NOT built with the extension, the same function list is
-  * registered post-hoc by [[GraftSession.ensureFunctions]].
+  * registered post-hoc by [[GraftSession.ensureFunctions]]; the rule is
+  * not, so this is the only place optimizer rules are registered.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // geo range filters gain a sargable latitude-band prefilter
-    ext.injectOptimizerRule(_ => GeoRangeRule)
     // small global sorts finish in one task: statically from relation
     // sizes, and at runtime from materialized query stages
     ext.injectOptimizerRule(_ => SmallSortFinish)
@@ -78,18 +77,11 @@ object GraftExtensions {
     (FunctionIdentifier("array_dot"),
       new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
       arity("array_dot", 2)(exprs => ArrayDot(exprs.head, exprs(1)))),
-    (FunctionIdentifier("haversine_km"),
-      new ExpressionInfo(classOf[HaversineDist].getName, "haversine_km"),
-      arity("haversine_km", 4)(exprs =>
-        HaversineDist(exprs(0), exprs(1), exprs(2), exprs(3)))),
     (FunctionIdentifier("word_shingles"),
       new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
       arity("word_shingles", 3)(exprs => WordShingles(exprs.head,
         litInt(exprs(1), "word_shingles n"),
         litBool(exprs(2), "word_shingles distinct")))),
-    (FunctionIdentifier("array_xxhash64"),
-      new ExpressionInfo(classOf[ArrayXxHash64].getName, "array_xxhash64"),
-      arity("array_xxhash64", 1)(exprs => ArrayXxHash64(exprs.head))),
     (FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       arity("minhash_sig", 2)(exprs => MinHashSig(exprs.head,

@@ -287,30 +287,29 @@ object GraftSession {
   /** Idempotently equips an EXISTING session (one not built via
     * [[builder]], so without `spark.sql.extensions=graft.GraftExtensions`)
     * to run every SparkEntry query: registers the custom Catalyst
-    * functions, adds the GeoRange optimizer rule, and sets the two
-    * non-static confs correctness depends on (ns-as-long parquet reads
-    * and the UTC session timezone the oracles assume). Called from
-    * SparkEntry on every query dispatch; a GraftSession-built session
-    * short-circuits on the functionExists probe.
+    * functions and sets the two non-static confs correctness depends
+    * on (ns-as-long parquet reads and the UTC session timezone the
+    * oracles assume). Called from SparkEntry on every query dispatch;
+    * a GraftSession-built session short-circuits on the functionExists
+    * probe. Rows are the same on either kind of session; what such a
+    * session still lacks only costs time:
     *
-    * Artifact isolation can only be turned off when a session is
-    * created, so a session not built by [[builder]] keeps Spark's
-    * per-session isolation: it and every newSession() of it get their
-    * own classloader and recompile their generated code instead of
-    * sharing the JVM-wide compiled-class cache. Such a session also
-    * keeps Hadoop's forking local file system: the `file:` binding
-    * ([[graft.sources.LocalFs.confs]]) is a Hadoop conf of the
-    * SparkContext, and Hadoop caches a scheme's `FileSystem` JVM-wide,
-    * so it is not re-bound here. */
+    *  - [[graft.plans.SmallSortFinish]], static and runtime. Optimizer
+    *    rules come only from [[GraftExtensions]], so its small global
+    *    sorts keep Spark's range exchange and sampling job.
+    *  - Codegen sharing. Artifact isolation can only be turned off when
+    *    a session is created, so such a session and every newSession()
+    *    of it get their own classloader and recompile their generated
+    *    code instead of sharing the JVM-wide compiled-class cache.
+    *  - The `file:` binding ([[graft.sources.LocalFs.confs]]). It is a
+    *    Hadoop conf of the SparkContext, and Hadoop caches a scheme's
+    *    `FileSystem` JVM-wide, so the session keeps Hadoop's forking
+    *    local file system. */
   def ensureFunctions(spark: SparkSession): SparkSession = {
     pinCodegenCache(spark)
     if (!spark.catalog.functionExists("array_dot")) {
       GraftExtensions.functions.foreach { case (id, info, b) =>
         org.apache.spark.sql.GraftRegistryBridge.register(spark, id, info, b)
-      }
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.GeoRangeRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.GeoRangeRule
       }
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -16,7 +16,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Every dispatch first runs [[GraftSession.ensureFunctions]], so the
-    * dd_/ss_/geo_range/ing_binary queries (which call graft's custom
+    * dd_/ss_/ing_binary queries (which call graft's custom
     * Catalyst functions) work on ANY session — not only one built with
     * `spark.sql.extensions=graft.GraftExtensions`. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {

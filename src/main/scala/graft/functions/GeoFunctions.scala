@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * call stays inside whole-stage codegen (no UDFs).
   *
   * Mirrors the reference's geo math: haversine + bbox filtering
-  * (reference: kpt/visualize.py:21-35 `haversine_km`,
+  * (reference: kpt/visualize.py:21-35 great-circle distance, whose one
+  * counterpart here is [[haversineKm]],
   * eway/pipeline/ws_interceptor.py:44-56 bounds checks,
   * open-street-map/pipeline/importer.py:15 `KYIV_BOUNDS`).
   */
@@ -54,13 +55,6 @@ object GeoFunctions {
     val (latMin, latMax, lonMin, lonMax) = bounds
     lat.between(latMin, latMax) && lon.between(lonMin, lonMax)
   }
-
-  /** Region categorization mirroring the EWAY interceptor's
-    * kyiv/ukraine/other buckets. */
-  def regionCategory(lat: Column, lon: Column): Column =
-    when(inBounds(lat, lon, KyivBounds), "kyiv")
-      .when(inBounds(lat, lon, UkraineBounds), "ukraine")
-      .otherwise("other")
 
   /** Ordered named-region table mirroring the reference's
     * FOUND_REGIONS_BOUNDS (eway/pipeline/ws_interceptor.py:30-34) —

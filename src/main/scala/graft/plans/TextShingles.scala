@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics replicate the previous Column trees bit-for-bit:
   * WordShingles is covered by the unchanged DuckDB oracles of the
-  * shingle queries; ArrayXxHash64/MinHashSig feed only the rows-only
-  * LSH/SimHash queries, so their equality with the legacy
+  * shingle queries; SortedShingleHashes/MinHashSig feed only the
+  * rows-only LSH/SimHash queries, so their equality with the legacy
   * transform/xxhash64 trees is asserted directly in TextShinglesSpec.
   * Shared rules: Spark `trim` removes ASCII spaces only; `split` on
   * java-regex "\\s+" with limit -1; shingles are n-token windows joined
@@ -78,53 +78,11 @@ object WordShingles {
   }
 }
 
-/** xxhash64 of every string element: replaces
-  * `transform(arr, s => xxhash64(s))` with a single-pass native
-  * expression. Per-element result equals Spark's `xxhash64(s)` (seed
-  * 42; null element hashes to the seed). */
-case class ArrayXxHash64(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "array_xxhash64"
-  override def inputTypes = Seq(ArrayType(StringType))
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayXxHash64.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ArrayXxHash64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ArrayXxHash64 =
-    copy(child = newChild)
-}
-
-object ArrayXxHash64 {
-  val Seed = 42L
-
-  def apply(c: Column): Column = call_function("array_xxhash64", c)
-
-  /** Called from generated code. */
-  def compute(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (arr.isNullAt(i)) Seed
-        else {
-          val s = arr.getUTF8String(i)
-          XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Seed)
-        }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 /** Sorted xxhash64 shingle hashes in ONE pass:
-  * `array_sort(array_xxhash64(word_shingles(text, n, distinct=true)))`
-  * fused into a single expression. The unfused chain materializes the
-  * string array, re-walks it for hashing, then sorts via `array_sort`
+  * `array_sort(transform(word_shingles(text, n, distinct=true),
+  * s -> xxhash64(s)))` fused into a single expression. The unfused
+  * chain materializes the string array, re-walks it for hashing (a
+  * lambda), then sorts via `array_sort`
   * — whose comparator is a LAMBDA the engine evaluates interpreted per
   * element pair. One native pass builds the strings in a reused
   * buffer, dedups (STRING-level, first occurrence — the same set the
@@ -152,6 +110,8 @@ case class SortedShingleHashes(child: Expression, n: Int)
 }
 
 object SortedShingleHashes {
+  /** Spark's xxhash64 seed: each element hashes like `xxhash64(s)`. */
+  val Seed = 42L
   private val Whitespace = Pattern.compile("\\s+")
 
   def apply(c: Column, n: Int): Column =
@@ -179,7 +139,7 @@ object SortedShingleHashes {
       if (seen.add(s)) {
         val u = UTF8String.fromString(s)
         out(m) = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset,
-          u.numBytes, ArrayXxHash64.Seed)
+          u.numBytes, Seed)
         m += 1
       }
       i += 1

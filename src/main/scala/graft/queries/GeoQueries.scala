@@ -150,16 +150,14 @@ object GeoQueries {
 
   // ---- geo_range_query ---------------------------------------------------
 
-  /** Positions within RangeKm of the Kyiv center, per route — written
-    * against the HaversineDist Catalyst expression so the injected
-    * GeoRangeRule conjoins a sargable latitude-band prefilter (see
-    * GeoRangeSpec for the plan assertion). Results are identical with
-    * or without the rule; the band is implied by the distance cut. */
+  /** Positions within RangeKm of the Kyiv center, per route. `lat` is
+    * derived from `event_id`, so no predicate on it reaches the scan;
+    * the distance cut is one codegen'd filter over every position. */
   val RangeKm = 5.0
 
   def geoRangeQuery(s: SparkSession, dir: String): DataFrame =
     pos(s, dir)
-      .filter(graft.plans.HaversineDist(col("lat"), col("lon"),
+      .filter(GeoFunctions.haversineKm(col("lat"), col("lon"),
         lit(TrafficQueries.CenterLat), lit(TrafficQueries.CenterLon)) < RangeKm)
       .groupBy("route_id")
       .agg(count(lit(1)).as("n"))

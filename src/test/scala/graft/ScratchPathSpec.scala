@@ -166,6 +166,15 @@ class ScratchPathSpec extends AnyFunSuite {
     assert(keys.isEmpty, s"spark.graft.* conf keys in main code: ${keys.mkString(", ")}")
   }
 
+  test("one rule registration path: extraOptimizations occurs nowhere in main code") {
+    // optimizer rules are injected by GraftExtensions only; a second
+    // path (spark.experimental) reaches only the sessions it is run on
+    val uses = mainSourceLines.collect {
+      case (rel, n, line) if line.contains("extraOptimizations") => s"$rel:$n"
+    }
+    assert(uses.isEmpty, s"extraOptimizations in main code: ${uses.mkString(", ")}")
+  }
+
   test("query builders size plans from metadata: no .count() under queries/") {
     // a count inside a builder is a Spark action at build time; sizes
     // come from Tables.rowCount (parquet footers) or other metadata

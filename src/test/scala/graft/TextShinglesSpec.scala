@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{ArrayXxHash64, MinHashSig}
+import graft.plans.MinHashSig
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -19,27 +19,6 @@ class TextShinglesSpec extends SparkSpec {
       Seq.empty[String],
       null
     ).toDF("arr")
-  }
-
-  test("ArrayXxHash64 equals transform(arr, s => xxhash64(s))") {
-    val legacy: Column = transform(col("arr"), s => xxhash64(s))
-    val rows = sample
-      .select(ArrayXxHash64(col("arr")).as("fast"), legacy.as("slow"))
-      .collect()
-    rows.foreach { r =>
-      assert(r.isNullAt(0) === r.isNullAt(1))
-      if (!r.isNullAt(0)) assert(r.getSeq[Long](0) === r.getSeq[Long](1))
-    }
-  }
-
-  test("ArrayXxHash64 null element hashes to the seed, like xxhash64(null)") {
-    import spark.implicits._
-    val rows = Seq(Seq[String]("x", null))
-      .toDF("arr")
-      .select(ArrayXxHash64(col("arr")).as("fast"),
-        transform(col("arr"), s => xxhash64(s)).as("slow"))
-      .collect()
-    assert(rows.head.getSeq[Long](0) === rows.head.getSeq[Long](1))
   }
 
   test("MinHashSig equals array of array_min(transform(hs, h => xxhash64(h, j)))") {
@@ -71,6 +50,7 @@ class TextShinglesSpec extends SparkSpec {
   }
 
   test("SortedShingleHashes equals array_sort(ArrayXxHash64(WordShingles(distinct)))") {
+    // "ArrayXxHash64" in the name is transform(arr, s => xxhash64(s))
     import spark.implicits._
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -81,8 +61,8 @@ class TextShinglesSpec extends SparkSpec {
       null
     ).toDF("text")
     for (n <- Seq(2, 3)) {
-      val legacy: Column = array_sort(ArrayXxHash64(
-        graft.plans.WordShingles(col("text"), n, distinct = true)))
+      val legacy: Column = array_sort(transform(
+        graft.plans.WordShingles(col("text"), n, distinct = true), s => xxhash64(s)))
       val rows = texts
         .select(graft.plans.SortedShingleHashes(col("text"), n).as("fast"),
           legacy.as("slow"))
